@@ -87,6 +87,11 @@ object GraftSession {
       .config("spark.graft.parallelizeSmallScans",
         sys.env.getOrElse("SPARK_GRAFT_PAR_SCANS", "true"))
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      // a bucketed store read names up to numBuckets × (1 + pending
+      // deltas) directories (ChangesetStore); listing a few hundred on the
+      // driver costs less than the listing job Spark runs above the
+      // default threshold of 32 paths
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.driver.host", "localhost")

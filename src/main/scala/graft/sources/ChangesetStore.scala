@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -30,9 +31,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    bucket directories and a `manifest-v<M>.json` maps each bucket to
   *    its live version. An upsert reads, merges, and rewrites ONLY the
   *    buckets the batch touches; untouched buckets keep their existing
-  *    files byte-for-byte. This is the 100 TB path: a minutely batch
-  *    touching k of NB buckets costs O(k/NB) of the store in I/O, not a
-  *    full rewrite, while reads stay plain multi-path parquet scans.
+  *    files byte-for-byte. A batch of k distinct keys touches about
+  *    min(NB, k) buckets (NB·(1 − (1 − 1/NB)^k) for uniform hashes) and
+  *    costs that share of the store in I/O, not a full rewrite — so the
+  *    saving is real for batches of fewer keys than buckets; a 300-key
+  *    minutely diff at NB = 64 touches every bucket. Reads stay plain
+  *    multi-path parquet scans.
   *
   * Bucketed stores additionally support **delta appends**
   * ([[appendBucketed]]) for append-only row sets: a batch lands as
@@ -52,7 +56,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * writer and pruned reader: two writers hashing the same key with
   * different bucket counts would strand live rows in dead buckets, so
   * the caller's arguments only matter for a store that does not exist
-  * yet.
+  * yet. `meta.json` also records the store's row schema, so reading
+  * bucket directories never runs a schema-inference job; the paths come
+  * from the manifest.
   */
 object ChangesetStore {
 
@@ -192,16 +198,23 @@ object ChangesetStore {
     * missing mid-commit; [[recoverVersion]] covers pre-existing stores
     * written by the old two-step swap or exotic filesystems.
     */
-  private[graft] def commitPointer(spark: SparkSession, storeDir: String, next: Int): Unit = {
+  private[graft] def commitPointer(spark: SparkSession, storeDir: String, next: Int): Unit =
+    writeAtomic(spark, storeDir, "current", next.toString)
+
+  /** Writes `storeDir/name` via tmp + atomic rename-with-OVERWRITE: the
+    * pointer, the manifests and `meta.json` are never seen half-written,
+    * and a re-run after a crash replaces what the crashed attempt left.
+    */
+  private def writeAtomic(spark: SparkSession, storeDir: String, name: String,
+      body: String): Unit = {
     val f = fs(spark, storeDir)
-    val tmp = new Path(storeDir, "current.tmp")
+    val tmp = new Path(storeDir, s"$name.tmp")
     val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes(UTF_8))
+    try out.write(body.getBytes(UTF_8))
     finally out.close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       f.getUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(fc.makeQualified(tmp),
-      fc.makeQualified(new Path(storeDir, "current")),
+    fc.rename(fc.makeQualified(tmp), fc.makeQualified(new Path(storeDir, name)),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
@@ -211,8 +224,17 @@ object ChangesetStore {
     * key with different bucket counts (or differently-ordered bucket
     * columns) would keep the same id live in two buckets — so the layout
     * is store state, not a per-call argument.
+    *
+    * `schema` is the store's row schema: every column any live bucket
+    * file holds, in first-written order. It only grows, and it is
+    * widened BEFORE the bucket data that adds a column lands, so it
+    * always covers every live file; a file written before a column
+    * existed reads that column as null (the `allowMissingColumns` growth
+    * of the changeset stores). None only for a store whose meta predates
+    * schema recording.
     */
-  private[graft] case class BucketMeta(numBuckets: Int, bucketBy: Seq[String])
+  private[graft] case class BucketMeta(numBuckets: Int, bucketBy: Seq[String],
+      schema: Option[StructType] = None)
 
   private[graft] def readBucketMeta(spark: SparkSession,
       storeDir: String): Option[BucketMeta] = {
@@ -221,41 +243,83 @@ object ChangesetStore {
     if (!f.exists(p)) return None
     val in = f.open(p)
     val txt = try new String(in.readAllBytes(), UTF_8) finally in.close()
-    val nb = "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
+    // the schema is the last entry: the layout keys parse from the text
+    // before it, so no column name can shadow them
+    val schemaKey = ",\"schema\":"
+    val at = txt.indexOf(schemaKey)
+    val layout = if (at < 0) txt else txt.substring(0, at)
+    val nb = "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(layout)
       .map(_.group(1).toInt)
-    val by = "\"bucketBy\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
+    val by = "\"bucketBy\"\\s*:\\s*\\[([^\\]]*)\\]".r.findFirstMatchIn(layout)
       .map(_.group(1)).getOrElse("")
       .split(',').map(_.trim.stripPrefix("\"").stripSuffix("\""))
       .filter(_.nonEmpty).toSeq
-    nb.map(BucketMeta(_, by))
+    val schema = if (at < 0) None else Some(DataType.fromJson(
+      txt.substring(at + schemaKey.length).trim.stripSuffix("}")).asInstanceOf[StructType])
+    nb.map(BucketMeta(_, by, schema))
   }
 
   private def writeBucketMeta(spark: SparkSession, storeDir: String,
-      m: BucketMeta): Unit = {
-    val f = fs(spark, storeDir)
-    val body = s"""{"numBuckets":${m.numBuckets},"bucketBy":[${
-      m.bucketBy.map("\"" + _ + "\"").mkString(",")}]}"""
-    val tmp = new Path(storeDir, "meta.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(UTF_8)) finally out.close()
-    if (!f.rename(tmp, new Path(storeDir, "meta.json")))
-      throw new java.io.IOException(s"$storeDir: meta commit failed")
-  }
+      m: BucketMeta): Unit =
+    writeAtomic(spark, storeDir, "meta.json",
+      s"""{"numBuckets":${m.numBuckets},"bucketBy":[${
+        m.bucketBy.map("\"" + _ + "\"").mkString(",")}]${
+        m.schema.fold("")(s => ",\"schema\":" + s.json)}}""")
 
   /** Effective (numBuckets, bucket columns): the pinned meta when present
     * — the caller's arguments only apply to a store that does not exist
     * yet (or one created before meta pinning, which keeps its first
     * writer's layout from here on).
     */
-  private def resolveBuckets(spark: SparkSession, storeDir: String,
-      numBuckets: Int, bucketBy: Seq[String],
-      keys: Seq[String]): (Int, Seq[String]) =
-    readBucketMeta(spark, storeDir) match {
+  private def resolveBuckets(meta: Option[BucketMeta], numBuckets: Int,
+      bucketBy: Seq[String], keys: Seq[String]): (Int, Seq[String]) =
+    meta match {
       case Some(m) =>
         (m.numBuckets, if (m.bucketBy.nonEmpty) m.bucketBy else keys)
       case None =>
         (numBuckets, if (bucketBy.nonEmpty) bucketBy else keys)
     }
+
+  /** Pins the layout on a store's first write and widens the recorded
+    * schema by the columns `batch` adds — called BEFORE any bucket data
+    * of the write lands (see [[BucketMeta]]). A store with no committed
+    * version starts over from the batch's schema: whatever a crashed
+    * first attempt recorded describes no live file. Returns the schema
+    * the store's files are read with from now on.
+    */
+  private def pinMeta(spark: SparkSession, storeDir: String,
+      meta: Option[BucketMeta], committed: Boolean, nb: Int,
+      bucketBy: Seq[String], batch: StructType): StructType = {
+    val have = if (committed) Some(schemaOf(storeDir, meta)) else None
+    val schema = have.fold(batch)(h =>
+      StructType(h.fields ++ batch.fields.filterNot(f => h.fieldNames.contains(f.name))))
+    val pinned = meta.getOrElse(BucketMeta(nb, bucketBy))
+      .copy(schema = Some(schema))
+    if (!meta.contains(pinned)) writeBucketMeta(spark, storeDir, pinned)
+    schema
+  }
+
+  /** Row schema of a committed bucketed store's files, from its `meta.json`. */
+  private def schemaOf(storeDir: String, meta: Option[BucketMeta]): StructType =
+    meta.flatMap(_.schema).getOrElse(
+      throw new IllegalStateException(s"$storeDir: meta.json records no row " +
+        "schema (the store predates schema recording); rebuild the store"))
+
+  /** The live files of a bucketed store as one parquet scan with the
+    * recorded schema: no schema-inference job, and no listing job
+    * (GraftSession lists a store's directories on the driver).
+    */
+  private def scan(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
+
+  /** Distinct bucket ids among `df`'s rows in one job with no shuffle:
+    * each task returns the distinct ids of its own partition.
+    */
+  private def bucketsOf(df: DataFrame, bucket: Column): Set[Int] = {
+    import df.sparkSession.implicits._
+    df.select(bucket).as[Int].mapPartitions(_.toSet.iterator).collect().toSet
+  }
 
   // ---- manifest ----------------------------------------------------------
 
@@ -285,17 +349,11 @@ object ChangesetStore {
 
   private[graft] def writeManifest(spark: SparkSession, storeDir: String, v: Int,
       m: Map[Int, Int], deltas: Map[Int, Seq[Int]] = Map.empty): Unit = {
-    val f = fs(spark, storeDir)
     val base = m.toSeq.sorted.map { case (b, bv) => s""""$b":$bv""" }
     val dEntries = deltas.filter(_._2.nonEmpty).toSeq.sortBy(_._1)
       .map { case (b, ds) => s""""$b#d":[${ds.sorted.mkString(",")}]""" }
-    val body = (base ++ dEntries).mkString("{", ",", "}")
-    val tmp = new Path(storeDir, s"manifest-v$v.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, new Path(storeDir, s"manifest-v$v.json")))
-      throw new java.io.IOException(s"$storeDir: manifest commit failed")
+    writeAtomic(spark, storeDir, s"manifest-v$v.json",
+      (base ++ dEntries).mkString("{", ",", "}"))
   }
 
   /** Every live directory (base + deltas) of the given buckets. */
@@ -314,9 +372,8 @@ object ChangesetStore {
       throw new IllegalStateException(s"$storeDir: no committed store version"))
     val manifest = readManifest(spark, storeDir, v)
     val deltas = readDeltas(spark, storeDir, v)
-    val paths = bucketPaths(storeDir, manifest, deltas,
-      manifest.keySet ++ deltas.keySet)
-    spark.read.parquet(paths: _*)
+    scan(spark, schemaOf(storeDir, readBucketMeta(spark, storeDir)),
+      bucketPaths(storeDir, manifest, deltas, manifest.keySet ++ deltas.keySet))
   }
 
   /** Bucket-pruned point lookup: reads ONLY the buckets that can contain
@@ -324,31 +381,39 @@ object ChangesetStore {
     * `nodes(Set<Long> ids)` KV gets). `keyDf` columns must match the
     * upsert `keys` in name, order and type — the bucket id is the same
     * `pmod(hash(keys), numBuckets)` the writer used, computed engine-side
-    * so the hash function is identical by construction. At 100 TB a
-    * minutely diff touches a handful of buckets; everything else is never
-    * opened. Returns None for an empty/untouched store.
+    * so the hash function is identical by construction. k distinct keys
+    * open about min(numBuckets, k) buckets: a lookup of fewer keys than
+    * buckets skips the rest, a 300-key minutely diff at 64 buckets opens
+    * them all. `keyDf` is consumed twice (the bucket collect here and the
+    * caller's key join), so a caller materializes it once. Returns None
+    * for an empty/untouched store.
     */
   def readBucketsFor(spark: SparkSession, storeDir: String, keyDf: DataFrame,
       keys: Seq[String], numBuckets: Int = 64,
       bucketBy: Seq[String] = Seq.empty): Option[DataFrame] =
     currentVersion(spark, storeDir).flatMap { v =>
-      val (nb, bCols) = resolveBuckets(spark, storeDir, numBuckets, bucketBy, keys)
-      val touched = keyDf
-        .select(pmod(hash(bCols.map(col): _*), lit(nb)).as("_b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+      val meta = readBucketMeta(spark, storeDir)
+      val (nb, bCols) = resolveBuckets(meta, numBuckets, bucketBy, keys)
+      val touched = bucketsOf(keyDf, pmod(hash(bCols.map(col): _*), lit(nb)))
       val manifest = readManifest(spark, storeDir, v).filter(t => touched(t._1))
       val deltas = readDeltas(spark, storeDir, v).filter(t => touched(t._1))
       val paths = bucketPaths(storeDir, manifest, deltas,
         manifest.keySet ++ deltas.keySet)
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+      if (paths.isEmpty) None else Some(scan(spark, schemaOf(storeDir, meta), paths))
     }
 
   /** Bucket-pruned upsert: only batch-touched buckets are read, merged
     * (broadcast anti-join, latest-wins) and rewritten; the new manifest
     * carries every untouched bucket's entry forward unchanged. Commit
-    * order: bucket data → manifest → pointer (the single commit point) —
-    * a crash leaves the previous version live and the re-run deletes and
-    * rewrites the orphan bucket dirs (idempotent).
+    * order: schema in `meta.json` → bucket data → manifest → pointer (the
+    * single commit point) — a crash leaves the previous version live and
+    * the re-run deletes and rewrites the orphan bucket dirs (idempotent).
+    * An empty batch onto a store holding data commits nothing and
+    * returns the live version.
+    *
+    * `batch` is read three times (the touched-bucket collect, the
+    * broadcast key set and the merge write): a caller whose batch has a
+    * costly lineage materializes it once.
     */
   /** @param bucketBy optional bucket-defining column subset (default: the
     *                  identity `keys`). A PROPER subset lets readers prune
@@ -369,21 +434,20 @@ object ChangesetStore {
     val f = fs(spark, storeDir)
     f.mkdirs(new Path(storeDir))
     val prev = currentVersion(spark, storeDir)
-    val (nb, bCols) = resolveBuckets(spark, storeDir, numBuckets, bucketBy, keys)
-    if (readBucketMeta(spark, storeDir).isEmpty)
-      writeBucketMeta(spark, storeDir, BucketMeta(nb,
-        if (bucketBy.nonEmpty) bucketBy else Seq.empty))
-    val next = prev.getOrElse(0) + 1
+    val meta = readBucketMeta(spark, storeDir)
+    val (nb, bCols) = resolveBuckets(meta, numBuckets, bucketBy, keys)
     val bCol = pmod(hash(bCols.map(col): _*), lit(nb))
-    val batchB = batch.withColumn("_b", bCol)
     val prevManifest = prev.map(readManifest(spark, storeDir, _)).getOrElse(Map.empty)
     val prevDeltas = prev.map(readDeltas(spark, storeDir, _)).getOrElse(Map.empty)
-    // the touched-bucket set exists only to scope the merge read; a NEW
-    // store has nothing to merge, so skip the collect job entirely (r14 —
-    // every store lifecycle pays this on its initial build)
-    val touched =
-      if (prevManifest.isEmpty && prevDeltas.isEmpty) Set.empty[Int]
-      else batchB.select("_b").distinct().collect().map(_.getInt(0)).toSet
+    // the touched-bucket set scopes the merge read and is the emptiness
+    // test; a NEW store has nothing to merge, so skip the collect job
+    // entirely (every store lifecycle pays this on its initial build)
+    val hasData = prevManifest.nonEmpty || prevDeltas.nonEmpty
+    val touched = if (hasData) bucketsOf(batch, bCol) else Set.empty[Int]
+    if (hasData && touched.isEmpty) return prev.get
+    val schema = pinMeta(spark, storeDir, meta, prev.nonEmpty, nb, bucketBy, batch.schema)
+    val next = prev.getOrElse(0) + 1
+    val batchB = batch.withColumn("_b", bCol)
 
     val merged = {
       // base + pending deltas of every touched bucket fold into the new
@@ -393,15 +457,14 @@ object ChangesetStore {
         prevDeltas.filter(t => touched(t._1)),
         touched.filter(b => prevManifest.contains(b) || prevDeltas.contains(b)))
       if (livePaths.isEmpty) batchB
-      else {
-        val keyDf = batch.select(keys.map(col): _*).distinct()
-        spark.read.parquet(livePaths: _*)
-          .join(broadcast(keyDf), keys, "left_anti")
-          .withColumn("_b", bCol)
-          .unionByName(batchB, allowMissingColumns = true)
-      }
+      // an anti-join needs only key existence: duplicate keys on the
+      // broadcast side change nothing, so the key set skips a distinct
+      else scan(spark, schema, livePaths)
+        .join(broadcast(batch.select(keys.map(col): _*)), keys, "left_anti")
+        .withColumn("_b", bCol)
+        .unionByName(batchB, allowMissingColumns = true)
     }
-    val written = stageAndInstall(spark, storeDir, merged, nb, next, "v")
+    val written = stageAndInstall(spark, storeDir, merged, next, "v")
 
     writeManifest(spark, storeDir, next,
       prevManifest ++ written.map(_ -> next).toMap,
@@ -432,13 +495,12 @@ object ChangesetStore {
     val prev = currentVersion(spark, storeDir)
     if (prev.isEmpty)
       return upsertBucketed(spark, storeDir, batch, keys, numBuckets, bucketBy)
-    val (nb, bCols) = resolveBuckets(spark, storeDir, numBuckets, bucketBy, keys)
-    if (readBucketMeta(spark, storeDir).isEmpty)
-      writeBucketMeta(spark, storeDir, BucketMeta(nb,
-        if (bucketBy.nonEmpty) bucketBy else Seq.empty))
+    val meta = readBucketMeta(spark, storeDir)
+    val (nb, bCols) = resolveBuckets(meta, numBuckets, bucketBy, keys)
+    pinMeta(spark, storeDir, meta, committed = true, nb, bucketBy, batch.schema)
     val next = prev.get + 1
     val batchB = batch.withColumn("_b", pmod(hash(bCols.map(col): _*), lit(nb)))
-    val written = stageAndInstall(spark, storeDir, batchB, nb, next, "d")
+    val written = stageAndInstall(spark, storeDir, batchB, next, "d")
 
     val prevManifest = readManifest(spark, storeDir, prev.get)
     val prevDeltas = readDeltas(spark, storeDir, prev.get)
@@ -467,14 +529,15 @@ object ChangesetStore {
     val toCompact = deltas.filter(_._2.size >= minDeltas).keySet
     if (toCompact.isEmpty) return prev
     val next = prev + 1
+    val schema = schemaOf(storeDir, readBucketMeta(spark, storeDir))
     // per-bucket reads tagged with their bucket id: no re-hash needed (and
     // none possible — bucketBy columns may be a derived subset), and the
     // union is k bucket-scoped scans, k = buckets being compacted
     val merged = toCompact.toSeq.sorted.map { b =>
-      spark.read.parquet(bucketPaths(storeDir, manifest, deltas, Seq(b)): _*)
+      scan(spark, schema, bucketPaths(storeDir, manifest, deltas, Seq(b)))
         .withColumn("_b", lit(b))
     }.reduce(_.unionByName(_))
-    val written = stageAndInstall(spark, storeDir, merged, toCompact.size, next, "v")
+    val written = stageAndInstall(spark, storeDir, merged, next, "v")
 
     writeManifest(spark, storeDir, next,
       manifest ++ written.map(_ -> next).toMap,
@@ -491,15 +554,19 @@ object ChangesetStore {
     * the written bucket ids.
     */
   private def stageAndInstall(spark: SparkSession, storeDir: String,
-      df: DataFrame, nb: Int, next: Int, kind: String): Seq[Int] = {
+      df: DataFrame, next: Int, kind: String): Seq[Int] = {
     val f = fs(spark, storeDir)
     val staging = s"$storeDir/stage-v$next"
-    // cluster by bucket before the partitioned write: without it every
-    // input task emits a file into every bucket dir (tasks × buckets small
-    // files — at 64 buckets the store read cost is file-open dominated).
-    // One task per bucket hash is the right write parallelism for a
-    // bucketed store at any scale: buckets are the unit of rewrite.
-    df.repartition(nb.max(1), col("_b"))
+    // cluster by bucket before the partitioned write: every bucket hash
+    // lands in exactly one shuffle partition, so each written bucket dir
+    // holds one file (without it every input task emits a file into every
+    // bucket dir — tasks × buckets small files, and the store read cost
+    // turns file-open dominated). The task count is AQE's, sized to the
+    // data: a write touches about min(numBuckets, distinct keys) buckets
+    // — all 64 for a 300-change minutely diff (one OsmUpdater step
+    // installs about 510 store files; 511 measured) — and a diff-sized
+    // write should not pay one task per bucket for that.
+    df.repartition(col("_b"))
       .write.mode("overwrite").partitionBy("_b").parquet(staging)
     val written = f.listStatus(new Path(staging))
       .map(_.getPath.getName).filter(_.startsWith("_b="))

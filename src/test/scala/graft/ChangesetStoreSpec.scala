@@ -259,4 +259,75 @@ class ChangesetStoreSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft-rbf-empty").toString,
       keyDf, Seq("id"), 16).isEmpty)
   }
+
+  test("a batch spread over many input partitions installs one file per bucket") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cs-files").toString
+    // every installed b=<i>/v=<n> dir must hold exactly one part file: the
+    // task count is sized to the data, so only clustering by bucket keeps
+    // 8 input partitions from writing up to 8 files into each bucket
+    def assertOneFilePerBucket(v: Int): Unit =
+      ChangesetStore.readManifest(spark, dir, v).foreach { case (b, bv) =>
+        val parts = new java.io.File(s"$dir/b=$b/v=$bv").listFiles()
+          .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        assert(parts.length === 1, s"b=$b/v=$bv holds ${parts.toSeq}")
+      }
+
+    val b1 = (1L to 500L).map(k => (k, s"v$k")).toDF("id", "value").repartition(8)
+    assert(b1.rdd.getNumPartitions === 8)
+    assert(ChangesetStore.upsertBucketed(spark, dir, b1, Seq("id"), numBuckets = 16) === 1)
+    assert(ChangesetStore.readManifest(spark, dir, 1).keySet === (0 until 16).toSet)
+    assertOneFilePerBucket(1)
+
+    // the merge path: stored rows and an 8-partition batch fold into one
+    // file per rewritten bucket
+    val b2 = (1L to 500L by 2).map(k => (k, s"w$k")).toDF("id", "value").repartition(8)
+    assert(ChangesetStore.upsertBucketed(spark, dir, b2, Seq("id"), numBuckets = 16) === 2)
+    assert(ChangesetStore.readManifest(spark, dir, 2).values.toSet === Set(2))
+    assertOneFilePerBucket(2)
+    val rows = ChangesetStore.readBucketed(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows === (1L to 500L).map(k => k -> (if (k % 2 == 1) s"w$k" else s"v$k")).toMap)
+
+    // an empty batch commits nothing
+    assert(ChangesetStore.upsertBucketed(spark, dir,
+      b2.limit(0), Seq("id"), numBuckets = 16) === 2)
+  }
+
+  test("reads use the recorded schema: a column added later reads like a merged parquet scan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cs-schema").toString
+    val nb = 40 // more live paths than Spark's default parallel-listing threshold (32)
+    ChangesetStore.upsertBucketed(spark, dir,
+      (1L to 400L).map(k => (k, s"v$k")).toDF("id", "value"), Seq("id"), nb)
+    // a later writer's rows carry `seq` and touch a single bucket: every
+    // other bucket file still lacks the column
+    ChangesetStore.upsertBucketed(spark, dir,
+      Seq((7L, "seven", 3L)).toDF("id", "value", "seq"), Seq("id"), nb)
+    // a narrower batch after that keeps the column
+    ChangesetStore.upsertBucketed(spark, dir,
+      Seq((8L, "eight")).toDF("id", "value"), Seq("id"), nb)
+
+    val v = ChangesetStore.currentVersion(spark, dir).get
+    val live = ChangesetStore.readManifest(spark, dir, v).toSeq.sorted
+      .map { case (b, bv) => s"$dir/b=$b/v=$bv" }
+    assert(live.size > 32)
+    val plain = spark.read.option("mergeSchema", "true").parquet(live: _*)
+
+    // no schema-inference and no listing job: building the frame runs nothing
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { got = ChangesetStore.readBucketed(spark, dir) } === 0)
+    assert(got.schema === plain.schema)
+    assert(got.schema.fieldNames.toSeq === Seq("id", "value", "seq"))
+    assert(got.collect().toSet === plain.collect().toSet)
+    val seqOf = got.collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
+    assert(seqOf(7L) === Some(3L) && seqOf(8L).isEmpty && seqOf(1L).isEmpty)
+
+    // the pruned read shares the schema
+    val keys = Seq(7L, 8L).toDF("id")
+    val pruned = ChangesetStore.readBucketsFor(spark, dir, keys, Seq("id"), nb).get
+    assert(pruned.schema === plain.schema)
+    assert(pruned.join(keys, Seq("id"), "left_semi").collect().toSet ===
+      plain.join(keys, Seq("id"), "left_semi").collect().toSet)
+  }
 }

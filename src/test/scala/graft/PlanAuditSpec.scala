@@ -13,11 +13,15 @@ class PlanAuditSpec extends SparkSpec {
     // (Tables.parallelize) is input-layout plumbing that is a no-op at
     // cluster scale, so shapes are asserted with it off — otherwise every
     // exchange-count pin would count the hook's local exchange too
+    val prior = spark.conf.getOption("spark.graft.parallelizeSmallScans")
     spark.conf.set("spark.graft.parallelizeSmallScans", "false")
     try SparkEntry.queries.map { case (name, fn) =>
       name -> fn(spark, sfDir).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-    } finally spark.conf.set("spark.graft.parallelizeSmallScans", "true")
+    } finally prior match {
+      case Some(v) => spark.conf.set("spark.graft.parallelizeSmallScans", v)
+      case None => spark.conf.unset("spark.graft.parallelizeSmallScans")
+    }
   }
 
   test("no cartesian products anywhere") {
