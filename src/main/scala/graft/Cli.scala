@@ -100,8 +100,9 @@ object Cli {
           bboxLonLat = Some(("lon", "lat")))
       case "changesets" =>
         // a dump file loads the changeset store (the reference's
-        // `changesets --bz2 --changeset-db` flow); a table dir runs the
-        // sessionized build
+        // `changesets --bz2 --changeset-db` flow) as the same bucketed
+        // store `changeset-catchup` and ChangesetStream keep current, so
+        // either can continue it; a table dir runs the sessionized build
         if (sfDir.endsWith(".osm") || sfDir.endsWith(".bz2") || sfDir.endsWith(".xml")) {
           graft.functions.GeoFunctions.register(spark)
           // the changesets-DB `geom geometry(polygon, 4326)` column of
@@ -110,7 +111,7 @@ object Cli {
           val rows = graft.sources.OsmXml.readChangesetDump(spark, sfDir)
             .withColumn("geom", call_function("wkb_box",
               col("min_lon"), col("min_lat"), col("max_lon"), col("max_lat")))
-          graft.sources.ChangesetStore.upsert(spark, outDir, rows, Seq("id"))
+          graft.sources.ChangesetStore.upsertBucketed(spark, outDir, rows, Seq("id"))
         } else
           Changesets.csBuild(spark, sfDir)
             .write.mode("overwrite").parquet(outDir)
@@ -241,7 +242,7 @@ object Cli {
         // changeset structs onto every emitted row (--changeset-db)
         val maxSteps = if (args.length == 4) args(3).toInt else Int.MaxValue
         val csDb = sys.env.get("SPARK_GRAFT_CHANGESET_DB")
-          .map(d => graft.sources.ChangesetStore.read(spark, d))
+          .map(d => graft.sources.ChangesetStore.readAuto(spark, d))
         val n = operators.OsmUpdater.catchUp(spark, sfDir, outDir, maxSteps, csDb)
         val st = operators.ReplicationCatchup.readState(outDir)
         println(s"[graft] osm-update: applied $n diff(s); state=${st.map(_.sequenceNumber).getOrElse(0L)}")

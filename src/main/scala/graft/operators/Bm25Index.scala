@@ -5,7 +5,7 @@ import graft.sources.ChangesetStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** Persisted BM25 inverted index — the retrieval twin of [[LshIndex]]:
   * the postings table `text_bm25` derives in-query, made a store
@@ -46,13 +46,10 @@ object Bm25Index {
     (m("n_docs"), m("sum_dl"))
   }
 
-  private def writeStats(indexDir: String, n: Long, sl: Long): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, StatsFile + ".tmp")
-    Files.write(tmp, s"""{"n_docs": $n, "sum_dl": $sl}""".getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(indexDir, StatsFile),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeStats(spark: SparkSession, indexDir: String, n: Long,
+      sl: Long): Unit =
+    ChangesetStore.writeAtomic(spark, indexDir, StatsFile,
+      s"""{"n_docs": $n, "sum_dl": $sl}""")
 
   /** Doc-count/Σdl of one postings batch — distinct per doc first, since
     * postings repeat (doc_id, dl) once per term.
@@ -87,7 +84,7 @@ object Bm25Index {
       val n = ChangesetStore.upsertBucketed(spark, indexDir, rows,
         keys = Seq("term", "doc_id"), numBuckets, bucketBy = Seq("term"))
       val (nd, sl) = stats.getOrElse(batchStats(rows))
-      writeStats(indexDir, nd, sl)
+      writeStats(spark, indexDir, nd, sl)
       n
     } finally if (!skipCkpt) { rows.unpersist(blocking = false); () }
   }
@@ -105,7 +102,7 @@ object Bm25Index {
         keys = Seq("term", "doc_id"), numBuckets, bucketBy = Seq("term"))
       val (nd, sl) = batchStatsIn.getOrElse(batchStats(rows))
       val (n0, sl0) = stats(indexDir)
-      writeStats(indexDir, n0 + nd, sl0 + sl)
+      writeStats(spark, indexDir, n0 + nd, sl0 + sl)
       n
     } finally if (batchStatsIn.isEmpty) { rows.unpersist(blocking = false); () }
   }
@@ -120,14 +117,13 @@ object Bm25Index {
     * stats file — bit-identical to [[TextOps.textBm25]] over the same
     * corpus, which is exactly what the shared oracle checks.
     */
-  def probe(spark: SparkSession, indexDir: String, qt: DataFrame,
-      numBuckets: Int = 64): DataFrame = {
+  def probe(spark: SparkSession, indexDir: String, qt: DataFrame): DataFrame = {
     val terms = qt.select("term").distinct()
     val empty = qt.sparkSession.range(0)
       .select(lit("").as("term"), lit(0L).as("doc_id"),
         lit(0).as("dl"), lit(0L).as("tf"))
     val post = ChangesetStore.readBucketsFor(spark, indexDir, terms,
-        keys = Seq("term", "doc_id"), numBuckets, bucketBy = Seq("term"))
+        keys = Seq("term", "doc_id"))
       .map(_.join(terms, Seq("term"), "left_semi"))
       .getOrElse(empty)
     val dfq = post.groupBy("term").agg(count(lit(1)).as("df"))
@@ -164,6 +160,6 @@ object Bm25Index {
     append(s, post.filter(isNew), idx, numBuckets = 8,
       batchStatsIn = Some(st.getOrElse(true, (0L, 0L))))
     Dedup.releasing(
-      probe(s, idx, TextOps.bm25QueryTerms(docs), numBuckets = 8), post)
+      probe(s, idx, TextOps.bm25QueryTerms(docs)), post)
   }
 }

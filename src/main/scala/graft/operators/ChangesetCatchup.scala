@@ -173,13 +173,13 @@ object ChangesetCatchup {
       // materialized batch; the state commit still lands strictly AFTER
       // the upsert below, so the crash/resume contract is unchanged
       val (_, ts) = graft.Par.run2(
-        () => ChangesetStore.upsertAuto(spark, storeDir, folded,
+        () => ChangesetStore.upsertBucketed(spark, storeDir, folded,
           Seq("id"), numBuckets),
         () => folded.agg(max(greatest(col("created_at"), col("closed_at"))))
           .collect().head)
       st = State(batch.last._1,
         if (ts.isNullAt(0)) st.timestamp else ts.getString(0))
-      writeState(storeDir, st)
+      writeState(spark, storeDir, st)
       folded.unpersist(blocking = false)
       applied += batch.size
     }
@@ -275,6 +275,6 @@ object ChangesetCatchup {
       else if (storeHasSeq) refreshed.withColumn("seq",
         lit(readState(storeDir).map(_.sequenceNumber).getOrElse(0L)))
       else refreshed.drop("seq")
-    ChangesetStore.upsertAuto(spark, storeDir, aligned, Seq("id"))
+    ChangesetStore.upsertBucketed(spark, storeDir, aligned, Seq("id"))
   }
 }

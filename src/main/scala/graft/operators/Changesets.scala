@@ -309,13 +309,15 @@ object Changesets {
           sum(when(col("event_type") === "error", 1L).otherwise(0L))
             .as("comments_count"))
     val cut = Replication.CutUs
-    ChangesetStore.upsert(s, store,
-      changesets(sess.filter(col("ts_us") <= cut)), Seq("user_id", "cs_seq"))
+    // 8 store buckets: the 64-bucket default is the 100 TB layout; at
+    // driver-check scale it is pure small-file overhead
+    ChangesetStore.upsertBucketed(s, store,
+      changesets(sess.filter(col("ts_us") <= cut)), Seq("user_id", "cs_seq"), 8)
     val touched = sess.filter(col("ts_us") > cut).select("user_id").distinct()
-    ChangesetStore.upsert(s, store,
+    ChangesetStore.upsertBucketed(s, store,
       changesets(sess.join(broadcast(touched), Seq("user_id"), "left_semi")),
-      Seq("user_id", "cs_seq"))
-    val cs = ChangesetStore.read(s, store).select(
+      Seq("user_id", "cs_seq"), 8)
+    val cs = ChangesetStore.readAuto(s, store).select(
       col("user_id"), col("cs_seq"),
       col("created_at").as("cs_created_at"),
       col("closed_at").as("cs_closed_at"),

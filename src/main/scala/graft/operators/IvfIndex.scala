@@ -15,17 +15,18 @@ import org.apache.spark.sql.functions._
   * is the offline spatial grid its country lookups probe (grid built
   * once, shipped as a file, queried forever).
   *
-  * Layout — the [[graft.sources.ChangesetStore]] bucketed commit
-  * discipline with CELL-DEFINED buckets (content-defined, not key-hash,
-  * so probes prune by cell at the directory level):
+  * Layout — the [[graft.sources.ChangesetStore]] layout with
+  * CELL-DEFINED buckets (`_b = cell`: content-defined, not key-hash, so
+  * probes prune by cell at the directory level). Cells install, commit
+  * and GC through the store's own paths (`stageAndInstall`, manifest,
+  * pointer, `gcBucketed`); only the codebook is this index's own:
   *
   *  - `centroids-v<N>/` — K rows (cid, embedding): the codebook for
   *    version N, broadcast-scale by construction.
-  *  - `cells/c=<cell>/v=<vi>/` — per-cell immutable assignment artifacts
-  *    (cell, vec_id, embedding, n2).
-  *  - `manifest-v<N>.json` — cell → live artifact version (the
-  *    ChangesetStore manifest format, so its pointer recovery reads this
-  *    store unchanged); written via tmp + atomic rename AFTER the data.
+  *  - `b=<cell>/v=<vi>/`, `b=<cell>/d=<dv>/` — per-cell immutable base
+  *    and delta artifacts (cell, vec_id, embedding, n2 [, _v, _del]).
+  *  - `manifest-v<N>.json` — cell → live base version + pending deltas;
+  *    written via tmp + atomic rename AFTER the data.
   *  - `current` — atomically-swapped pointer, the single commit point.
   *
   * Scale: a build is one corpus scan (centroids inlined as literals —
@@ -59,36 +60,12 @@ object IvfIndex {
         -array_max(Ann.cellScores(cents)(col("embedding"), col("n2"))).getField("nid"))
       .select("cell", "vec_id", "embedding", "n2")
 
-  /** Stages `rows` (carrying a `cell` column) partitioned by cell and
-    * installs each written cell as `cells/c=<c>/<kind>=<next>` — `kind`
-    * "v" for base artifacts, "d" for append deltas. `_c` duplicates cell
-    * as the partition key so the data files keep the cell column
-    * (partition columns are stripped from the files). Cluster by cell
-    * first: without it every task emits a file into every cell dir
-    * (tasks x cells small files); one task per cell is the right write
-    * parallelism — cells are the unit of rewrite and of probe I/O.
+  /** `rows` (carrying a `cell` column) as the store's bucket install
+    * input: each cell lands as `b=<cell>/<kind>=<next>`. `_b` duplicates
+    * cell as the partition key so the data files keep the cell column
+    * (partition columns are stripped from the files).
     */
-  private def installCells(spark: SparkSession, indexDir: String, next: Int,
-      rows: DataFrame, kind: String, nTasks: Int): Seq[Int] = {
-    val f = fs(spark, indexDir)
-    f.mkdirs(new Path(indexDir))
-    val staging = s"$indexDir/stage-v$next"
-    rows.withColumn("_c", col("cell"))
-      .repartition(nTasks.max(1), col("_c"))
-      .write.mode("overwrite").partitionBy("_c").parquet(staging)
-    val written = f.listStatus(new Path(staging))
-      .map(_.getPath.getName).filter(_.startsWith("_c="))
-      .map(_.stripPrefix("_c=").toInt).toSeq
-    written.foreach { c =>
-      val target = new Path(s"$indexDir/cells/c=$c/$kind=$next")
-      f.mkdirs(target.getParent)
-      if (f.exists(target)) f.delete(target, true) // crashed previous attempt
-      if (!f.rename(new Path(s"$staging/_c=$c"), target))
-        throw new java.io.IOException(s"$indexDir: cell $c install failed")
-    }
-    f.delete(new Path(staging), true)
-    written
-  }
+  private def byCell(rows: DataFrame): DataFrame = rows.withColumn("_b", col("cell"))
 
   private def writeCodebook(spark: SparkSession, indexDir: String, next: Int,
       centroids: Seq[(Long, Seq[Float])]): Unit = {
@@ -115,51 +92,23 @@ object IvfIndex {
       throw new java.io.IOException(s"$indexDir: codebook carry failed")
   }
 
-  /** GC after a commit of version `next`: inside every `touched` cell,
-    * delete `v=`/`d=` dirs referenced by neither the previous manifest
-    * (readers mid-flight stay safe) nor the new one; then drop manifests
-    * and codebooks older than prev.
+  /** GC after committing over version `prev`: the store's bucket sweep
+    * for the `touched` cells (`newBase`/`newDeltas`: what the new
+    * manifest references for them), then codebooks older than prev.
     */
-  private def gcCells(spark: SparkSession, indexDir: String, next: Int,
-      touched: Iterable[Int]): Unit = {
-    if (next <= 1) return
+  private def gc(spark: SparkSession, indexDir: String, prev: Int,
+      touched: Set[Int], newBase: Map[Int, Int], newDeltas: Map[Int, Seq[Int]]): Unit = {
+    ChangesetStore.gcBucketed(spark, indexDir, Some(prev), touched, newBase, newDeltas)
     val f = fs(spark, indexDir)
-    val prev = next - 1
-    val pM = ChangesetStore.readManifest(spark, indexDir, prev)
-    val pD = ChangesetStore.readDeltas(spark, indexDir, prev)
-    val nM = ChangesetStore.readManifest(spark, indexDir, next)
-    val nD = ChangesetStore.readDeltas(spark, indexDir, next)
-    touched.foreach { c =>
-      val keepV = pM.get(c).toSet ++ nM.get(c)
-      val keepD = pD.getOrElse(c, Seq.empty).toSet ++ nD.getOrElse(c, Seq.empty)
-      val dir = new Path(s"$indexDir/cells/c=$c")
-      if (f.exists(dir)) f.listStatus(dir).foreach { st =>
-        val n = st.getPath.getName
-        val stale =
-          (n.startsWith("v=") && n.drop(2).forall(_.isDigit) &&
-            !keepV(n.drop(2).toInt)) ||
-          (n.startsWith("d=") && n.drop(2).forall(_.isDigit) &&
-            !keepD(n.drop(2).toInt))
-        if (stale) f.delete(st.getPath, true)
-      }
-    }
     f.listStatus(new Path(indexDir)).foreach { st =>
-      val n = st.getPath.getName
-      val stale =
-        (n.startsWith("manifest-v") && n.endsWith(".json") &&
-          n.stripPrefix("manifest-v").stripSuffix(".json").forall(_.isDigit) &&
-          n.stripPrefix("manifest-v").stripSuffix(".json").toInt < prev) ||
-        (n.startsWith("centroids-v") &&
-          n.stripPrefix("centroids-v").forall(_.isDigit) &&
-          n.stripPrefix("centroids-v").toInt < prev)
-      if (stale) f.delete(st.getPath, true)
+      if (ChangesetStore.versionOf("centroids-v", st.getPath.getName).exists(_ < prev))
+        f.delete(st.getPath, true)
     }
   }
 
   /** Installs per-cell BASE data + centroids + manifest + pointer as
-    * version `next`. `rows` must carry (cell, vec_id, embedding, n2);
-    * only its cells are written — `carried` manifest entries (and their
-    * pending deltas, `carriedDeltas`) survive unchanged.
+    * version `next` over `prev`, replacing every cell. `rows` must carry
+    * (cell, vec_id, embedding, n2).
     *
     * The cell staging write, the codebook write and any `alsoWrite`
     * side-writes (the build path's locator upsert) are INDEPENDENT
@@ -171,20 +120,18 @@ object IvfIndex {
     * lands before a crash is uncommitted (cells/codebook) or harmless
     * extra placements (locator — a SET only ever extended).
     */
-  private def commit(spark: SparkSession, indexDir: String, next: Int,
+  private def commit(spark: SparkSession, indexDir: String, prev: Option[Int],
       rows: DataFrame, centroids: Seq[(Long, Seq[Float])],
-      carried: Map[Int, Int],
-      carriedDeltas: Map[Int, Seq[Int]] = Map.empty,
-      alsoWrite: Seq[() => Unit] = Seq.empty): Int = {
+      alsoWrite: Seq[() => Unit]): Int = {
+    val next = prev.getOrElse(0) + 1
     val results = Par.run[Any](
-      (() => installCells(spark, indexDir, next, rows, "v", centroids.size): Any) +:
+      (() => ChangesetStore.stageAndInstall(spark, indexDir, byCell(rows), next, "v"): Any) +:
         (() => writeCodebook(spark, indexDir, next, centroids): Any) +:
         alsoWrite.map(t => () => t(): Any))
-    val written = results.head.asInstanceOf[Seq[Int]]
-    ChangesetStore.writeManifest(spark, indexDir, next,
-      carried ++ written.map(_ -> next).toMap, carriedDeltas)
+    val base = results.head.asInstanceOf[Seq[Int]].map(_ -> next).toMap
+    ChangesetStore.writeManifest(spark, indexDir, next, base)
     ChangesetStore.commitPointer(spark, indexDir, next)
-    gcCells(spark, indexDir, next, written)
+    prev.foreach(gc(spark, indexDir, _, base.keySet, base, Map.empty))
     next
   }
 
@@ -203,9 +150,9 @@ object IvfIndex {
     val deltas = ChangesetStore.readDeltas(spark, indexDir, v)
       .filter(t => cells(t._1))
     val basePaths = manifest.toSeq.sorted
-      .map { case (c, cv) => s"$indexDir/cells/c=$c/v=$cv" }
+      .map { case (c, cv) => s"$indexDir/b=$c/v=$cv" }
     val deltaPaths = deltas.toSeq.sortBy(_._1).flatMap { case (c, ds) =>
-      ds.sorted.map(d => s"$indexDir/cells/c=$c/d=$d") }
+      ds.sorted.map(d => s"$indexDir/b=$c/d=$d") }
     if (basePaths.isEmpty && deltaPaths.isEmpty) None
     else if (deltaPaths.isEmpty) Some(spark.read.parquet(basePaths: _*))
     else {
@@ -264,7 +211,7 @@ object IvfIndex {
       centroids: Seq[(Long, Seq[Float])], indexDir: String,
       locatorBuckets: Int = 64): Int = {
     require(centroids.nonEmpty, "centroids must be non-empty")
-    val next = ChangesetStore.currentVersion(spark, indexDir).getOrElse(0) + 1
+    val prev = ChangesetStore.currentVersion(spark, indexDir)
     val cents = centroids.map { case (cid, v) => (cid, v, Ann.n2Of(v)) }.toArray
     // materialized once: consumed by the cell staging write AND the
     // locator upsert (which probes/keys/writes its batch three times)
@@ -277,7 +224,7 @@ object IvfIndex {
     // dangerous window (committed cells with no locator entries) is the
     // same one the old strictly-sequential order had between its two
     // steps
-    commit(spark, indexDir, next, assigned, centroids, Map.empty,
+    commit(spark, indexDir, prev, assigned, centroids,
       alsoWrite = Seq(
         () => { upsertLocator(spark, indexDir, assigned, locatorBuckets); () }))
   }
@@ -315,7 +262,7 @@ object IvfIndex {
     // tombstones for cross-cell moves (the batch is the small side by
     // contract — both join sides here are batch-scale)
     val prior = ChangesetStore
-      .readBucketsFor(spark, locatorDir(indexDir), keyDf, Seq("vec_id"), locatorBuckets)
+      .readBucketsFor(spark, locatorDir(indexDir), keyDf, Seq("vec_id"))
       .map(_.join(broadcast(keyDf), Seq("vec_id"), "left_semi")
         .select(col("vec_id"), col("cell").as("prior_cell")))
     val newRows = assigned
@@ -342,16 +289,17 @@ object IvfIndex {
     // so the crash contract is unchanged: extra locator placements at
     // worst, never missing ones
     val (written, _) = Par.run2(
-      () => installCells(spark, indexDir, next, deltaRows, "d", cents.length),
+      () => ChangesetStore.stageAndInstall(spark, indexDir, byCell(deltaRows), next, "d"),
       () => { upsertLocator(spark, indexDir, assigned, locatorBuckets)
         carryCodebook(spark, indexDir, v, next) })
     val manifest = ChangesetStore.readManifest(spark, indexDir, v)
     val prevDeltas = ChangesetStore.readDeltas(spark, indexDir, v)
+    val newDeltas = written.map(c =>
+      c -> (prevDeltas.getOrElse(c, Seq.empty) :+ next)).toMap
     ChangesetStore.writeManifest(spark, indexDir, next, manifest,
-      prevDeltas ++ written.map(c =>
-        c -> (prevDeltas.getOrElse(c, Seq.empty) :+ next)))
+      prevDeltas ++ newDeltas)
     ChangesetStore.commitPointer(spark, indexDir, next)
-    gcCells(spark, indexDir, next, written)
+    gc(spark, indexDir, v, newDeltas.keySet, Map.empty, newDeltas)
     next
   }
 
@@ -373,15 +321,15 @@ object IvfIndex {
     val merged = liveCellRows(spark, indexDir, v, toCompact).get
     // fold write ∥ codebook carry (§2.6) — independent pre-commit writes
     val (written, _) = Par.run2(
-      () => installCells(spark, indexDir, next, merged, "v", toCompact.size),
+      () => ChangesetStore.stageAndInstall(spark, indexDir, byCell(merged), next, "v"),
       () => carryCodebook(spark, indexDir, v, next))
     // a compacted cell whose live view emptied (everything tombstoned)
     // stages no partition: drop it from the manifest entirely
+    val base = written.map(_ -> next).toMap
     ChangesetStore.writeManifest(spark, indexDir, next,
-      manifest -- toCompact ++ written.map(_ -> next).toMap,
-      deltas -- toCompact)
+      manifest -- toCompact ++ base, deltas -- toCompact)
     ChangesetStore.commitPointer(spark, indexDir, next)
-    gcCells(spark, indexDir, next, toCompact)
+    gc(spark, indexDir, v, toCompact, base, Map.empty)
     next
   }
 

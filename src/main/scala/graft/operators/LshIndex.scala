@@ -97,12 +97,10 @@ object LshIndex {
     * keys — the artifact-parity surface for specs and debugging (two
     * indexes that must be equal are compared through it).
     */
-  def rowsFor(spark: SparkSession, indexDir: String, sigs: DataFrame,
-      numBuckets: Int = 64): DataFrame = {
+  def rowsFor(spark: SparkSession, indexDir: String, sigs: DataFrame): DataFrame = {
     val bandKeys = Dedup.bandRows(sigs).select("band", "bkey").distinct()
     ChangesetStore.readBucketsFor(spark, indexDir, bandKeys,
-        keys = Seq("band", "bkey", "doc_id"), numBuckets,
-        bucketBy = Seq("band", "bkey"))
+        keys = Seq("band", "bkey", "doc_id"))
       .map(_.join(broadcast(bandKeys), Seq("band", "bkey"), "left_semi"))
       .getOrElse(indexRows(sigs).limit(0))
   }
@@ -123,12 +121,11 @@ object LshIndex {
     * id. Mutable corpora need an upsert path (tombstone old band rows by
     * id, like [[IvfIndex]]'s latest-wins cells), not this gate.
     */
-  def indexedIds(spark: SparkSession, indexDir: String, batchSigs: DataFrame,
-      numBuckets: Int = 64): DataFrame = {
+  def indexedIds(spark: SparkSession, indexDir: String,
+      batchSigs: DataFrame): DataFrame = {
     val bandKeys = Dedup.bandRows(batchSigs).select("band", "bkey").distinct()
     ChangesetStore.readBucketsFor(spark, indexDir, bandKeys,
-        keys = Seq("band", "bkey", "doc_id"), numBuckets,
-        bucketBy = Seq("band", "bkey"))
+        keys = Seq("band", "bkey", "doc_id"))
       .map(_.join(broadcast(bandKeys), Seq("band", "bkey"), "left_semi")
         .select("doc_id").distinct())
       .getOrElse(batchSigs.select("doc_id").limit(0))
@@ -144,12 +141,10 @@ object LshIndex {
     * hash bucket, so probe-time counts equal one-shot full-table counts),
     * then joined against the broadcast batch rows.
     */
-  def probe(spark: SparkSession, indexDir: String, batchSigs: DataFrame,
-      numBuckets: Int = 64): DataFrame =
+  def probe(spark: SparkSession, indexDir: String, batchSigs: DataFrame): DataFrame =
     // materialized once: consumed by the touched-bucket probe AND the
     // index∪batch union
-    probeRows(spark, indexDir, indexRows(batchSigs).localCheckpoint(true),
-      numBuckets)
+    probeRows(spark, indexDir, indexRows(batchSigs).localCheckpoint(true))
 
   /** Probe over already-materialized batch band rows (`batchRows` must be
     * checkpointed `indexRows` output): resolves and SCANS the store
@@ -158,15 +153,14 @@ object LshIndex {
     * append afterwards cannot change what it computes.
     */
   private[graft] def probeRows(spark: SparkSession, indexDir: String,
-      batchRows: DataFrame, numBuckets: Int): DataFrame = {
+      batchRows: DataFrame): DataFrame = {
     val batchSigs = batchRows
       .select((Seq("doc_id") ++ sigCols).map(col): _*).distinct()
     val probeKeys = batchRows.select("band", "bkey").distinct()
 
     val corpusRows = ChangesetStore
       .readBucketsFor(spark, indexDir, probeKeys,
-        keys = Seq("band", "bkey", "doc_id"), numBuckets,
-        bucketBy = Seq("band", "bkey"))
+        keys = Seq("band", "bkey", "doc_id"))
       .map(_.join(broadcast(probeKeys), Seq("band", "bkey"), "left_semi"))
       .getOrElse(batchRows.limit(0))
 
@@ -224,7 +218,7 @@ object LshIndex {
     // the batch's band rows computed ONCE for probe + append (each used
     // to derive them separately — one broadcast-join pass saved, r15)
     val batchRows = indexRows(sigs.filter(isNew)).localCheckpoint(true)
-    val probeDf = probeRows(s, idx, batchRows, numBuckets = 8)
+    val probeDf = probeRows(s, idx, batchRows)
     // final probe materialization ∥ delta append (§2.6): probeRows has
     // already scanned the pre-append store snapshot into its checkpointed
     // candidate table, so the append's commit cannot change what the

@@ -93,7 +93,7 @@ object OsmUpdater {
     */
   private def readFor(spark: SparkSession, d: String, schema: StructType,
       keyDf: DataFrame, key: String): DataFrame =
-    ChangesetStore.readBucketsFor(spark, d, keyDf, Seq(key), NumBuckets)
+    ChangesetStore.readBucketsFor(spark, d, keyDf, Seq(key))
       .map(df => df.select(schema.fieldNames.map(col).toSeq: _*)
         .join(broadcast(keyDf), df(key) === keyDf(keyDf.columns.head), "left_semi"))
       .getOrElse(emptyDf(spark, schema))
@@ -688,7 +688,7 @@ object OsmUpdater {
           val ts = raw.agg(max("valid_from")).collect().head
           st = ReplicationCatchup.State(seq,
             if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
-          ReplicationCatchup.writeState(root, st)
+          ReplicationCatchup.writeState(spark, root, st)
           // applyDiff pins intermediates via localCheckpoint; across a
           // long catch-up session those blocks would accumulate (the
           // round-4 storage-leak lesson) — release once the step's sinks

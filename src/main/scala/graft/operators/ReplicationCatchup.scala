@@ -1,11 +1,11 @@
 package graft.operators
 
-import graft.sources.OsmXml
+import graft.sources.{ChangesetStore, OsmXml}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.Properties
 
 /** Replication catch-up sequencing — the ReplicationManager.java /
@@ -17,8 +17,8 @@ import java.util.Properties
   *
   * Store layout (all under one `storeDir`):
   *  - `state.txt` — `sequenceNumber` + `timestamp` Properties, written
-  *    atomically (tmp + ATOMIC_MOVE) AFTER a diff's data lands; it is the
-  *    single commit point.
+  *    atomically ([[ChangesetStore.writeAtomic]]) AFTER a diff's data
+  *    lands; it is the single commit point.
   *  - `events/batch=N/` — the applied diff's events, append-only: one
   *    parquet batch per sequence number, never rewritten. Readers filter
   *    `batch <= state.sequenceNumber`, so a half-applied diff (data written,
@@ -60,16 +60,16 @@ object ReplicationCatchup {
     }
   }
 
-  def writeState(storeDir: String, st: State): Unit = {
+  def writeState(spark: SparkSession, storeDir: String, st: State): Unit = {
     val props = new Properties()
     props.put("sequenceNumber", st.sequenceNumber.toString)
     props.put("timestamp", st.timestamp)
-    val tmp = Paths.get(storeDir, "state.txt.tmp")
-    val out = Files.newOutputStream(tmp)
-    try props.store(out, null)
-    finally out.close()
-    Files.move(tmp, Paths.get(storeDir, "state.txt"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    // Properties.store escapes every non-ASCII character: the text is
+    // ASCII, whatever charset writes it
+    val out = new java.io.ByteArrayOutputStream()
+    props.store(out, null)
+    ChangesetStore.writeAtomic(spark, storeDir, "state.txt",
+      out.toString(java.nio.charset.StandardCharsets.ISO_8859_1))
   }
 
   // ---- diff discovery --------------------------------------------------
@@ -172,10 +172,7 @@ object ReplicationCatchup {
     val events = readEvents(spark, storeDir, st)
     val target = Paths.get(storeDir, "events", s"base=$st")
     events.write.mode("overwrite").parquet(target.toString)
-    val tmp = Paths.get(storeDir, "compacted.txt.tmp")
-    Files.write(tmp, st.toString.getBytes)
-    Files.move(tmp, Paths.get(storeDir, "compacted.txt"),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    ChangesetStore.writeAtomic(spark, storeDir, "compacted.txt", st.toString)
     sweepUnreachable(storeDir, st)
     st
   }
@@ -243,7 +240,7 @@ object ReplicationCatchup {
           .parquet(s"$storeDir/events/batch=$seq")
         val ts = diff.agg(max("ts_us")).collect().head
         st = State(seq, if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
-        writeState(storeDir, st)
+        writeState(spark, storeDir, st)
         applied += 1
       }
     }

@@ -68,12 +68,12 @@ object WindowIndex {
     * only the touched buckets (batch-fp-proportional I/O).
     */
   private[graft] def openedFor(spark: SparkSession, indexDir: String,
-      bw: DataFrame, numBuckets: Int): DataFrame = {
+      bw: DataFrame): DataFrame = {
     val fps = bw.select("fp").distinct()
     val empty = bw.sparkSession.range(0)
       .select(lit("").as("fp"), lit(0L).as("doc_id"))
     ChangesetStore
-      .readBucketsFor(spark, indexDir, fps, Keys, numBuckets, BucketBy)
+      .readBucketsFor(spark, indexDir, fps, Keys)
       .map(_.join(broadcast(fps), Seq("fp"), "left_semi"))
       .getOrElse(empty)
   }
@@ -85,8 +85,8 @@ object WindowIndex {
     * probed — a redelivery of it appends nothing either way.
     */
   private[graft] def indexedIds(spark: SparkSession, indexDir: String,
-      bw: DataFrame, numBuckets: Int): DataFrame =
-    openedFor(spark, indexDir, bw, numBuckets)
+      bw: DataFrame): DataFrame =
+    openedFor(spark, indexDir, bw)
       .join(bw, Seq("fp", "doc_id"), "left_semi")
       .select("doc_id").distinct()
 
@@ -105,20 +105,19 @@ object WindowIndex {
     * buckets carry complete per-fp postings, so cap and counts equal the
     * one-shot operator's.
     */
-  def probe(spark: SparkSession, indexDir: String, batch: DataFrame,
-      numBuckets: Int = 64): DataFrame = {
+  def probe(spark: SparkSession, indexDir: String, batch: DataFrame): DataFrame = {
     val bw = Dedup.windowRows(batch).localCheckpoint(true)
-    try probeRows(spark, indexDir, bw, numBuckets)
+    try probeRows(spark, indexDir, bw)
     finally { bw.unpersist(blocking = false); () }
   }
 
   private[graft] def probeRows(spark: SparkSession, indexDir: String,
-      bw: DataFrame, numBuckets: Int): DataFrame = {
+      bw: DataFrame): DataFrame = {
     // index∪batch, (fp, doc_id)-distinct: correct whether the batch was
     // already appended (opened contains its rows — distinct dedupes) or
     // not yet (the streaming probe-then-append order) — the LshIndex
     // .probe discipline
-    val opened = openedFor(spark, indexDir, bw, numBuckets)
+    val opened = openedFor(spark, indexDir, bw)
       .select("doc_id", "fp")
       .unionByName(bw.select("doc_id", "fp"))
       .distinct()
@@ -160,7 +159,7 @@ object WindowIndex {
     // append only ADDS delta dirs while GC keeps the previous manifest's
     // files — the two actions cannot disturb each other
     val (probeDf, _) = graft.Par.run2(
-      () => probeRows(s, idx, bw, numBuckets = 8),
+      () => probeRows(s, idx, bw),
       () => appendRows(s, bw, idx, numBuckets = 8))
     probeDf
   }

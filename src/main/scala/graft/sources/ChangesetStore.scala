@@ -7,58 +7,61 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Persistent, incrementally-updatable changeset store — the
+/** Persistent, incrementally-updatable bucketed store — the
   * ChangesetDB.java analog (the reference keeps a resumable Postgres upsert
-  * store of changeset rows; `--changeset-db`, docs/CLI.md). Here the store
-  * is versioned parquet snapshots with an atomically-swapped pointer file:
+  * store of changeset rows; `--changeset-db`, docs/CLI.md) and the one
+  * commit path under every persisted store here (changesets, the update
+  * store, the LSH/BM25/window indexes, the IVF cells).
   *
-  *  - `v=N/` — immutable snapshot N (plain parquet).
-  *  - `current` — single-line pointer to the live version, written via
-  *    tmp + atomic rename AFTER snapshot N lands; it is the only commit
-  *    point, so a crash mid-upsert leaves the previous snapshot live and
-  *    the re-run overwrites the orphan — same idempotent-resume contract
-  *    as the replication catch-up state.
+  * Layout, one for every store:
   *
-  * Upsert = latest-wins by key: stored rows whose key appears in the batch
-  * are replaced, others carried over. The batch key set is broadcast into
-  * a left-anti join, so the (large) store side never shuffles.
+  *  - `b=<i>/v=<vi>/` — bucket i's immutable base data as of store
+  *    version vi; rows hash into buckets by `pmod(hash(bucketBy), NB)`
+  *    (or any content-defined `_b` a caller stages, e.g. IVF cells).
+  *  - `b=<i>/d=<dv>/` — pending delta appends ([[appendBucketed]]).
+  *  - `manifest-v<M>.json` — bucket → live base version (`"<b>":vi`) and
+  *    pending deltas (`"<b>#d":[dv,…]`) for store version M.
+  *  - `meta.json` — the pinned layout (`numBuckets`, `bucketBy`) and the
+  *    row schema.
+  *  - `current` — single-line pointer to the live version, the only
+  *    commit point. Commit order: data → manifest → pointer (tmp + atomic
+  *    rename), so a crash mid-write leaves the previous version live and
+  *    the re-run replaces the orphan — the same idempotent-resume
+  *    contract as the replication catch-up state.
   *
-  * TWO layouts behind the same pointer commit:
+  * Upsert = latest-wins by key ([[upsertBucketed]]): an upsert reads,
+  * merges (broadcast anti-join of the batch key set, so the store side
+  * never shuffles) and rewrites ONLY the buckets the batch touches;
+  * untouched buckets keep their existing files byte-for-byte. A batch of
+  * k distinct keys touches about min(NB, k) buckets
+  * (NB·(1 − (1 − 1/NB)^k) for uniform hashes) and costs that share of the
+  * store in I/O, not a full rewrite — so the saving is real for batches
+  * of fewer keys than buckets; a 300-key minutely diff at NB = 64 touches
+  * every bucket. Reads stay plain multi-path parquet scans.
   *
-  *  - **snapshot** ([[upsert]]): each version is a full rewrite — simple,
-  *    right for dimension-sized stores.
-  *  - **bucketed** ([[upsertBucketed]]): rows hash into `b=<i>/v=<vi>`
-  *    bucket directories and a `manifest-v<M>.json` maps each bucket to
-  *    its live version. An upsert reads, merges, and rewrites ONLY the
-  *    buckets the batch touches; untouched buckets keep their existing
-  *    files byte-for-byte. A batch of k distinct keys touches about
-  *    min(NB, k) buckets (NB·(1 − (1 − 1/NB)^k) for uniform hashes) and
-  *    costs that share of the store in I/O, not a full rewrite — so the
-  *    saving is real for batches of fewer keys than buckets; a 300-key
-  *    minutely diff at NB = 64 touches every bucket. Reads stay plain
-  *    multi-path parquet scans.
+  * **Delta appends** ([[appendBucketed]]) serve append-only row sets: a
+  * batch lands as per-bucket delta directories WITHOUT reading or
+  * rewriting any existing bucket data — O(batch) I/O even when the batch
+  * touches every bucket (the LSH index case: a diverse daily batch hashes
+  * into all band buckets, and a read-merge-rewrite there would rewrite
+  * the whole accumulated store every day). Reads scan base + deltas;
+  * [[compactBucketed]] folds delta-heavy buckets back into their base.
+  * Because delta rows are UNIONED (never key-merged) at read time,
+  * appends are only for stores whose row identity never repeats —
+  * latest-wins writers must use [[upsertBucketed]], which also folds any
+  * pending deltas it touches.
   *
-  * Bucketed stores additionally support **delta appends**
-  * ([[appendBucketed]]) for append-only row sets: a batch lands as
-  * per-bucket `b=<i>/d=<dv>` delta directories recorded in the manifest
-  * (`"<b>#d":[dv,…]`) WITHOUT reading or rewriting any existing bucket
-  * data — O(batch) I/O even when the batch touches every bucket (the LSH
-  * index case: a diverse daily batch hashes into all band buckets, and a
-  * read-merge-rewrite there would rewrite the whole accumulated store
-  * every day). Reads scan base + deltas; [[compactBucketed]] folds
-  * delta-heavy buckets back into their base. Because delta rows are
-  * UNIONED (never key-merged) at read time, appends are only for stores
-  * whose row identity never repeats — latest-wins writers must use
-  * [[upsertBucketed]], which also folds any pending deltas it touches.
+  * The bucket layout is pinned in `meta.json` at store creation and
+  * ADOPTED by every later writer and by every pruned reader: two writers
+  * hashing the same key with different bucket counts would strand live
+  * rows in dead buckets, so a writer's bucket arguments only size a store
+  * that does not exist yet, and readers take none. `meta.json` also
+  * records the row schema, so reading bucket directories never runs a
+  * schema-inference job; the paths come from the manifest.
   *
-  * The bucket layout (`numBuckets` + `bucketBy`) is pinned in a
-  * `meta.json` written at store creation and ADOPTED by every later
-  * writer and pruned reader: two writers hashing the same key with
-  * different bucket counts would strand live rows in dead buckets, so
-  * the caller's arguments only matter for a store that does not exist
-  * yet. `meta.json` also records the store's row schema, so reading
-  * bucket directories never runs a schema-inference job; the paths come
-  * from the manifest.
+  * A store written by the retired full-rewrite snapshot layout (`v=N/`
+  * directories, no manifest) fails loudly — "snapshot-layout store;
+  * rebuild it" — instead of reading as missing or restarting at v1.
   */
 object ChangesetStore {
 
@@ -67,14 +70,10 @@ object ChangesetStore {
 
   /** Live version number, if the store exists. A missing pointer file does
     * NOT mean an empty store: the pointer swap is not atomic on every
-    * filesystem, so recovery falls back to scanning for the highest fully
-    * committed artifact — `manifest-v<N>.json` (bucketed layout; written
-    * via tmp + atomic rename after its bucket data) or a `v=N/_SUCCESS`
-    * snapshot (snapshot layout; the marker lands when the write completes,
-    * and a completed-but-unpointered merge already contains the previous
-    * snapshot's content, so re-pointing at it never loses rows). Without
-    * this, a crash inside the pointer swap would silently restart the
-    * store from scratch on the next upsert.
+    * filesystem, so recovery falls back to the highest fully committed
+    * `manifest-v<N>.json` (written via tmp + atomic rename after its
+    * bucket data). Without this, a crash inside the pointer swap would
+    * silently restart the store from scratch on the next upsert.
     */
   def currentVersion(spark: SparkSession, storeDir: String): Option[Int] = {
     val f = fs(spark, storeDir)
@@ -93,119 +92,59 @@ object ChangesetStore {
     val f = fs(spark, storeDir)
     if (!f.exists(new Path(storeDir))) return None
     val names = f.listStatus(new Path(storeDir)).map(_.getPath.getName)
-    val manifests = names.collect {
-      case n if n.startsWith("manifest-v") && n.endsWith(".json") &&
-        n.stripPrefix("manifest-v").stripSuffix(".json").forall(_.isDigit) =>
-        n.stripPrefix("manifest-v").stripSuffix(".json").toInt
-    }
-    val snapshots = names.collect {
-      case n if n.startsWith("v=") && n.drop(2).nonEmpty && n.drop(2).forall(_.isDigit) &&
-        f.exists(new Path(s"$storeDir/$n/_SUCCESS")) => n.drop(2).toInt
-    }
-    val all = manifests ++ snapshots
-    if (all.isEmpty) None
-    else {
-      val v = all.max
+    val manifests = names.flatMap(versionOf("manifest-v", _, ".json"))
+    if (manifests.isEmpty) {
+      if (names.exists(versionOf("v=", _).nonEmpty)) throw snapshotLayout(storeDir)
+      None
+    } else {
+      val v = manifests.max
       commitPointer(spark, storeDir, v) // heal the pointer for later readers
       Some(v)
     }
   }
 
-  /** The live snapshot (empty-schema-less: callers must only read a store
-    * they have written).
-    */
-  def read(spark: SparkSession, storeDir: String): DataFrame = {
-    val v = currentVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"$storeDir: no committed store version"))
-    spark.read.parquet(s"$storeDir/v=$v")
+  /** `<prefix><digits><suffix>` → the digits as a version. */
+  private[graft] def versionOf(prefix: String, name: String, suffix: String = ""): Option[Int] = {
+    val d = name.stripPrefix(prefix).stripSuffix(suffix)
+    if (name.startsWith(prefix) && name.endsWith(suffix) && d.nonEmpty && d.forall(_.isDigit))
+      Some(d.toInt)
+    else None
   }
 
-  /** Applies one batch with latest-wins-by-`keys` semantics and commits a
-    * new snapshot. Returns the committed version. Old snapshots beyond the
-    * previous one are garbage-collected (the previous stays for readers
-    * mid-flight and for crash forensics).
-    */
-  def upsert(spark: SparkSession, storeDir: String, batch: DataFrame,
-      keys: Seq[String]): Int = {
-    val f = fs(spark, storeDir)
-    f.mkdirs(new Path(storeDir))
-    val prev = currentVersion(spark, storeDir)
-    val next = prev.getOrElse(0) + 1
-    val merged = prev match {
-      case None => batch
-      case Some(_) =>
-        val keyDf = batch.select(keys.map(col): _*).distinct()
-        // allowMissingColumns: a store's schema may GROW across writers
-        // (a dump-ingested snapshot later caught up by the sequenced
-        // path, whose rows carry `seq`); carried rows surface the new
-        // column as null
-        read(spark, storeDir)
-          .join(broadcast(keyDf), keys, "left_anti")
-          .unionByName(batch, allowMissingColumns = true)
-    }
-    merged.write.mode("overwrite").parquet(s"$storeDir/v=$next")
-    commitPointer(spark, storeDir, next)
-    // GC everything older than the previous snapshot
-    prev.foreach { p =>
-      val it = f.listStatus(new Path(storeDir))
-      it.foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v=") && n.drop(2).forall(_.isDigit) && n.drop(2).toInt < p)
-          f.delete(st.getPath, true)
-      }
-    }
-    next
-  }
+  private def snapshotLayout(storeDir: String) =
+    new IllegalStateException(s"$storeDir: snapshot-layout store; rebuild it")
 
-  // ---- layout-agnostic facade -------------------------------------------
-
-  /** Whether the live version was committed by [[upsertBucketed]] (a
-    * manifest exists for it) rather than as a plain snapshot.
-    */
-  def isBucketed(spark: SparkSession, storeDir: String, v: Int): Boolean =
-    fs(spark, storeDir).exists(new Path(storeDir, s"manifest-v$v.json"))
-
-  /** The live table regardless of which layout committed it — lets a
-    * store bulk-loaded as snapshots (the dump-ingest path) be read by the
-    * same consumers as a bucketed catch-up store.
+  /** The live table: one multi-path parquet scan over every bucket's base
+    * + pending delta directories, with the schema recorded in `meta.json`
+    * (no inference, no listing job).
     */
   def readAuto(spark: SparkSession, storeDir: String): DataFrame = {
     val v = currentVersion(spark, storeDir).getOrElse(
       throw new IllegalStateException(s"$storeDir: no committed store version"))
-    if (isBucketed(spark, storeDir, v)) readBucketed(spark, storeDir)
-    else spark.read.parquet(s"$storeDir/v=$v")
+    val manifest = readManifest(spark, storeDir, v)
+    val deltas = readDeltas(spark, storeDir, v)
+    scan(spark, schemaOf(storeDir, readBucketMeta(spark, storeDir)),
+      bucketPaths(storeDir, manifest, deltas, manifest.keySet ++ deltas.keySet))
   }
 
-  /** Upsert that follows the store's existing layout (a snapshot store
-    * stays snapshot, a bucketed store stays bucketed); a NEW store starts
-    * bucketed — the 100 TB default. One store must never mix layouts: the
-    * version counter is shared, so a bucketed upsert onto a snapshot store
-    * would read an empty manifest and silently drop the loaded rows.
-    */
-  def upsertAuto(spark: SparkSession, storeDir: String, batch: DataFrame,
-      keys: Seq[String], numBuckets: Int = 64): Int =
-    currentVersion(spark, storeDir) match {
-      case Some(v) if !isBucketed(spark, storeDir, v) =>
-        upsert(spark, storeDir, batch, keys)
-      case _ => upsertBucketed(spark, storeDir, batch, keys, numBuckets)
-    }
-
-  // ---- bucketed layout --------------------------------------------------
+  // ---- commit files ------------------------------------------------------
 
   /** Single-step atomic pointer swap: tmp write + rename-with-OVERWRITE
     * (FileContext — one atomic operation on HDFS and the local fs alike).
     * No delete-then-rename window, so no state in which the pointer is
-    * missing mid-commit; [[recoverVersion]] covers pre-existing stores
-    * written by the old two-step swap or exotic filesystems.
+    * missing mid-commit; [[recoverVersion]] covers filesystems where the
+    * rename is not atomic.
     */
   private[graft] def commitPointer(spark: SparkSession, storeDir: String, next: Int): Unit =
     writeAtomic(spark, storeDir, "current", next.toString)
 
   /** Writes `storeDir/name` via tmp + atomic rename-with-OVERWRITE: the
-    * pointer, the manifests and `meta.json` are never seen half-written,
-    * and a re-run after a crash replaces what the crashed attempt left.
+    * pointer, the manifests, `meta.json` and every other small commit file
+    * (replication `state.txt`, `compacted.txt`, BM25 stats) are never seen
+    * half-written, and a re-run after a crash replaces what the crashed
+    * attempt left. The one atomic small-file writer in the code base.
     */
-  private def writeAtomic(spark: SparkSession, storeDir: String, name: String,
+  private[graft] def writeAtomic(spark: SparkSession, storeDir: String, name: String,
       body: String): Unit = {
     val f = fs(spark, storeDir)
     val tmp = new Path(storeDir, s"$name.tmp")
@@ -266,10 +205,9 @@ object ChangesetStore {
         m.bucketBy.map("\"" + _ + "\"").mkString(",")}]${
         m.schema.fold("")(s => ",\"schema\":" + s.json)}}""")
 
-  /** Effective (numBuckets, bucket columns): the pinned meta when present
-    * — the caller's arguments only apply to a store that does not exist
-    * yet (or one created before meta pinning, which keeps its first
-    * writer's layout from here on).
+  /** Effective (numBuckets, bucket columns) of a write: the pinned meta
+    * when present — the caller's arguments only size a store that does
+    * not exist yet.
     */
   private def resolveBuckets(meta: Option[BucketMeta], numBuckets: Int,
       bucketBy: Seq[String], keys: Seq[String]): (Int, Seq[String]) =
@@ -341,9 +279,19 @@ object ChangesetStore {
         m.group(2).split(',').filter(_.nonEmpty).map(_.toInt).toSeq)
       .filter(_._2.nonEmpty).toMap
 
+  /** A committed version always has its manifest (it lands before the
+    * pointer), so a missing one whose `v=<N>` snapshot directory exists
+    * is a retired snapshot-layout store — checked only once the open has
+    * failed, so a healthy read pays no extra I/O.
+    */
   private def manifestText(spark: SparkSession, storeDir: String, v: Int): String = {
     val f = fs(spark, storeDir)
-    val in = f.open(new Path(storeDir, s"manifest-v$v.json"))
+    val in =
+      try f.open(new Path(storeDir, s"manifest-v$v.json"))
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw if (f.exists(new Path(storeDir, s"v=$v"))) snapshotLayout(storeDir) else e
+      }
     try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
@@ -364,24 +312,14 @@ object ChangesetStore {
         deltas.getOrElse(b, Nil).sorted.map(d => s"$storeDir/b=$b/d=$d")
     }
 
-  /** The live table of a BUCKETED store: one multi-path parquet scan over
-    * each bucket's base + pending delta directories.
-    */
-  def readBucketed(spark: SparkSession, storeDir: String): DataFrame = {
-    val v = currentVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(s"$storeDir: no committed store version"))
-    val manifest = readManifest(spark, storeDir, v)
-    val deltas = readDeltas(spark, storeDir, v)
-    scan(spark, schemaOf(storeDir, readBucketMeta(spark, storeDir)),
-      bucketPaths(storeDir, manifest, deltas, manifest.keySet ++ deltas.keySet))
-  }
-
   /** Bucket-pruned point lookup: reads ONLY the buckets that can contain
     * the given keys (the store analog of the reference UpdateStore's
     * `nodes(Set<Long> ids)` KV gets). `keyDf` columns must match the
-    * upsert `keys` in name, order and type — the bucket id is the same
-    * `pmod(hash(keys), numBuckets)` the writer used, computed engine-side
-    * so the hash function is identical by construction. k distinct keys
+    * upsert `keys` (or the pinned `bucketBy` subset) in name, order and
+    * type — the bucket id is the same `pmod(hash(bucketBy), numBuckets)`
+    * the writer used, with both taken from `meta.json` and computed
+    * engine-side so the hash function is identical by construction. `keys`
+    * only stands in for a store pinned without `bucketBy`. k distinct keys
     * open about min(numBuckets, k) buckets: a lookup of fewer keys than
     * buckets skips the rest, a 300-key minutely diff at 64 buckets opens
     * them all. `keyDf` is consumed twice (the bucket collect here and the
@@ -389,17 +327,17 @@ object ChangesetStore {
     * for an empty/untouched store.
     */
   def readBucketsFor(spark: SparkSession, storeDir: String, keyDf: DataFrame,
-      keys: Seq[String], numBuckets: Int = 64,
-      bucketBy: Seq[String] = Seq.empty): Option[DataFrame] =
+      keys: Seq[String]): Option[DataFrame] =
     currentVersion(spark, storeDir).flatMap { v =>
+      val manifest = readManifest(spark, storeDir, v)
+      val deltas = readDeltas(spark, storeDir, v)
       val meta = readBucketMeta(spark, storeDir)
-      val (nb, bCols) = resolveBuckets(meta, numBuckets, bucketBy, keys)
-      val touched = bucketsOf(keyDf, pmod(hash(bCols.map(col): _*), lit(nb)))
-      val manifest = readManifest(spark, storeDir, v).filter(t => touched(t._1))
-      val deltas = readDeltas(spark, storeDir, v).filter(t => touched(t._1))
-      val paths = bucketPaths(storeDir, manifest, deltas,
-        manifest.keySet ++ deltas.keySet)
-      if (paths.isEmpty) None else Some(scan(spark, schemaOf(storeDir, meta), paths))
+      val schema = schemaOf(storeDir, meta)
+      val m = meta.get // schemaOf fails for a store without meta
+      val bCols = if (m.bucketBy.nonEmpty) m.bucketBy else keys
+      val touched = bucketsOf(keyDf, pmod(hash(bCols.map(col): _*), lit(m.numBuckets)))
+      val paths = bucketPaths(storeDir, manifest, deltas, touched)
+      if (paths.isEmpty) None else Some(scan(spark, schema, paths))
     }
 
   /** Bucket-pruned upsert: only batch-touched buckets are read, merged
@@ -551,9 +489,10 @@ object ChangesetStore {
   /** Stages `df` (carrying `_b`) partitioned by bucket and installs each
     * written bucket dir as `b=<i>/<kind>=<next>` (delete-then-rename: a
     * crashed previous attempt may have left the target behind). Returns
-    * the written bucket ids.
+    * the written bucket ids. `_b` is any integer bucket id: the key hash
+    * here, the nearest-centroid cell in [[graft.operators.IvfIndex]].
     */
-  private def stageAndInstall(spark: SparkSession, storeDir: String,
+  private[graft] def stageAndInstall(spark: SparkSession, storeDir: String,
       df: DataFrame, next: Int, kind: String): Seq[Int] = {
     val f = fs(spark, storeDir)
     val staging = s"$storeDir/stage-v$next"
@@ -588,7 +527,7 @@ object ChangesetStore {
     * drop manifests older than prev. `newBase`/`newDeltas` describe what
     * the just-committed manifest references for the touched buckets.
     */
-  private def gcBucketed(spark: SparkSession, storeDir: String,
+  private[graft] def gcBucketed(spark: SparkSession, storeDir: String,
       prev: Option[Int], buckets: Set[Int], newBase: Map[Int, Int],
       newDeltas: Map[Int, Seq[Int]]): Unit = prev.foreach { p =>
     val f = fs(spark, storeDir)
@@ -600,19 +539,13 @@ object ChangesetStore {
         newDeltas.getOrElse(b, Seq.empty)
       f.listStatus(new Path(s"$storeDir/b=$b")).foreach { st =>
         val n = st.getPath.getName
-        val stale =
-          (n.startsWith("v=") && n.drop(2).forall(_.isDigit) &&
-            !keepV(n.drop(2).toInt)) ||
-          (n.startsWith("d=") && n.drop(2).forall(_.isDigit) &&
-            !keepD(n.drop(2).toInt))
+        val stale = versionOf("v=", n).exists(!keepV(_)) ||
+          versionOf("d=", n).exists(!keepD(_))
         if (stale) f.delete(st.getPath, true)
       }
     }
     f.listStatus(new Path(storeDir)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("manifest-v") && n.endsWith(".json") &&
-        n.stripPrefix("manifest-v").stripSuffix(".json").forall(_.isDigit) &&
-        n.stripPrefix("manifest-v").stripSuffix(".json").toInt < p)
+      if (versionOf("manifest-v", st.getPath.getName, ".json").exists(_ < p))
         f.delete(st.getPath, false)
     }
   }

@@ -73,21 +73,23 @@ object ChangesetStream {
           // stored higher-seq row outranks — a late diff can never rewind
           // data the bookmark says is applied. The stored-seq lookup is
           // bucket-pruned: only the buckets the batch's ids hash into are
-          // opened, batch-scale I/O at any store size.
+          // opened, batch-scale I/O at any store size. A store without a
+          // `seq` column (bulk-loaded from a dump) holds no sequenced row
+          // yet, so nothing in it outranks the batch.
           val ids = folded.select("id")
           val winners = ChangesetStore
-            .readBucketsFor(spark, storeDir, ids, Seq("id"), numBuckets) match {
-            case None => folded
-            case Some(stored) =>
+            .readBucketsFor(spark, storeDir, ids, Seq("id")) match {
+            case Some(stored) if stored.columns.contains("seq") =>
               val storedSeq = stored
                 .join(broadcast(ids), Seq("id"), "left_semi")
                 .groupBy("id").agg(max("seq").as("_sseq"))
               folded.join(broadcast(storedSeq), Seq("id"), "left")
                 .filter(col("_sseq").isNull || col("seq") > col("_sseq"))
                 .drop("_sseq")
+            case _ => folded
           }
           if (!winners.isEmpty)
-            ChangesetStore.upsertAuto(spark, storeDir, winners, Seq("id"),
+            ChangesetStore.upsertBucketed(spark, storeDir, winners, Seq("id"),
               numBuckets)
           // bookmark parity with the sequenced catch-up: monotonic advance
           // only (a replayed batch must never rewind the sequence)
@@ -97,7 +99,7 @@ object ChangesetStream {
           val ts = if (agg.isNullAt(1)) "" else agg.getString(1)
           val cur = ReplicationCatchup.readState(storeDir)
           if (cur.forall(_.sequenceNumber < seq))
-            ReplicationCatchup.writeState(storeDir,
+            ReplicationCatchup.writeState(spark, storeDir,
               ReplicationCatchup.State(seq,
                 if (ts > cur.map(_.timestamp).getOrElse("")) ts
                 else cur.map(_.timestamp).getOrElse("")))

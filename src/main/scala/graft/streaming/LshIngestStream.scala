@@ -54,7 +54,7 @@ object LshIngestStream {
       .localCheckpoint(true)
     try {
       val fresh = sigs
-        .join(broadcast(LshIndex.indexedIds(spark, indexDir, sigs, numBuckets)),
+        .join(broadcast(LshIndex.indexedIds(spark, indexDir, sigs)),
           Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       try {
@@ -62,7 +62,7 @@ object LshIngestStream {
           // the batch_id arrives via partition-directory inference on
           // read — writing it as a data column too would clash with the
           // key=value path
-          LshIndex.probe(spark, indexDir, fresh, numBuckets)
+          LshIndex.probe(spark, indexDir, fresh)
             .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
           LshIndex.append(spark, fresh, indexDir, numBuckets)
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)

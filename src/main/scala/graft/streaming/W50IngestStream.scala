@@ -45,12 +45,12 @@ object W50IngestStream {
       .localCheckpoint(true)
     try {
       val fresh = rows
-        .join(broadcast(WindowIndex.indexedIds(spark, indexDir, rows, numBuckets)),
+        .join(broadcast(WindowIndex.indexedIds(spark, indexDir, rows)),
           Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       try {
         if (!fresh.isEmpty) {
-          WindowIndex.probeRows(spark, indexDir, fresh, numBuckets)
+          WindowIndex.probeRows(spark, indexDir, fresh)
             .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
           WindowIndex.appendRows(spark, fresh, indexDir, numBuckets)
           if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)

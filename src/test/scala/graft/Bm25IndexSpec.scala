@@ -37,11 +37,11 @@ class Bm25IndexSpec extends SparkSpec {
       numBuckets = 8)
     Bm25Index.append(spark, post.filter(col("doc_id") % 3 === 2), idx,
       numBuckets = 8)
-    assert(rows(Bm25Index.probe(spark, idx, qt, numBuckets = 8)) === oneShot,
+    assert(rows(Bm25Index.probe(spark, idx, qt)) === oneShot,
       "probe after the append chain must equal the one-shot computation")
 
     Bm25Index.compact(spark, idx, minDeltas = 1)
-    assert(rows(Bm25Index.probe(spark, idx, qt, numBuckets = 8)) === oneShot,
+    assert(rows(Bm25Index.probe(spark, idx, qt)) === oneShot,
       "compaction must not change probe results")
   }
 

@@ -102,7 +102,7 @@ class ChangesetCatchupSpec extends SparkSpec {
     val before = storeRows(store)
     // simulate a crash that lost the last two bookmark writes but kept the
     // upserted data: rewind state.txt to sequence 1 and re-run
-    ReplicationCatchup.writeState(store, ReplicationCatchup.State(1L, ""))
+    ReplicationCatchup.writeState(spark, store, ReplicationCatchup.State(1L, ""))
     assert(ChangesetCatchup.catchUp(spark, repl, store, batchSize = 1) === 2L)
     assert(storeRows(store) === before)
     assert(ReplicationCatchup.readState(store).map(_.sequenceNumber) === Some(3L))
@@ -121,20 +121,20 @@ class ChangesetCatchupSpec extends SparkSpec {
     val repl = tmp("graft-cc-repl6")
     val store = tmp("graft-cc-store6")
     writeDiffs(java.nio.file.Paths.get(repl), 1 -> diff1, 2 -> diff2, 3 -> diff3)
-    // bulk-load the store as a SNAPSHOT (the dump-ingest path) with the
-    // content of diffs 1-2, but write no state.txt — the reference's
-    // "no local state detected" branch
+    // bulk-load the store (the dump-ingest path: one upsert of rows
+    // without `seq`) with the content of diffs 1-2, but write no
+    // state.txt — the reference's "no local state detected" branch
     val bulk = spark.createDataFrame(Seq(
       (100L, "2024-01-21T00:00:00Z", "", true, 9L, "bob", 0L, Map("created_by" -> "iD")),
       (200L, "2024-01-21T00:01:00Z", "2024-01-21T00:01:40Z", false, 5L, "amy", 3L, Map("created_by" -> "JOSM"))))
       .toDF("id", "created_at", "closed_at", "open", "uid", "user", "num_changes", "tags")
-    ChangesetStore.upsert(spark, store, bulk, Seq("id"))
+    ChangesetStore.upsertBucketed(spark, store, bulk, Seq("id"))
 
     // store max ts = diff-2's max → estimate resumes at sequence 3
     assert(ChangesetCatchup.estimateStartSequence(spark, repl, store) === 2L)
     assert(ChangesetCatchup.catchUp(spark, repl, store) === 1L)
     assert(ReplicationCatchup.readState(store).map(_.sequenceNumber) === Some(3L))
-    // diff 3 upserted onto the snapshot store: cs 100 closed, cs 300 added
+    // diff 3 upserted onto the bulk-loaded store: cs 100 closed, cs 300 added
     assert(storeRows(store) === Seq(
       (100L, "2024-01-21T00:02:00Z", false, 7L),
       (200L, "2024-01-21T00:01:40Z", false, 3L),

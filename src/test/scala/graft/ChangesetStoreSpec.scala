@@ -3,44 +3,42 @@ package graft
 import graft.sources.ChangesetStore
 import org.apache.spark.sql.functions._
 
-/** Versioned-snapshot upsert store lifecycle (ChangesetDB.java analog). */
+/** Versioned bucketed upsert store lifecycle (ChangesetDB.java analog). */
 class ChangesetStoreSpec extends SparkSpec {
 
   test("upsert: initial load, latest-wins refresh, version GC, crash-resume") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-cs-spec").toString
+    val keys = Seq("user_id", "cs_seq")
+    // one bucket: every upsert rewrites it, so each version's bucket dir
+    // and manifest are the whole store
+    def upsert(rows: Seq[(Long, Long, Long)]) = ChangesetStore.upsertBucketed(
+      spark, dir, rows.toDF("user_id", "cs_seq", "closed_at"), keys, numBuckets = 1)
+    def exists(rel: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(dir, rel))
 
-    val b1 = Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 0L, 30L))
-      .toDF("user_id", "cs_seq", "closed_at")
-    assert(ChangesetStore.upsert(spark, dir, b1, Seq("user_id", "cs_seq")) === 1)
+    assert(upsert(Seq((1L, 0L, 10L), (2L, 0L, 20L), (3L, 0L, 30L))) === 1)
     assert(ChangesetStore.currentVersion(spark, dir) === Some(1))
 
     // refresh: user 2's session extends, user 4 appears
-    val b2 = Seq((2L, 0L, 25L), (4L, 0L, 40L))
-      .toDF("user_id", "cs_seq", "closed_at")
-    assert(ChangesetStore.upsert(spark, dir, b2, Seq("user_id", "cs_seq")) === 2)
-    val rows = ChangesetStore.read(spark, dir)
+    assert(upsert(Seq((2L, 0L, 25L), (4L, 0L, 40L))) === 2)
+    val rows = ChangesetStore.readAuto(spark, dir)
       .orderBy("user_id").collect().map(r => (r.getLong(0), r.getLong(2)))
     assert(rows.toSeq === Seq((1L, 10L), (2L, 25L), (3L, 30L), (4L, 40L)))
 
-    // third upsert GCs v=1 (keeps the previous snapshot only)
-    assert(ChangesetStore.upsert(spark, dir,
-      Seq((5L, 0L, 50L)).toDF("user_id", "cs_seq", "closed_at"),
-      Seq("user_id", "cs_seq")) === 3)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v=1")))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "v=2")))
+    // third upsert GCs version 1 (keeps the previous version only)
+    assert(upsert(Seq((5L, 0L, 50L))) === 3)
+    assert(!exists("b=0/v=1") && !exists("manifest-v1.json"))
+    assert(exists("b=0/v=2") && exists("manifest-v2.json"))
 
-    // crash simulation: an orphan v=4 exists but the pointer still says 3 —
-    // readers see 3, and the next upsert overwrites the orphan and commits 4
-    val orphan = s"$dir/v=4"
+    // crash simulation: an orphan b=0/v=4 exists but the pointer still
+    // says 3 — readers see 3, and the next upsert overwrites the orphan
+    // and commits 4
     Seq((9L, 9L, 99L)).toDF("user_id", "cs_seq", "closed_at")
-      .write.mode("overwrite").parquet(orphan)
+      .write.mode("overwrite").parquet(s"$dir/b=0/v=4")
     assert(ChangesetStore.currentVersion(spark, dir) === Some(3))
-    assert(!ChangesetStore.read(spark, dir).collect().exists(_.getLong(0) == 9L))
-    assert(ChangesetStore.upsert(spark, dir,
-      Seq((6L, 0L, 60L)).toDF("user_id", "cs_seq", "closed_at"),
-      Seq("user_id", "cs_seq")) === 4)
-    val after = ChangesetStore.read(spark, dir).select("user_id")
+    assert(!ChangesetStore.readAuto(spark, dir).collect().exists(_.getLong(0) == 9L))
+    assert(upsert(Seq((6L, 0L, 60L))) === 4)
+    val after = ChangesetStore.readAuto(spark, dir).select("user_id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(after === Seq(1L, 2L, 3L, 4L, 5L, 6L), "orphan rows must not leak in")
   }
@@ -70,7 +68,7 @@ class ChangesetStoreSpec extends SparkSpec {
     }
 
     // content: latest-wins for key 7, everything else carried
-    val rows = ChangesetStore.readBucketed(spark, dir)
+    val rows = ChangesetStore.readAuto(spark, dir)
       .orderBy("user_id").collect().map(r => (r.getLong(0), r.getLong(2)))
     assert(rows.toSeq === (1L to 20L).map(k => (k, if (k == 7) 777L else k * 10)))
 
@@ -81,40 +79,62 @@ class ChangesetStoreSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/b=$orphanBucket/v=3"))
     val b3 = Seq((7L, 0L, 7777L)).toDF("user_id", "cs_seq", "closed_at")
     assert(ChangesetStore.upsertBucketed(spark, dir, b3, Seq("user_id", "cs_seq"), nb) === 3)
-    val after = ChangesetStore.readBucketed(spark, dir)
+    val after = ChangesetStore.readAuto(spark, dir)
       .filter($"user_id" === 7L).collect()
     assert(after.length === 1 && after.head.getLong(2) === 7777L)
   }
 
   test("pointer loss recovers the committed store instead of discarding it") {
     import spark.implicits._
-    // snapshot layout: kill `current` → recovery scans for the highest
-    // v=N/_SUCCESS snapshot and the next upsert still merges, not restarts
+    // kill `current` → recovery finds the highest committed manifest and
+    // the next upsert still merges, not restarts
     val dir = java.nio.file.Files.createTempDirectory("graft-cs-ptr").toString
-    val b1 = Seq((1L, 0L, 10L), (2L, 0L, 20L)).toDF("user_id", "cs_seq", "closed_at")
-    assert(ChangesetStore.upsert(spark, dir, b1, Seq("user_id", "cs_seq")) === 1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "current"))
+    val ptr = java.nio.file.Paths.get(dir, "current")
+    val keys = Seq("user_id", "cs_seq")
+    val b1 = (1L to 8L).map(k => (k, 0L, k)).toDF("user_id", "cs_seq", "closed_at")
+    assert(ChangesetStore.upsertBucketed(spark, dir, b1, keys, 4) === 1)
+    java.nio.file.Files.delete(ptr)
     assert(ChangesetStore.currentVersion(spark, dir) === Some(1),
-      "recovery must find the committed snapshot")
+      "recovery must find the committed version")
     // the recovery healed the pointer file
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "current")))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "current"))
-    val b2 = Seq((3L, 0L, 30L)).toDF("user_id", "cs_seq", "closed_at")
-    assert(ChangesetStore.upsert(spark, dir, b2, Seq("user_id", "cs_seq")) === 2)
-    val users = ChangesetStore.read(spark, dir)
+    assert(java.nio.file.Files.exists(ptr))
+    java.nio.file.Files.delete(ptr)
+    val b2 = Seq((9L, 0L, 9L)).toDF("user_id", "cs_seq", "closed_at")
+    assert(ChangesetStore.upsertBucketed(spark, dir, b2, keys, 4) === 2)
+    val users = ChangesetStore.readAuto(spark, dir)
       .select("user_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(users === Seq(1L, 2L, 3L), "upsert after pointer loss must keep old rows")
+    assert(users === (1L to 9L), "upsert after pointer loss must keep old rows")
+  }
 
-    // bucketed layout: recovery via the highest committed manifest
-    val bdir = java.nio.file.Files.createTempDirectory("graft-cs-bptr").toString
-    val bb1 = (1L to 8L).map(k => (k, 0L, k)).toDF("user_id", "cs_seq", "closed_at")
-    assert(ChangesetStore.upsertBucketed(spark, bdir, bb1, Seq("user_id", "cs_seq"), 4) === 1)
-    java.nio.file.Files.delete(java.nio.file.Paths.get(bdir, "current"))
-    assert(ChangesetStore.currentVersion(spark, bdir) === Some(1))
-    val bb2 = Seq((9L, 0L, 9L)).toDF("user_id", "cs_seq", "closed_at")
-    java.nio.file.Files.delete(java.nio.file.Paths.get(bdir, "current"))
-    assert(ChangesetStore.upsertBucketed(spark, bdir, bb2, Seq("user_id", "cs_seq"), 4) === 2)
-    assert(ChangesetStore.readBucketed(spark, bdir).count() === 9)
+  test("a snapshot-layout store fails loudly, with or without its pointer") {
+    import spark.implicits._
+    // the retired full-rewrite layout: `v=1/` plain parquet, no manifest
+    def snapshotStore(withPointer: Boolean): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-cs-snap").toString
+      Seq((1L, "a")).toDF("id", "value").write.parquet(s"$dir/v=1")
+      if (withPointer) java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dir, "current"), "1")
+      dir
+    }
+    def assertRefused(dir: String)(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage === s"$dir: snapshot-layout store; rebuild it")
+    }
+    val batch = Seq((2L, "b")).toDF("id", "value")
+
+    // the pointer names version 1, which has no manifest
+    val pointed = snapshotStore(withPointer = true)
+    assertRefused(pointed)(ChangesetStore.readAuto(spark, pointed))
+    assertRefused(pointed)(
+      ChangesetStore.readBucketsFor(spark, pointed, batch.select("id"), Seq("id")))
+    assertRefused(pointed)(ChangesetStore.upsertBucketed(spark, pointed, batch, Seq("id")))
+
+    // no pointer: recovery finds `v=1` but no manifest — it must not
+    // restart the store at v1 over the loaded rows
+    val bare = snapshotStore(withPointer = false)
+    assertRefused(bare)(ChangesetStore.currentVersion(spark, bare))
+    assertRefused(bare)(ChangesetStore.upsertBucketed(spark, bare, batch, Seq("id")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(bare, "current")))
   }
 
   test("cs_db_enrich equals the one-shot sessionization enrichment") {
@@ -173,9 +193,9 @@ class ChangesetStoreSpec extends SparkSpec {
       s"delta bytes ${newFiles.values.sum} must be far below base $baseBytes")
 
     // reads see base ∪ deltas, full and pruned alike
-    assert(ChangesetStore.readBucketed(spark, dir).count() === 2020)
+    assert(ChangesetStore.readAuto(spark, dir).count() === 2020)
     val got = ChangesetStore.readBucketsFor(spark, dir,
-      Seq(3001L, 7L).toDF("id"), Seq("id"), nb).get
+      Seq(3001L, 7L).toDF("id"), Seq("id")).get
     assert(got.filter(col("id") === 3001L).count() === 1)
     assert(got.filter(col("id") === 7L).count() === 1)
 
@@ -183,7 +203,7 @@ class ChangesetStoreSpec extends SparkSpec {
     // must not survive twice
     val up = Seq((3001L, "NEW")).toDF("id", "value")
     assert(ChangesetStore.upsertBucketed(spark, dir, up, Seq("id"), nb) === 3)
-    val r3001 = ChangesetStore.readBucketed(spark, dir)
+    val r3001 = ChangesetStore.readAuto(spark, dir)
       .filter(col("id") === 3001L).collect()
     assert(r3001.length === 1 && r3001.head.getString(1) === "NEW")
 
@@ -193,13 +213,13 @@ class ChangesetStoreSpec extends SparkSpec {
       val b = Seq((4000L + i, s"d$i")).toDF("id", "value")
       ChangesetStore.appendBucketed(spark, dir, b, Seq("id"), nb)
     }
-    val preCompact = ChangesetStore.readBucketed(spark, dir)
+    val preCompact = ChangesetStore.readAuto(spark, dir)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val v = ChangesetStore.compactBucketed(spark, dir, minDeltas = 1)
     assert(v > 3, "compaction must commit a new version")
     assert(ChangesetStore.readDeltas(spark, dir, v).isEmpty,
       "compaction must clear the folded delta entries")
-    val postCompact = ChangesetStore.readBucketed(spark, dir)
+    val postCompact = ChangesetStore.readAuto(spark, dir)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(postCompact === preCompact, "compaction must not change the table")
     // below threshold → no-op
@@ -222,15 +242,17 @@ class ChangesetStoreSpec extends SparkSpec {
     val vs = ChangesetStore.currentVersion(spark, dir).get
     assert(ChangesetStore.readManifest(spark, dir, vs).keySet.forall(_ < 8),
       "adopted layout must keep every bucket id under the pinned count")
-    val r7 = ChangesetStore.readBucketed(spark, dir)
+    val r7 = ChangesetStore.readAuto(spark, dir)
       .filter(col("id") === 7L).collect()
     assert(r7.length === 1 && r7.head.getLong(1) === 777L,
       "divergent bucket counts would leave the id live in two buckets")
 
-    // pruned reads with the wrong caller count still find the key
+    // pruned reads take the pinned count: only bucket-pruned paths of the
+    // 8-bucket layout, and the key is found
     val got = ChangesetStore.readBucketsFor(spark, dir,
-      Seq(7L).toDF("id"), Seq("id"), numBuckets = 64).get
+      Seq(7L).toDF("id"), Seq("id")).get
     assert(got.filter(col("id") === 7L).count() === 1)
+    assert(got.count() < 100, "the lookup must prune to the key's bucket")
   }
 
   test("readBucketsFor: point lookups equal the full read, pruned bucket set") {
@@ -241,7 +263,7 @@ class ChangesetStoreSpec extends SparkSpec {
 
     val wanted = Seq(3L, 77L, 401L)
     val keyDf = wanted.toDF("id")
-    val got = ChangesetStore.readBucketsFor(spark, store, keyDf, Seq("id"), 16).get
+    val got = ChangesetStore.readBucketsFor(spark, store, keyDf, Seq("id")).get
     // pruned read contains every wanted key with the right value...
     val byId = got.filter(col("id").isin(wanted: _*)).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -251,13 +273,13 @@ class ChangesetStoreSpec extends SparkSpec {
 
     // keys hashing to unwritten buckets: still consistent (superset rule)
     val none = ChangesetStore.readBucketsFor(spark, store,
-      Seq(9999L).toDF("id"), Seq("id"), 16)
+      Seq(9999L).toDF("id"), Seq("id"))
     assert(none.forall(_.filter(col("id") === 9999L).isEmpty))
 
     // empty store → None
     assert(ChangesetStore.readBucketsFor(spark,
       java.nio.file.Files.createTempDirectory("graft-rbf-empty").toString,
-      keyDf, Seq("id"), 16).isEmpty)
+      keyDf, Seq("id")).isEmpty)
   }
 
   test("a batch spread over many input partitions installs one file per bucket") {
@@ -285,7 +307,7 @@ class ChangesetStoreSpec extends SparkSpec {
     assert(ChangesetStore.upsertBucketed(spark, dir, b2, Seq("id"), numBuckets = 16) === 2)
     assert(ChangesetStore.readManifest(spark, dir, 2).values.toSet === Set(2))
     assertOneFilePerBucket(2)
-    val rows = ChangesetStore.readBucketed(spark, dir).collect()
+    val rows = ChangesetStore.readAuto(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(rows === (1L to 500L).map(k => k -> (if (k % 2 == 1) s"w$k" else s"v$k")).toMap)
 
@@ -316,7 +338,7 @@ class ChangesetStoreSpec extends SparkSpec {
 
     // no schema-inference and no listing job: building the frame runs nothing
     var got: org.apache.spark.sql.DataFrame = null
-    assert(jobsDuring { got = ChangesetStore.readBucketed(spark, dir) } === 0)
+    assert(jobsDuring { got = ChangesetStore.readAuto(spark, dir) } === 0)
     assert(got.schema === plain.schema)
     assert(got.schema.fieldNames.toSeq === Seq("id", "value", "seq"))
     assert(got.collect().toSet === plain.collect().toSet)
@@ -325,7 +347,7 @@ class ChangesetStoreSpec extends SparkSpec {
 
     // the pruned read shares the schema
     val keys = Seq(7L, 8L).toDF("id")
-    val pruned = ChangesetStore.readBucketsFor(spark, dir, keys, Seq("id"), nb).get
+    val pruned = ChangesetStore.readBucketsFor(spark, dir, keys, Seq("id")).get
     assert(pruned.schema === plain.schema)
     assert(pruned.join(keys, Seq("id"), "left_semi").collect().toSet ===
       plain.join(keys, Seq("id"), "left_semi").collect().toSet)

@@ -64,6 +64,38 @@ class ChangesetStreamSpec extends SparkSpec {
     assert(ReplicationCatchup.readState(streamStore).map(_.sequenceNumber) === Some(3L))
   }
 
+  test("stream onto a dump-loaded store == batch catch-up onto the same dump") {
+    val diffs = tmp("graft-cs-stream-dump-diffs")
+    write(diffs, 1, diff1)
+    write(diffs, 2, diff2)
+    write(diffs, 3, diff3)
+    // the dump predates every diff: cs 50 closed, cs 200 still open (diff
+    // 2 closes it). Dump rows carry no `seq`.
+    val dump = java.nio.file.Paths.get(tmp("graft-cs-stream-dump"), "changesets.osm")
+    java.nio.file.Files.writeString(dump, diff(
+      """ <changeset id="50" created_at="2024-01-20T10:00:00Z" closed_at="2024-01-20T11:00:00Z" open="false" uid="3" user="cy" num_changes="4"/>
+        | <changeset id="200" created_at="2024-01-20T23:00:00Z" open="true" uid="5" user="amy" num_changes="1"/>""".stripMargin))
+    def loaded(): String = {
+      val store = tmp("graft-cs-stream-dump-store")
+      Cli.main(Array("changesets", dump.toString, store))
+      store
+    }
+    val streamStore = loaded()
+    val batchStore = loaded()
+
+    val q = ChangesetStream.start(spark, diffs, streamStore)
+    try q.processAllAvailable() finally q.stop()
+    ChangesetCatchup.catchUp(spark, diffs, batchStore)
+
+    assert(storeRows(streamStore) === storeRows(batchStore))
+    assert(storeRows(streamStore) === Seq(
+      (50L, "2024-01-20T11:00:00Z", false, 4L),
+      (100L, "2024-01-21T00:02:00Z", false, 7L),
+      (200L, "2024-01-21T00:01:40Z", false, 3L)))
+    assert(ReplicationCatchup.readState(streamStore).map(_.sequenceNumber) === Some(3L))
+    assert(ReplicationCatchup.readState(batchStore).map(_.sequenceNumber) === Some(3L))
+  }
+
   test("one micro-batch spanning multiple diffs folds latest-wins by sequence") {
     val diffs = tmp("graft-cs-stream-diffs2")
     val store = tmp("graft-cs-stream-store2")

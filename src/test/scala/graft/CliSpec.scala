@@ -128,7 +128,7 @@ class CliSpec extends SparkSpec {
         |</osm>""".stripMargin)
     val store = java.nio.file.Files.createTempDirectory("graft-cli-csdb").toString
     Cli.main(Array("changesets", dump.toString, store))
-    val back = graft.sources.ChangesetStore.read(spark, store)
+    val back = graft.sources.ChangesetStore.readAuto(spark, store)
     assert(back.count() === 2)
     assert(back.columns.contains("tags"))
     // the docs/CLI.md geom column: WKB polygon for an extent-carrying

@@ -133,7 +133,7 @@ class IvfIndexSpec extends SparkSpec {
     assert(ChangesetStore.readDeltas(spark, idx, v).isEmpty,
       "compaction must clear the delta entries")
     val paths = ChangesetStore.readManifest(spark, idx, v)
-      .toSeq.map { case (c, cv) => s"$idx/cells/c=$c/v=$cv" }
+      .toSeq.map { case (c, cv) => s"$idx/b=$c/v=$cv" }
     assert(spark.read.parquet(paths: _*)
       .filter(col("vec_id") === 20).count() === 1L)
   }
@@ -143,12 +143,16 @@ class IvfIndexSpec extends SparkSpec {
     val idx = tmp("graft-ivf-obatch")
     IvfIndex.build(spark, corpus.filter(col("vec_id") % 5 =!= 0),
       fixedCentroids(), idx)
+    // the cell files: `b=<cell>/...` at the index root (the locator
+    // store keeps its own buckets under `locator/`)
     def files(): Map[String, Long] = {
-      val root = java.nio.file.Paths.get(idx, "cells")
+      val root = java.nio.file.Paths.get(idx)
       val out = scala.collection.mutable.Map[String, Long]()
       java.nio.file.Files.walk(root).forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-          out(root.relativize(p).toString) = java.nio.file.Files.size(p)
+        val rel = root.relativize(p).toString
+        if (rel.startsWith("b=") && java.nio.file.Files.isRegularFile(p) &&
+          p.toString.endsWith(".parquet"))
+          out(rel) = java.nio.file.Files.size(p)
       }
       out.toMap
     }

@@ -29,12 +29,12 @@ class LshIndexSpec extends SparkSpec {
 
     val idx = tmp("graft-lsh-idx")
     LshIndex.build(spark, corpusSigs, idx, numBuckets = 8)
-    val first = pairs(LshIndex.probe(spark, idx, batchSigs, numBuckets = 8))
+    val first = pairs(LshIndex.probe(spark, idx, batchSigs))
     assert(first.nonEmpty)
     assert(first.exists(_._4), "some pair must reach into the corpus")
 
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged))
-    assert(pairs(LshIndex.probe(spark, idx, batchSigs, numBuckets = 8)) === first)
+    assert(pairs(LshIndex.probe(spark, idx, batchSigs)) === first)
   }
 
   test("rolling increments: yesterday's appended batch is corpus for today's probe") {
@@ -64,8 +64,8 @@ class LshIndexSpec extends SparkSpec {
     // them), identically to an index built on corpus∪day1 in one shot
     val oneShot = tmp("graft-lsh-idx3")
     LshIndex.build(spark, corpus.unionByName(day1), oneShot, numBuckets = 8)
-    val incremental = pairs(LshIndex.probe(spark, idx, day2, numBuckets = 8))
-    assert(incremental === pairs(LshIndex.probe(spark, oneShot, day2, numBuckets = 8)))
+    val incremental = pairs(LshIndex.probe(spark, idx, day2))
+    assert(incremental === pairs(LshIndex.probe(spark, oneShot, day2)))
     // day-2-vs-day-1 pairs exist and count as cross (day1 is corpus now)
     val d21 = incremental.filter(p => (p._1 % 3 == 1) != (p._2 % 3 == 1))
     assert(d21.forall(_._4))
@@ -73,7 +73,7 @@ class LshIndexSpec extends SparkSpec {
     // compaction folds the deltas without changing any probe result
     assert(LshIndex.compact(spark, idx, minDeltas = 1) >
       0, "compact must commit when deltas exist")
-    assert(pairs(LshIndex.probe(spark, idx, day2, numBuckets = 8)) === incremental)
+    assert(pairs(LshIndex.probe(spark, idx, day2)) === incremental)
   }
 
   private def files(dir: String): Map[String, Long] = {

@@ -98,10 +98,10 @@ class OsmUpdaterSpec extends SparkSpec {
     assert(r20.head.getAs[String]("contrib_type") === "GEOMETRY")
 
     // store state advanced: way 10 minor counter persisted, n4→w11 backref
-    val ways = ChangesetStore.readBucketed(spark, s"$root/ways")
+    val ways = ChangesetStore.readAuto(spark, s"$root/ways")
     assert(ways.filter(col("id") === 10).select("minor_version")
       .head().getInt(0) === 1)
-    val nw = ChangesetStore.readBucketed(spark, s"$root/node_ways")
+    val nw = ChangesetStore.readAuto(spark, s"$root/node_ways")
     val n4Parents = nw.filter(col("ref_id") === 4).select("parent_ids").head()
       .getSeq[Long](0)
     assert(n4Parents === Seq(11L))
@@ -228,7 +228,7 @@ class OsmUpdaterSpec extends SparkSpec {
         | </modify>
         |</osmChange>""".stripMargin))
     assert(replay.filter(col("osm_type") === "way").count() === 0)
-    val ways = ChangesetStore.readBucketed(spark, s"$root/ways")
+    val ways = ChangesetStore.readAuto(spark, s"$root/ways")
     assert(ways.filter(col("id") === 10).select("minor_version")
       .head().getInt(0) === 2)
   }
@@ -256,7 +256,7 @@ class OsmUpdaterSpec extends SparkSpec {
     assert(w10.map(_.getAs[Long]("valid_from")).toSeq ===
       Seq(1704067210000L, 1704067240000L))
     // store counter lands on the last minor
-    val ways = ChangesetStore.readBucketed(spark, s"$root/ways")
+    val ways = ChangesetStore.readAuto(spark, s"$root/ways")
     assert(ways.filter(col("id") === 10).select("minor_version")
       .head().getInt(0) === 2)
   }
@@ -308,7 +308,7 @@ class OsmUpdaterSpec extends SparkSpec {
         | </modify>
         |</osmChange>""".stripMargin))
     assert(out.count() === 0, "stale versions must emit nothing")
-    val n1 = ChangesetStore.readBucketed(spark, s"$root/nodes")
+    val n1 = ChangesetStore.readAuto(spark, s"$root/nodes")
       .filter(col("id") === 1).head()
     assert(n1.getAs[Int]("version") === 3, "store must keep the newer version")
     assert(n1.getAs[Double]("lat") === 1.9, "coordinates must not regress")
@@ -348,9 +348,9 @@ class OsmUpdaterSpec extends SparkSpec {
           Map.empty[String, String], Seq(1L), null))),
       entitySchema)
     OsmUpdater.initStore(spark, root, hist)
-    assert(ChangesetStore.readBucketed(spark, s"$root/ways")
+    assert(ChangesetStore.readAuto(spark, s"$root/ways")
       .filter(col("id") === 10).select("edits").head().getLong(0) === 2L)
-    assert(ChangesetStore.readBucketed(spark, s"$root/ways")
+    assert(ChangesetStore.readAuto(spark, s"$root/ways")
       .filter(col("id") === 10).select("version").head().getInt(0) === 2)
   }
 
@@ -402,7 +402,7 @@ class OsmUpdaterSpec extends SparkSpec {
     assert(out.filter(col("osm_type") === "relation" && col("osm_id") === 20 &&
       col("contrib_type") === "GEOMETRY").count() === 1)
     // store: one row for way 10 — version 2, minor 1, ts advanced past T2
-    val ways = ChangesetStore.readBucketed(spark, s"$root/ways")
+    val ways = ChangesetStore.readAuto(spark, s"$root/ways")
       .filter(col("id") === 10).collect()
     assert(ways.length === 1)
     assert(ways.head.getAs[Int]("version") === 2)
@@ -555,7 +555,7 @@ class OsmUpdaterSpec extends SparkSpec {
     assert(w10(2).getAs[Long]("valid_from") === 1704067240000L)
     assert(w10(2).getAs[Long]("length_mm") > 0L, "minor geometry rebuilt on v3 refs")
     // store lands on v3 with minor counter 1
-    val ways = ChangesetStore.readBucketed(spark, s"$root/ways")
+    val ways = ChangesetStore.readAuto(spark, s"$root/ways")
       .filter(col("id") === 10).collect()
     assert(ways.length === 1)
     assert(ways.head.getAs[Int]("version") === 3)

@@ -42,7 +42,7 @@ class WindowIndexSpec extends SparkSpec {
     assert((after -- before.keySet).keySet.forall(_.contains("d=")),
       "append may only add delta files")
 
-    val got = pairs(WindowIndex.probe(spark, idx, batch, numBuckets = 4))
+    val got = pairs(WindowIndex.probe(spark, idx, batch))
     // the one-shot operator over corpus ∪ batch, restricted to pairs
     // with a batch side — the store contract
     val batchIds = Set(10L, 11L, 12L)
@@ -58,7 +58,7 @@ class WindowIndexSpec extends SparkSpec {
 
     // compaction folds deltas without changing any probe result
     assert(WindowIndex.compact(spark, idx, minDeltas = 1) > 0)
-    assert(pairs(WindowIndex.probe(spark, idx, batch, numBuckets = 4)) === got)
+    assert(pairs(WindowIndex.probe(spark, idx, batch)) === got)
   }
 
   private def files(dir: String): Map[String, Long] = {

@@ -47,9 +47,9 @@ class LshIngestStreamSpec extends SparkSpec {
     // batch lifecycle (the reference computation)
     val idxB = tmp("lsh-ingest-batch")
     LshIndex.build(spark, sigsOf(corpus), idxB, numBuckets = 8)
-    val p1 = normPairs(LshIndex.probe(spark, idxB, sigsOf(day1), numBuckets = 8))
+    val p1 = normPairs(LshIndex.probe(spark, idxB, sigsOf(day1)))
     LshIndex.append(spark, sigsOf(day1), idxB, numBuckets = 8)
-    val p2 = normPairs(LshIndex.probe(spark, idxB, sigsOf(day2), numBuckets = 8))
+    val p2 = normPairs(LshIndex.probe(spark, idxB, sigsOf(day2)))
     LshIndex.append(spark, sigsOf(day2), idxB, numBuckets = 8)
 
     // streaming lifecycle over the same index seed
@@ -74,7 +74,7 @@ class LshIngestStreamSpec extends SparkSpec {
     assert(normPairs(feed.filter(col("batch_id") === batches(1))) === p2)
     // index parity: same band rows row-for-row
     def indexRows(idx: String) =
-      LshIndex.rowsFor(spark, idx, sigsOf(docs), numBuckets = 8)
+      LshIndex.rowsFor(spark, idx, sigsOf(docs))
         .select("band", "bkey", "doc_id").collect()
         .map(r => (r.get(0).toString, r.get(1).toString, r.get(2).toString))
         .sorted.toSeq

@@ -70,7 +70,7 @@ class OsmUpdateStreamSpec extends SparkSpec {
 
     // identical store state: way-10 minor counter and timestamps
     def wayRow(root: String) = ChangesetStore
-      .readBucketed(spark, s"$root/ways")
+      .readAuto(spark, s"$root/ways")
       .filter(col("id") === 10)
       .select("version", "minor_version", "edits", "ts_ms")
       .head()

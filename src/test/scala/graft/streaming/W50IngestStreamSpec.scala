@@ -46,9 +46,9 @@ class W50IngestStreamSpec extends SparkSpec {
     // batch lifecycle (the reference computation)
     val idxB = tmp("w50-ingest-batch")
     WindowIndex.build(spark, dfOf(corpus), idxB, numBuckets = 8)
-    val p1 = normPairs(WindowIndex.probe(spark, idxB, dfOf(day1), numBuckets = 8))
+    val p1 = normPairs(WindowIndex.probe(spark, idxB, dfOf(day1)))
     WindowIndex.append(spark, dfOf(day1), idxB, numBuckets = 8)
-    val p2 = normPairs(WindowIndex.probe(spark, idxB, dfOf(day2), numBuckets = 8))
+    val p2 = normPairs(WindowIndex.probe(spark, idxB, dfOf(day2)))
     WindowIndex.append(spark, dfOf(day2), idxB, numBuckets = 8)
     assert(p1.nonEmpty && p2.nonEmpty,
       "fixture must exercise cross-day span pairs")
