@@ -139,8 +139,8 @@ object ChangesetCatchup {
     }
   }
 
-  /** Applies every pending changeset diff in strict sequence order (stops
-    * at a gap — sequences must advance by exactly 1), at most `maxSteps`,
+  /** Applies the pending changeset diffs ([[ReplicationCatchup.pending]]:
+    * strict sequence order, a gap stops the run), at most `maxSteps`,
     * upserting each batch of `batchSize` diffs into the store and then
     * committing the `state.txt` bookmark — the reference's per-batch
     * `upsertChangesets` + `updateLocalState`. A crash between the upsert
@@ -154,15 +154,7 @@ object ChangesetCatchup {
     Files.createDirectories(Paths.get(storeDir))
     var st = readState(storeDir).getOrElse(
       State(estimateStartSequence(spark, diffDir, storeDir), ""))
-    val pending0 = ReplicationCatchup.listDiffs(diffDir, ext = ".osm")
-      .filter(_._1 > st.sequenceNumber)
-      .take(maxSteps)
-    // strict +1 chain from the bookmark — a gap means diffs are missing
-    // upstream; applying past it would silently skip history
-    val pending = pending0.zipWithIndex
-      .takeWhile { case ((seq, _), i) => seq == st.sequenceNumber + i + 1 }
-      .map(_._1)
-    var applied = 0L
+    val pending = ReplicationCatchup.pending(diffDir, ".osm", st.sequenceNumber, maxSteps)
     pending.grouped(batchSize).foreach { batch =>
       // batch materialized once (r15): an upsert onto an existing store
       // consumes it three times (touched-bucket collect, key set, staging
@@ -181,9 +173,8 @@ object ChangesetCatchup {
         if (ts.isNullAt(0)) st.timestamp else ts.getString(0))
       writeState(spark, storeDir, st)
       folded.unpersist(blocking = false)
-      applied += batch.size
     }
-    applied
+    pending.size.toLong
   }
 
   /** Driver-checked key `cs_catchup`: the sequenced catch-up loop under

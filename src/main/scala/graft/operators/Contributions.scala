@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -126,6 +126,61 @@ object Contributions {
        |   + 1000000000000000000000)
        |  // 2000000000000000000000 AS BIGINT) END""".stripMargin
 
+  // ---- contribution rules shared by every derivation path ---------------
+
+  /** Contribution type of one version against its predecessor, in the
+    * exact decision order of ContributionsAvroConverter.java:167-180:
+    * not visible → DELETION; predecessor absent or not visible → CREATION;
+    * else the "_"-join of TAG (tags changed) and GEOMETRY (geometry
+    * changed), "" when neither did. Each caller states its own change
+    * predicates; a null predicate counts as unchanged.
+    */
+  def contribType(visible: Column, prevVisible: Column,
+      tagsChanged: Column, geomChanged: Column): Column =
+    when(!visible, "DELETION")
+      .when(prevVisible.isNull || !prevVisible, "CREATION")
+      .otherwise(concat_ws("_", when(tagsChanged, "TAG"), when(geomChanged, "GEOMETRY")))
+
+  /** A way version whose refs do not all resolve to a node position:
+    * the reference marks such geometries invalid (GeometryBuilder
+    * missing-member handling) instead of emitting a shortened line.
+    * `nPts` is the number of resolved refs (null: none resolved).
+    */
+  private[graft] def wayIncomplete(refs: Column, nPts: Column): Column =
+    size(coalesce(refs, array())) > 0 && coalesce(nPts, lit(0)) < size(refs)
+
+  /** Geometry shape of one way version (ContributionGeometry.wayGeometry)
+    * over its resolved ref positions `xs`/`ys` (ref order, `nPts` of
+    * them): null when incomplete or nothing resolved; "Polygon" for a
+    * closed way whose tags pass the osm-polygon-features ruleset
+    * ([[graft.functions.PolygonFeatures.isArea]]) and whose ring has ≥ 4
+    * points (JTS LinearRing.MINIMUM_VALID_SIZE) and does not intersect
+    * itself (the reference's geom.isValid gate; the kernel takes the OPEN
+    * ring, so the closing vertex comes off); "Point" when the refs resolve
+    * to one point (wayGeometry:152-155); "LineString" otherwise.
+    */
+  private[graft] def wayShape(tags: Column, refs: Column, nPts: Column,
+      xs: Column, ys: Column): Column =
+    when(wayIncomplete(refs, nPts), lit(null))
+      .when(graft.functions.PolygonFeatures.isArea(tags, refs) && nPts >= 4 &&
+        !call_function("ring_self_intersects",
+          slice(xs, lit(1), size(xs) - 1), slice(ys, lit(1), size(ys) - 1)), "Polygon")
+      .when(nPts === 1, "Point")
+      .when(nPts.isNotNull, "LineString")
+
+  /** WKB of a [[wayShape]]: null for a null shape. */
+  private[graft] def wayWkb(shape: Column, xs: Column, ys: Column): Column =
+    when(shape === "Polygon", call_function("wkb_poly", xs, ys))
+      .when(shape === "Point", call_function("wkb_point", element_at(xs, 1), element_at(ys, 1)))
+      .when(shape === "LineString", call_function("wkb_line", xs, ys))
+
+  /** Node coordinate-range guard: out-of-bounds or missing lon/lat gets no
+    * geometry (ContributionGeometry.invalid:187-189 → EMPTY point; null is
+    * this engine's no-geometry convention).
+    */
+  private[graft] def nodeInRange(lat: Column, lon: Column): Column =
+    lat.isNotNull && !isnan(lat) && abs(lat) <= 90.0 && abs(lon) <= 180.0
+
   /** Flagship contribution assembly at full reference row width
     * (contrib.avsc). Deliberately excluded from the schema: `build_time`
     * — the avsc field is a wall-clock stamp of the pipeline run itself,
@@ -166,12 +221,8 @@ object Contributions {
       .withColumn("prev_visible", lag("visible", 1).over(byEntity))
       .withColumn("prev_props", lag("props", 1).over(byEntity))
       .withColumn("prev_value", lag("value", 1).over(byEntity))
-      .withColumn("contrib_type",
-        when(!col("visible"), "DELETION")
-          .when(col("prev_visible").isNull || !col("prev_visible"), "CREATION")
-          .otherwise(concat_ws("_",
-            when(col("props") =!= col("prev_props"), "TAG"),
-            when(col("value") =!= col("prev_value"), "GEOMETRY"))))
+      .withColumn("contrib_type", contribType(col("visible"), col("prev_visible"),
+        col("props") =!= col("prev_props"), col("value") =!= col("prev_value")))
       // entity totals (osm_edits / osm_last_edit)
       .withColumn("osm_edits", count(lit(1)).over(entityAll))
       .withColumn("osm_last_edit", max("ts_us").over(entityAll))
@@ -303,12 +354,8 @@ object Contributions {
       .withColumn("geom_changed",
         (col("lat") =!= col("prev_lat")) || (col("lon") =!= col("prev_lon")) ||
           (col("refs") =!= col("prev_refs")))
-      .withColumn("contrib_type",
-        when(!col("visible"), "DELETION")
-          .when(col("prev_visible").isNull || !col("prev_visible"), "CREATION")
-          .otherwise(concat_ws("_",
-            when(col("tags_changed"), "TAG"),
-            when(coalesce(col("geom_changed"), lit(false)), "GEOMETRY"))))
+      .withColumn("contrib_type", contribType(col("visible"), col("prev_visible"),
+        col("tags_changed"), col("geom_changed")))
       .withColumn("status",
         when(!col("visible"), "deleted")
           .when(col("valid_to").isNotNull, "history")
@@ -363,66 +410,30 @@ object Contributions {
         Window.partitionBy("way_id", "way_version", "pos")
           .orderBy(desc("node_ts"), desc("node_version"))))
       .filter(col("rk") === 1)
-    val wayWkb = asOf
+    val wayPts = asOf
       .groupBy("way_id", "way_version")
       .agg(sort_array(collect_list(struct(col("pos"), col("n_lon"), col("n_lat")))).as("pts"))
       .select(col("way_id"), col("way_version"),
         expr("transform(pts, p -> p.n_lon)").as("way_xs"),
         expr("transform(pts, p -> p.n_lat)").as("way_ys"),
         size(col("pts")).as("resolved_pts"))
-      .withColumn("way_wkb", call_function("wkb_line", col("way_xs"), col("way_ys")))
-      // a resolved ring is polygon-capable when it has ≥ 4 points (JTS
-      // LinearRing.MINIMUM_VALID_SIZE — the reference's isValidLineRing)
-      // and does not self-intersect (the reference's geom.isValid gate);
-      // the kernel takes the OPEN ring, so the closing vertex comes off
-      .withColumn("way_ring_ok",
-        col("resolved_pts") >= 4 &&
-          !call_function("ring_self_intersects",
-            expr("slice(way_xs, 1, size(way_xs) - 1)"),
-            expr("slice(way_ys, 1, size(way_ys) - 1)")))
     base
-      .join(wayWkb,
-        base("osm_id") === wayWkb("way_id") &&
-          base("osm_version") === wayWkb("way_version"), "left")
-      // a ref with NO node version at/before valid_from would silently
-      // shorten the linestring — the reference marks such geometries
-      // invalid (GeometryBuilder missing-member handling) rather than
-      // emitting a shifted line, so: null the wkb and flag the row
+      .join(wayPts,
+        base("osm_id") === wayPts("way_id") &&
+          base("osm_version") === wayPts("way_version"), "left")
       .withColumn("geom_incomplete",
-        col("osm_type") === "way" && size(coalesce(col("refs"), array())) > 0 &&
-          coalesce(col("resolved_pts"), lit(0)) < size(col("refs")))
-      // closed ways whose tags pass the osm-polygon-features ruleset are
-      // AREAS — Polygon WKB, not LineString (ContributionGeometry
-      // .wayGeometry's isArea branch; ruleset in functions.PolygonFeatures)
-      .withColumn("way_is_area",
-        col("osm_type") === "way" &&
-          graft.functions.PolygonFeatures.isArea(col("tags"), col("refs")) &&
-          coalesce(col("way_ring_ok"), lit(false)))
-      // node coordinate-range guard: out-of-bounds lon/lat gets no
-      // geometry (ContributionGeometry.invalid:187-189 → EMPTY point;
-      // null is this engine's no-geometry convention)
-      .withColumn("node_ok",
-        col("osm_type") === "node" && col("lat").isNotNull &&
-          !isnan(col("lat")) && abs(col("lat")) <= 90.0 && abs(col("lon")) <= 180.0)
+        col("osm_type") === "way" && wayIncomplete(col("refs"), col("resolved_pts")))
+      .withColumn("node_ok", col("osm_type") === "node" && nodeInRange(col("lat"), col("lon")))
+      .withColumn("way_shape", wayShape(col("tags"), col("refs"), col("resolved_pts"),
+        col("way_xs"), col("way_ys")))
       .withColumn("wkb",
         when(col("node_ok"), call_function("wkb_point", col("lon"), col("lat")))
           .when(col("osm_type") === "node", lit(null))
-          .when(col("geom_incomplete"), lit(null))
-          .when(col("way_is_area"),
-            call_function("wkb_poly", col("way_xs"), col("way_ys")))
-          // a way whose refs all resolve to ONE point can't be a line —
-          // the reference falls back to Point (wayGeometry:152-155)
-          .when(col("resolved_pts") === 1,
-            call_function("wkb_point",
-              element_at(col("way_xs"), 1), element_at(col("way_ys"), 1)))
-          .otherwise(col("way_wkb")))
+          .otherwise(wayWkb(col("way_shape"), col("way_xs"), col("way_ys"))))
       .withColumn("geometry_type",
         when(col("node_ok"), "Point")
           .when(col("osm_type") === "node", lit(null))
-          .when(col("geom_incomplete"), lit(null))
-          .when(col("way_is_area"), "Polygon")
-          .when(col("resolved_pts") === 1, "Point")
-          .when(col("way_wkb").isNotNull, "LineString"))
+          .otherwise(col("way_shape")))
       // deleted contributions carry the PREVIOUS version's geometry
       // (docs/faq.md "How can I filter for deleted OSM elements?": raw
       // OSM provides no geometry for deleted versions, so the reference
@@ -440,9 +451,8 @@ object Contributions {
             .orderBy("osm_version")))
           .otherwise(col("wkb")))
       .withColumn("geom_valid", !col("geom_incomplete"))
-      .drop("way_id", "way_version", "way_wkb", "way_xs", "way_ys",
-        "way_ring_ok", "way_is_area", "node_ok", "resolved_pts",
-        "geom_incomplete")
+      .drop("way_id", "way_version", "way_xs", "way_ys", "way_shape",
+        "node_ok", "resolved_pts", "geom_incomplete")
   }
 
   /** Per-member geometry structs for RELATION rows — the docs'

@@ -101,10 +101,9 @@ object History {
       .orderBy("change")
   }
 
-  /** CREATION / TAG / GEOMETRY / TAG_GEOMETRY / DELETION classification —
-    * exact decision order of ContributionsAvroConverter.java:167-180:
-    * not-visible → DELETION; previous absent-or-not-visible → CREATION;
-    * else join("_") of TAG (tags changed) and GEOMETRY (geometry changed).
+  /** CREATION / TAG / GEOMETRY / TAG_GEOMETRY / DELETION classification
+    * per event ([[Contributions.contribType]]): props change = TAG, value
+    * change = GEOMETRY.
     */
   def histContribType(s: SparkSession, dir: String): DataFrame = {
     val e = withTsUs(Tables.events(s, dir))
@@ -112,12 +111,8 @@ object History {
       .withColumn("prev_visible", lag("visible", 1).over(byEntity))
       .withColumn("prev_props", lag("props", 1).over(byEntity))
       .withColumn("prev_value", lag("value", 1).over(byEntity))
-    e.withColumn("contrib_type",
-        when(!col("visible"), "DELETION")
-          .when(col("prev_visible").isNull || !col("prev_visible"), "CREATION")
-          .otherwise(concat_ws("_",
-            when(col("props") =!= col("prev_props"), "TAG"),
-            when(col("value") =!= col("prev_value"), "GEOMETRY"))))
+    e.withColumn("contrib_type", Contributions.contribType(col("visible"), col("prev_visible"),
+        col("props") =!= col("prev_props"), col("value") =!= col("prev_value")))
       .select(col("event_id"), col("user_id").as("osm_id"), col("contrib_type"))
   }
 

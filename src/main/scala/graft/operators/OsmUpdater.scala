@@ -26,6 +26,24 @@ import org.apache.spark.sql.types._
   *  5. the persistent store (latest entity versions + backref tables) is
   *     upserted so the next diff sees this one's state.
   *
+  * One rule set with the batch path: contribution types come from
+  * [[Contributions.contribType]]; way geometry from
+  * [[Contributions.wayShape]] / [[Contributions.wayWkb]] (null if a ref is
+  * unresolved, Polygon for a valid closed area, Point for one resolved
+  * point, else LineString) over the refs' as-of positions; node geometry
+  * from the [[Contributions.nodeInRange]] guard; relation geometry from
+  * the [[RelationGeometry]] ring assembly. Within this object, the majors
+  * of every entity type come from one step ([[majorsOf]]), way and
+  * relation minors from one step ([[minorsOf]]), ref positions from one
+  * as-of resolver ([[resolveRefs]]), emitted rows from one projection
+  * ([[emit]]) and way and relation store rows from one builder
+  * ([[parentRows]]).
+  *
+  * One known divergence from the batch path remains: an update-path
+  * DELETION row carries a null geometry, where
+  * [[Contributions.withGeometries]] carries the previous version's. The
+  * store keeps no geometry to carry forward.
+  *
   * Where the reference keeps RocksDB maps (UpdateStoreRocksDb.java) because
   * a single JVM cannot shuffle, the Spark store is six bucketed parquet
   * tables ([[graft.sources.ChangesetStore]] layout: hash buckets +
@@ -162,30 +180,11 @@ object OsmUpdater {
     osc.withColumn("ts_ms", unix_millis(to_timestamp(col("ts"))))
       .withColumn("visible", col("action") =!= "delete")
 
-  /** Classification of a (before ∪ new) version timeline, shared by all
-    * three entity types — the ContributionsAvroConverter contribution-type
-    * rules (CREATION / DELETION / TAG / GEOMETRY / TAG_GEOMETRY) applied
-    * per entity id in version order. `geomCols` defines what counts as a
-    * geometry change for the type (node: coordinates, way: refs,
-    * relation: members).
+  /** A contribution that moves geometry: it drives its parents' minor
+    * versions.
     */
-  private def classify(timeline: DataFrame, geomChanged: Column): DataFrame = {
-    val w = Window.partitionBy("id").orderBy("version", "ts_ms")
-    timeline
-      .withColumn("prev_visible", lag("visible", 1).over(w))
-      .withColumn("prev_tags", lag("tags", 1).over(w))
-      .withColumn("prev_ts", lag("ts_ms", 1).over(w))
-      .withColumn("tags_changed",
-        array_sort(map_entries(coalesce(col("tags"), map()))) =!=
-          array_sort(map_entries(coalesce(col("prev_tags"), map()))))
-      .withColumn("geom_changed", geomChanged)
-      .withColumn("contrib_type",
-        when(!col("visible"), "DELETION")
-          .when(col("prev_visible").isNull || !col("prev_visible"), "CREATION")
-          .otherwise(concat_ws("_",
-            when(col("tags_changed"), "TAG"),
-            when(coalesce(col("geom_changed"), lit(false)), "GEOMETRY"))))
-  }
+  private val geometryEdit: Column =
+    col("contrib_type").contains("GEOMETRY") || col("contrib_type").isin("CREATION", "DELETION")
 
   /** Applies one diff: emits the contribution rows it causes (node majors,
     * way majors + backref-propagated way minors, relation majors +
@@ -201,36 +200,12 @@ object OsmUpdater {
       .select(col("id"), col("version"), col("ts_ms"), col("visible"),
         col("lat"), col("lon"), col("tags"),
         col("changeset"), col("uid"), col("user"))
-    val dnIds = dn.select("id")
-    val beforeN = readFor(spark, dir(root, "nodes"), nodeSchema, dnIds, "id")
+    val beforeN = readFor(spark, dir(root, "nodes"), nodeSchema, dn.select("id"), "id")
       .localCheckpoint(true)
-
-    val nodeTl = beforeN
-      .withColumn("is_new", lit(false))
-      .withColumn("changeset", lit(null).cast(LongType))
-      .withColumn("uid", lit(null).cast(LongType))
-      .withColumn("user", lit(null).cast(StringType))
-      .unionByName(dn.withColumn("is_new", lit(true)))
-    val nodeClassified = classify(nodeTl,
-      (col("lat") =!= lag("lat", 1).over(Window.partitionBy("id").orderBy("version", "ts_ms"))) ||
-        (col("lon") =!= lag("lon", 1).over(Window.partitionBy("id").orderBy("version", "ts_ms"))))
-      .localCheckpoint(true)
-    val nodeContribs = nodeClassified
-      .filter(col("is_new"))
-      // deleted with no known before-version: skip (ContributionUpdater
-      // .filter:346-349)
-      .filter(!(col("contrib_type") === "DELETION" && col("prev_visible").isNull))
-      // versions at or below the stored one were already applied — a diff
-      // replay after a crash must emit nothing (filter:352-359)
-      .join(broadcast(beforeN.select(col("id"), col("version").as("before_version"))),
-        Seq("id"), "left")
-      .filter(col("before_version").isNull || col("version") > col("before_version"))
-      .drop("before_version")
+    val nodeMajors = majorsOf(beforeN, dn, Seq("lat", "lon"))
 
     // coordinate-affecting node edits drive way/relation minors
-    val nodeEdits = nodeContribs
-      .filter(col("contrib_type").contains("GEOMETRY") ||
-        col("contrib_type") === "CREATION" || col("contrib_type") === "DELETION")
+    val nodeEdits = nodeMajors.filter(geometryEdit)
       .select(col("id").as("node_id"), col("ts_ms").as("edit_ts"))
       .localCheckpoint(true)
     val editNodeIds = nodeEdits.select(col("node_id").as("ref_id"))
@@ -241,272 +216,96 @@ object OsmUpdater {
         col("tags"), col("refs"),
         col("changeset"), col("uid"), col("user"))
       .localCheckpoint(true)
-    val dwIds = dw.select("id")
 
     // NODE→WAY backrefs of edited nodes → candidate minor ways; the stored
     // rows of diff ways and candidates are read in one lookup
     val nodeWayRefs = readFor(spark, dir(root, "node_ways"), backrefSchema,
       editNodeIds, "ref_id").localCheckpoint(true)
-    val wayLookupIds = dwIds.unionByName(
+    val wayLookupIds = dw.select("id").unionByName(
       nodeWayRefs.select(explode(col("parent_ids")).as("id")))
     val beforeW = readFor(spark, dir(root, "ways"), waySchema, wayLookupIds, "id")
       .localCheckpoint(true)
+    val wayMajors = majorsOf(beforeW, dw, Seq("refs"))
 
-    // way MAJOR rows from the diff, classified against the stored before
-    val wayTl = beforeW
-      .select(col("id"), col("version"), col("ts_ms"), col("visible"),
-        col("tags"), col("refs"))
-      .withColumn("is_new", lit(false))
-      .withColumn("changeset", lit(null).cast(LongType))
-      .withColumn("uid", lit(null).cast(LongType))
-      .withColumn("user", lit(null).cast(StringType))
-      .unionByName(dw.withColumn("is_new", lit(true)))
-    val wayMajors = classify(wayTl,
-      col("refs") =!= lag("refs", 1).over(Window.partitionBy("id").orderBy("version", "ts_ms")))
-      .filter(col("is_new"))
-      .filter(!(col("contrib_type") === "DELETION" && col("prev_visible").isNull))
-      .join(broadcast(beforeW.select(col("id"), col("version").as("before_version"))),
-        Seq("id"), "left")
-      .filter(col("before_version").isNull || col("version") > col("before_version"))
-      .drop("before_version")
-      .withColumn("osm_minor_version", lit(0))
-      .localCheckpoint(true)
-
-    // way MINOR rows: one per (way, geometry-change instant); minor number
-    // continues from the stored counter (getContribs:396-399). ONE rule
-    // for every way, diff-resident or not: minors attach to the way's
-    // EFFECTIVE state (stored row, overridden by its newest diff major)
-    // and only for edits strictly after that state's timestamp — so a
-    // same-diff major of any kind (tag-only, refs change, creation)
-    // receives post-major node edits as minors on its new version, while
-    // edits at/before the major fold into the major's own as-of rebuild
-    // (the intermediate old-version minor row is elided — a documented
-    // divergence from a full-history rebuild, bounded to intra-diff
-    // ordering).
-    val wayMajorLatest = latestMajorState(wayMajors, beforeW,
-      Seq("ts_ms", "visible", "tags", "refs"))
-    val effectiveW = beforeW
-      .join(broadcast(wayMajorLatest.select("id")), Seq("id"), "left_anti")
-      .unionByName(wayMajorLatest)
-      .localCheckpoint(true)
-    val minorCand = nodeEdits
+    // way MINOR rows: one per (way, geometry-change instant) of a member
+    // node, on the way's effective state (see minorsOf)
+    val effectiveW = effectiveState(wayMajors, beforeW)
+    val wayMinors = minorsOf(nodeEdits
       .join(nodeWayRefs.select(col("ref_id").as("node_id"),
         explode(col("parent_ids")).as("id")), Seq("node_id"))
-      .join(effectiveW.filter(col("visible"))
-        .select(col("id"), col("ts_ms"), col("refs")), Seq("id"))
+      .join(effectiveW.filter(col("visible")).select(col("id"), col("refs")), Seq("id"))
       .filter(array_contains(col("refs"), col("node_id")))
-      .filter(col("edit_ts") > col("ts_ms"))
-      // one minor per (way, instant) — dedupe BEFORE rejoining the stored
-      // row (map-typed tags cannot be part of a distinct)
-      .select(col("id"), col("edit_ts")).distinct()
-      .join(effectiveW.filter(col("visible")), Seq("id"))
-    val wayMinors = minorCand
-      .withColumn("osm_minor_version", col("minor_version") +
-        row_number().over(Window.partitionBy("id").orderBy("edit_ts")))
-      .withColumn("contrib_type", lit("GEOMETRY"))
-      .localCheckpoint(true)
+      .select(col("id"), col("edit_ts")), effectiveW)
 
-    // geometry rebuild for every emitted way row (major + minor): member
-    // coordinates as of the row's timestamp, from stored node latest ∪
-    // diff node versions — the computeWithGeometry as-of shape
-    val wayRowsForGeom = wayMajors.filter(col("visible"))
+    // geometry of every emitted visible way row (major + minor): member
+    // coordinates as of the row's instant, from stored node latest ∪ diff
+    // node versions — the computeWithGeometry as-of shape
+    val wayVersions = wayMajors.unionByName(wayMinors, allowMissingColumns = true)
+    val wayRowsForGeom = wayVersions.filter(col("visible"))
       .select(col("id"), col("version"), col("osm_minor_version"),
-        col("ts_ms").as("row_ts"), col("refs"))
-      .unionByName(wayMinors.select(col("id"), col("version"),
-        col("osm_minor_version"), col("edit_ts").as("row_ts"), col("refs")))
-    val refIds = wayRowsForGeom.select(explode(col("refs")).as("id"))
-    // the as-of candidate set keeps DELETE rows (visible=false): a node
-    // deleted in this very diff must win the rank for times at/after the
-    // deletion so the ref counts as unresolved, not silently resolve to
-    // its stale pre-delete coordinates from the not-yet-updated store
-    val refNodes = readFor(spark, dir(root, "nodes"), nodeSchema, refIds, "id")
-      .select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-        col("version").as("node_version"),
-        col("lon"), col("lat"), col("visible").as("vis"))
-      .unionByName(dn
-        .select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-          col("version").as("node_version"),
-          col("lon"), col("lat"), col("visible").as("vis")))
-    val asOf = wayRowsForGeom
-      .select(col("id"), col("version"), col("osm_minor_version"), col("row_ts"),
-        size(col("refs")).as("n_refs"),
-        posexplode(col("refs")).as(Seq("pos", "node_id")))
-      .join(refNodes, Seq("node_id"))
-      .filter(col("node_ts") <= col("row_ts"))
-      // desc(node_version) tie-break: same-timestamp node versions occur
-      // in minutely diffs — rank-1 must be deterministic (the batch
-      // assembly's rule, Contributions.scala:329)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id", "version", "osm_minor_version", "pos")
-          .orderBy(desc("node_ts"), desc("node_version"))))
-      .filter(col("rk") === 1)
-      // refs whose winning as-of row is a deletion (or has no coordinates)
-      // drop out here — n_pts < n_refs then nulls the geometry below
-      .filter(col("vis") && !isnan(col("lat")) && !isnan(col("lon")))
-    // a ref with no resolvable visible node version (e.g. the referenced
-    // node was deleted or not yet known) must NOT silently shorten the
-    // linestring — null the geometry instead, the same invalid-flag
-    // contract as the batch assembly (Contributions.withGeometries)
-    val wayGeoms = asOf
-      .groupBy("id", "version", "osm_minor_version")
-      .agg(count(lit(1)).as("n_pts"), first("row_ts").as("row_ts"),
-        first("n_refs").as("n_refs"),
-        sort_array(collect_list(struct(col("pos"), col("lon"), col("lat")))).as("pts"))
-      .withColumn("complete", col("n_pts") === col("n_refs"))
-      .withColumn("wkb", when(col("complete"), call_function("wkb_line",
-        expr("transform(pts, p -> p.lon)"), expr("transform(pts, p -> p.lat)"))))
-      .withColumn("length_mm", when(col("complete"), call_function("geodesic_length_mm",
-        expr("transform(pts, p -> p.lon)"), expr("transform(pts, p -> p.lat)"))))
-      .select("id", "version", "osm_minor_version", "n_pts", "wkb", "length_mm")
+        col("valid_from").as("row_ts"), col("refs"))
+    val wayPts = resolveRefs(wayRowsForGeom, VersionKey, "refs",
+      readFor(spark, dir(root, "nodes"), nodeSchema,
+        wayRowsForGeom.select(explode(col("refs")).as("id")), "id"), dn)
 
     // ---------------- relations ----------------
     val dr = diff.filter(col("osm_type") === "relation")
       .select(col("id"), col("version"), col("ts_ms"), col("visible"),
         col("tags"), col("refs"), col("ref_types"),
         col("changeset"), col("uid"), col("user"))
-    val drIds = dr.select("id")
 
-    val changedWayIdsAll = wayMajors.select(col("id").as("ref_id"))
-      .unionByName(wayMinors.select(col("id").as("ref_id")))
     val nodeRelRefs = readFor(spark, dir(root, "node_relations"), backrefSchema,
       editNodeIds, "ref_id").localCheckpoint(true)
     val wayRelRefs = readFor(spark, dir(root, "way_relations"), backrefSchema,
-      changedWayIdsAll, "ref_id").localCheckpoint(true)
+      wayVersions.select(col("id").as("ref_id")), "ref_id").localCheckpoint(true)
 
-    val relLookupIds = drIds
+    val relLookupIds = dr.select("id")
       .unionByName(nodeRelRefs.select(explode(col("parent_ids")).as("id")))
       .unionByName(wayRelRefs.select(explode(col("parent_ids")).as("id")))
     val beforeR = readFor(spark, dir(root, "relations"), relSchema, relLookupIds, "id")
       .localCheckpoint(true)
-
-    val relTl = beforeR
-      .select(col("id"), col("version"), col("ts_ms"), col("visible"),
-        col("tags"), col("refs"), col("ref_types"))
-      .withColumn("is_new", lit(false))
-      .withColumn("changeset", lit(null).cast(LongType))
-      .withColumn("uid", lit(null).cast(LongType))
-      .withColumn("user", lit(null).cast(StringType))
-      .unionByName(dr.withColumn("is_new", lit(true)))
-    val relMajors = classify(relTl,
-      col("refs") =!= lag("refs", 1).over(Window.partitionBy("id").orderBy("version", "ts_ms")))
-      .filter(col("is_new"))
-      .filter(!(col("contrib_type") === "DELETION" && col("prev_visible").isNull))
-      .join(broadcast(beforeR.select(col("id"), col("version").as("before_version"))),
-        Seq("id"), "left")
-      .filter(col("before_version").isNull || col("version") > col("before_version"))
-      .drop("before_version")
-      .withColumn("osm_minor_version", lit(0))
-      .localCheckpoint(true)
+    val relMajors = majorsOf(beforeR, dr, Seq("refs"))
 
     // relation minors: member-node edits + member-way changes (major and
     // node-induced minor alike — a tag-only way major propagates through
     // its own minors, emitted above), excluding relations whose diff
     // major already carries the change
-    val wayChangeTs = wayMajors
-      .filter(col("contrib_type").contains("GEOMETRY") ||
-        col("contrib_type") === "CREATION" || col("contrib_type") === "DELETION")
+    val wayChangeTs = wayMajors.filter(geometryEdit)
       .select(col("id").as("ref_id"), col("ts_ms").as("edit_ts"))
-      .unionByName(wayMinors.select(col("id").as("ref_id"),
-        col("edit_ts")))
-    val relMajorLatest = latestMajorState(relMajors, beforeR,
-      Seq("ts_ms", "visible", "tags", "refs", "ref_types"))
-    val effectiveR = beforeR
-      .join(broadcast(relMajorLatest.select("id")), Seq("id"), "left_anti")
-      .unionByName(relMajorLatest)
-      .localCheckpoint(true)
-    val relEditEvents = nodeEdits
+      .unionByName(wayMinors.select(col("id").as("ref_id"), col("valid_from").as("edit_ts")))
+    val relMinors = minorsOf(nodeEdits
       .withColumnRenamed("node_id", "ref_id")
       .join(nodeRelRefs, Seq("ref_id"))
       .select(explode(col("parent_ids")).as("id"), col("edit_ts"))
       .unionByName(wayChangeTs
         .join(wayRelRefs, Seq("ref_id"))
-        .select(explode(col("parent_ids")).as("id"), col("edit_ts")))
-      .distinct()
-    val relMinors = relEditEvents
-      .join(effectiveR.filter(col("visible")), Seq("id"))
-      .filter(col("edit_ts") > col("ts_ms"))
-      .withColumn("osm_minor_version", col("minor_version") +
-        row_number().over(Window.partitionBy("id").orderBy("edit_ts")))
-      .withColumn("contrib_type", lit("GEOMETRY"))
-      .localCheckpoint(true)
+        .select(explode(col("parent_ids")).as("id"), col("edit_ts"))),
+      effectiveState(relMajors, beforeR))
 
     // relation geometry: multipolygon assembly for every emitted visible
-    // relation row — the ContributionUpdater.updateRelation analog
-    // (ContributionUpdater.java:101-121): member ways resolve as-of the
-    // row's instant (store ∪ diff), their node refs resolve as-of the same
-    // instant, and the batch ring-stitch machinery ([[RelationGeometry]])
-    // assembles the rings, so the update path's WKB is byte-equal to the
-    // batch path's by construction
-    val relRowsForGeom = relMajors.filter(col("visible"))
+    // relation row (see relationGeoms)
+    val relVersions = relMajors.unionByName(relMinors, allowMissingColumns = true)
+    val relGeoms = relationGeoms(spark, root, relVersions.filter(col("visible"))
       .select(col("id"), col("version"), col("osm_minor_version"),
-        col("ts_ms").as("row_ts"), col("refs"), col("ref_types"))
-      .unionByName(relMinors.select(col("id"), col("version"),
-        col("osm_minor_version"), col("edit_ts").as("row_ts"),
-        col("refs"), col("ref_types")))
-    val relGeoms = relationGeoms(spark, root, relRowsForGeom, dw, dn)
+        col("valid_from").as("row_ts"), col("refs"), col("ref_types")), dw, dn)
 
     // ---------------- emitted contributions ----------------
     val out =
-      nodeContribs.select(
-        lit("node").as("osm_type"), col("id").as("osm_id"),
-        col("version").as("osm_version"), lit(0).as("osm_minor_version"),
-        col("ts_ms").as("valid_from"), col("contrib_type"), col("tags"),
-        col("changeset"), col("uid"), col("user"),
-        when(!isnan(col("lon")), col("lon")).as("lon"),
-        when(!isnan(col("lat")), col("lat")).as("lat"),
+      emit("node", nodeMajors,
         // deletions carry no coordinates (the osc parser fills NaN) — a
         // NaN-encoding WKB point is garbage, null is the contract
-        when(col("visible") && !isnan(col("lon")) && !isnan(col("lat")),
-          call_function("wkb_point", col("lon"), col("lat"))).as("wkb"),
-        lit(null).cast(LongType).as("length_mm"))
-      .unionByName(
-        wayMajors.join(wayGeoms.drop("n_pts"),
-            Seq("id", "version", "osm_minor_version"), "left")
-          .select(
-            lit("way").as("osm_type"), col("id").as("osm_id"),
-            col("version").as("osm_version"), col("osm_minor_version"),
-            col("ts_ms").as("valid_from"), col("contrib_type"), col("tags"),
-            col("changeset"), col("uid"), col("user"),
-            lit(null).cast(DoubleType).as("lon"),
-            lit(null).cast(DoubleType).as("lat"),
-            col("wkb"), col("length_mm")))
-      .unionByName(
-        wayMinors.join(wayGeoms.drop("n_pts"),
-            Seq("id", "version", "osm_minor_version"), "left")
-          .select(
-            lit("way").as("osm_type"), col("id").as("osm_id"),
-            col("version").as("osm_version"), col("osm_minor_version"),
-            col("edit_ts").as("valid_from"), col("contrib_type"), col("tags"),
-            lit(null).cast(LongType).as("changeset"),
-            lit(null).cast(LongType).as("uid"),
-            lit(null).cast(StringType).as("user"),
-            lit(null).cast(DoubleType).as("lon"),
-            lit(null).cast(DoubleType).as("lat"),
-            col("wkb"), col("length_mm")))
-      .unionByName(
-        relMajors.join(relGeoms, Seq("id", "version", "osm_minor_version"), "left")
-          .select(
-            lit("relation").as("osm_type"), col("id").as("osm_id"),
-            col("version").as("osm_version"), col("osm_minor_version"),
-            col("ts_ms").as("valid_from"), col("contrib_type"), col("tags"),
-            col("changeset"), col("uid"), col("user"),
-            lit(null).cast(DoubleType).as("lon"),
-            lit(null).cast(DoubleType).as("lat"),
-            col("rel_wkb").as("wkb"),
-            lit(null).cast(LongType).as("length_mm")))
-      .unionByName(
-        relMinors.join(relGeoms, Seq("id", "version", "osm_minor_version"), "left")
-          .select(
-            lit("relation").as("osm_type"), col("id").as("osm_id"),
-            col("version").as("osm_version"), col("osm_minor_version"),
-            col("edit_ts").as("valid_from"), col("contrib_type"), col("tags"),
-            lit(null).cast(LongType).as("changeset"),
-            lit(null).cast(LongType).as("uid"),
-            lit(null).cast(StringType).as("user"),
-            lit(null).cast(DoubleType).as("lon"),
-            lit(null).cast(DoubleType).as("lat"),
-            col("rel_wkb").as("wkb"),
-            lit(null).cast(LongType).as("length_mm")))
+        wkb = when(col("visible") && Contributions.nodeInRange(col("lat"), col("lon")),
+          call_function("wkb_point", col("lon"), col("lat"))),
+        lon = when(!isnan(col("lon")), col("lon")),
+        lat = when(!isnan(col("lat")), col("lat")))
+      .unionByName(emit("way", wayVersions.join(wayPts, VersionKey, "left")
+          .withColumn("shape", Contributions.wayShape(col("tags"), col("refs"), col("n_pts"),
+            col("lons"), col("lats"))),
+        wkb = Contributions.wayWkb(col("shape"), col("lons"), col("lats")),
+        lengthMm = when(col("n_pts") === col("n_refs"),
+          call_function("geodesic_length_mm", col("lons"), col("lats")))))
+      .unionByName(emit("relation", relVersions.join(relGeoms, VersionKey, "left"),
+        wkb = col("rel_wkb")))
       .localCheckpoint(true)
 
     // commit order: emitted contributions reach the caller's sink BEFORE
@@ -521,45 +320,169 @@ object OsmUpdater {
     out
   }
 
-  /** Newest diff major per entity — REGARDLESS of visibility — as a
-    * store-row-shaped frame (version reset to minor 0, edit counter carried
-    * from the store): the override half of the effective-state union that
-    * minor candidacy attaches to. A same-diff DELETION major must win this
-    * rank (carrying `visible = false`) so the downstream
-    * `effective.filter(visible)` guards suppress member-edit minors after
-    * the deletion — the reference's timeline processing emits nothing for
-    * an element past its deletion, and the common delete-way-plus-its-nodes
-    * changeset would otherwise fabricate GEOMETRY minors on the stored
-    * pre-delete row.
+  /** The newest row per id (highest version, then latest timestamp). */
+  private def newestPerId(df: DataFrame): DataFrame =
+    df.withColumn("_rk", row_number().over(
+        Window.partitionBy("id").orderBy(desc("version"), desc("ts_ms"))))
+      .filter(col("_rk") === 1).drop("_rk")
+
+  /** Key of one emitted version row. */
+  private val VersionKey = Seq("id", "version", "osm_minor_version")
+
+  /** Major contributions of one entity type: the diff rows `d` classified
+    * against the stored latest rows `before` (the ContributionUpdater
+    * per-element timeline):
+    *  1. timeline = stored rows (null changeset/uid/user) ∪ diff rows, in
+    *     (version, ts) order per id;
+    *  2. [[Contributions.contribType]], with tags compared as map entries
+    *     and a geometry change = any of `geomCols` differing from the
+    *     predecessor (node: coordinates; way: refs; relation: member refs);
+    *  3. a deletion with no known earlier version is skipped
+    *     (ContributionUpdater.filter:346-349);
+    *  4. versions at or below the stored one were already applied — a diff
+    *     replay after a crash must emit nothing (filter:352-359).
+    * Returns the diff's columns plus `contrib_type`, `valid_from` and
+    * `osm_minor_version` = 0, materialized once.
+    */
+  private def majorsOf(before: DataFrame, d: DataFrame, geomCols: Seq[String]): DataFrame = {
+    val w = Window.partitionBy("id").orderBy("version", "ts_ms")
+    val entityCols = d.columns.filterNot(Set("changeset", "uid", "user"))
+    before.select(entityCols.map(col).toSeq: _*)
+      .withColumn("is_new", lit(false))
+      .withColumn("changeset", lit(null).cast(LongType))
+      .withColumn("uid", lit(null).cast(LongType))
+      .withColumn("user", lit(null).cast(StringType))
+      .unionByName(d.withColumn("is_new", lit(true)))
+      .withColumn("prev_visible", lag("visible", 1).over(w))
+      .withColumn("contrib_type", Contributions.contribType(col("visible"), col("prev_visible"),
+        array_sort(map_entries(coalesce(col("tags"), map()))) =!=
+          array_sort(map_entries(coalesce(lag("tags", 1).over(w), map()))),
+        geomCols.map(c => col(c) =!= lag(c, 1).over(w)).reduce(_ || _)))
+      .filter(col("is_new"))
+      .filter(!(col("contrib_type") === "DELETION" && col("prev_visible").isNull))
+      .join(broadcast(before.select(col("id"), col("version").as("before_version"))),
+        Seq("id"), "left")
+      .filter(col("before_version").isNull || col("version") > col("before_version"))
+      .select((d.columns.map(col).toSeq :+ col("contrib_type") :+
+        col("ts_ms").as("valid_from") :+ lit(0).as("osm_minor_version")): _*)
+      .localCheckpoint(true)
+  }
+
+  /** Minor contributions: one GEOMETRY row per (entity, member-edit
+    * instant) in `edits` (id, edit_ts), numbered on from the stored minor
+    * counter (getContribs:396-399). ONE rule for every entity,
+    * diff-resident or not: minors attach to the entity's EFFECTIVE state
+    * ([[effectiveState]]) and only for edits strictly after that state's
+    * timestamp — so a same-diff major of any kind (tag-only, member
+    * change, creation) receives post-major member edits as minors on its
+    * new version, while edits at/before the major fold into the major's
+    * own as-of rebuild (the intermediate old-version minor row is elided —
+    * a documented divergence from a full-history rebuild, bounded to
+    * intra-diff ordering). Materialized once.
+    */
+  private def minorsOf(edits: DataFrame, effective: DataFrame): DataFrame =
+    edits.distinct()
+      .join(effective.filter(col("visible")), Seq("id"))
+      .filter(col("edit_ts") > col("ts_ms"))
+      .withColumn("osm_minor_version", col("minor_version") +
+        row_number().over(Window.partitionBy("id").orderBy("edit_ts")))
+      .withColumn("contrib_type", lit("GEOMETRY"))
+      .withColumnRenamed("edit_ts", "valid_from")
+      .localCheckpoint(true)
+
+  /** The one emitted-row projection: `rows` carry the version key,
+    * `valid_from`, `contrib_type`, `tags` and (majors only) the changeset
+    * and user columns; the caller supplies the geometry columns.
+    */
+  private def emit(osmType: String, rows: DataFrame, wkb: Column,
+      lengthMm: Column = lit(null), lon: Column = lit(null), lat: Column = lit(null)): DataFrame =
+    rows.select(lit(osmType).as("osm_type"), col("id").as("osm_id"),
+      col("version").as("osm_version"), col("osm_minor_version"),
+      col("valid_from"), col("contrib_type"), col("tags"),
+      col("changeset"), col("uid"), col("user"),
+      lon.cast(DoubleType).as("lon"), lat.cast(DoubleType).as("lat"),
+      wkb.as("wkb"), lengthMm.cast(LongType).as("length_mm"))
+
+  /** Ref positions as of each row's instant — the update path's one as-of
+    * resolver, with the batch assembly's rank (Contributions.withGeometries):
+    * each ref in `refsCol` resolves to the newest node version at or
+    * before `row_ts` among the stored node rows `storedNodes` and the
+    * diff's node rows `dn`, ties broken by the higher version (same-
+    * timestamp node versions occur in minutely diffs). The candidates keep
+    * DELETE rows: a node deleted in this very diff must win the rank for
+    * instants at/after the deletion, so the ref counts as unresolved
+    * instead of resolving to its stale pre-delete coordinates from the
+    * not-yet-updated store. A winner that is a deletion or has no
+    * coordinates leaves its ref unresolved.
+    *
+    * Returns, per `keys` with at least one resolved ref: `n_pts` (resolved
+    * refs), `n_refs` and the resolved `lons`/`lats` in ref order. A caller
+    * nulls (ways) or drops (relation member lines) a row with
+    * n_pts < n_refs: a shortened line would be a wrong geometry.
+    */
+  private def resolveRefs(rows: DataFrame, keys: Seq[String], refsCol: String,
+      storedNodes: DataFrame, dn: DataFrame): DataFrame = {
+    def cand(df: DataFrame) = df.select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
+      col("version").as("node_version"), col("lon"), col("lat"), col("visible").as("vis"))
+    rows
+      .select((keys.map(col) :+ col("row_ts") :+ size(col(refsCol)).as("n_refs") :+
+        posexplode(col(refsCol)).as(Seq("pos", "node_id"))): _*)
+      .join(cand(storedNodes).unionByName(cand(dn)), Seq("node_id"))
+      .filter(col("node_ts") <= col("row_ts"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy((keys :+ "pos").map(col): _*)
+          .orderBy(desc("node_ts"), desc("node_version"))))
+      .filter(col("rk") === 1)
+      .filter(col("vis") && !isnan(col("lat")) && !isnan(col("lon")))
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_pts"), first("n_refs").as("n_refs"),
+        sort_array(collect_list(struct(col("pos"), col("lon"), col("lat")))).as("pts"))
+      .select((keys.map(col) ++ Seq(col("n_pts"), col("n_refs"),
+        expr("transform(pts, p -> p.lon)").as("lons"),
+        expr("transform(pts, p -> p.lat)").as("lats"))): _*)
+  }
+
+  /** The effective state per entity that minor candidacy attaches to:
+    * the stored row, overridden by the entity's newest diff major —
+    * REGARDLESS of visibility — as a store-row-shaped frame (minor counter
+    * reset to 0, edit counter carried from the store). Materialized once.
+    * A same-diff DELETION major must win this rank (carrying
+    * `visible = false`) so the downstream `effective.filter(visible)`
+    * guards suppress member-edit minors after the deletion — the
+    * reference's timeline processing emits nothing for an element past its
+    * deletion, and the common delete-way-plus-its-nodes changeset would
+    * otherwise fabricate GEOMETRY minors on the stored pre-delete row.
     *
     * Known intra-diff divergence: a member edit timestamped BEFORE a
     * same-diff deletion (node moves at t1, way deleted at t2 > t1) is
     * elided too — the deletion wins the rank for the whole diff, so the
     * pre-deletion GEOMETRY minor the reference's full timeline would emit
     * at t1 never materializes. Same bounded intra-diff elision as the
-    * major-fold rule above (edits at/before a same-diff major fold into
-    * the major's as-of rebuild); both collapse sub-minute ordering inside
-    * one diff, never across diffs.
+    * major-fold rule of [[minorsOf]]; both collapse sub-minute ordering
+    * inside one diff, never across diffs.
     */
-  private def latestMajorState(majors: DataFrame, before: DataFrame,
-      carryCols: Seq[String]): DataFrame =
-    majors
-      .withColumn("mrk", row_number().over(
-        Window.partitionBy("id").orderBy(desc("version"), desc("ts_ms"))))
-      .filter(col("mrk") === 1).drop("mrk")
+  private def effectiveState(majors: DataFrame, before: DataFrame): DataFrame = {
+    val latest = newestPerId(majors)
       .join(before.select(col("id"), col("edits").as("prev_edits")), Seq("id"), "left")
-      .select((Seq(col("id"), col("version"), lit(0).as("minor_version"),
-        coalesce(col("prev_edits"), lit(0L)).as("edits")) ++
-        carryCols.map(col)): _*)
+      .withColumn("minor_version", lit(0))
+      .withColumn("edits", coalesce(col("prev_edits"), lit(0L)))
+      .select(before.columns.map(col).toSeq: _*)
+    before
+      .join(broadcast(latest.select("id")), Seq("id"), "left_anti")
+      .unionByName(latest)
+      .localCheckpoint(true)
+  }
 
-  /** Multipolygon WKB per emitted relation row: member ways as-of the
-    * row's instant (stored latest overridden by same-diff way versions at
-    * or before it), node refs as-of the same instant, then the EXACT batch
-    * assembly — [[RelationGeometry.dedupeWays]] → [[RelationGeometry.stitch]]
-    * → [[RelationGeometry.removeSpikes]] → [[RelationGeometry.classify]] →
+  /** Multipolygon WKB per emitted relation row — the
+    * ContributionUpdater.updateRelation analog
+    * (ContributionUpdater.java:101-121): member ways as-of the row's
+    * instant (stored latest overridden by same-diff way versions at or
+    * before it), their node refs as-of the same instant
+    * ([[resolveRefs]]), then the EXACT batch assembly —
+    * [[RelationGeometry.dedupeWays]] → [[RelationGeometry.stitch]] →
+    * [[RelationGeometry.removeSpikes]] → [[RelationGeometry.classify]] →
     * the shared WKB writers — so update-path relation geometry is
-    * byte-equal to the batch path's on the same member state
-    * (ContributionUpdater.java:101-121 updateRelations/updateRelation).
+    * byte-equal to the batch path's on the same member state.
     *
     * A member way with an unresolvable ref (node deleted/unknown as of the
     * row) contributes NO line — its ring stays open, `wkb` still encodes
@@ -591,35 +514,14 @@ object OsmUpdater {
           .orderBy(desc("w_ts"), desc("w_version"))))
       .filter(col("wrk") === 1 && col("w_vis"))
       .localCheckpoint(true)
-    val refIds = wayAsOf.select(explode(col("w_refs")).as("id"))
-    val nodeCand = readFor(spark, dir(root, "nodes"), nodeSchema, refIds, "id")
-      .select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-        col("version").as("node_version"),
-        col("lon"), col("lat"), col("visible").as("vis"))
-      .unionByName(dn
-        .select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-          col("version").as("node_version"),
-          col("lon"), col("lat"), col("visible").as("vis")))
-    val lines = wayAsOf
-      .select(col("id"), col("version"), col("osm_minor_version"), col("row_ts"),
-        col("way_id"), size(col("w_refs")).as("n_refs"),
-        posexplode(col("w_refs")).as(Seq("pos", "node_id")))
-      .join(nodeCand, Seq("node_id"))
-      .filter(col("node_ts") <= col("row_ts"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id", "version", "osm_minor_version", "way_id", "pos")
-          .orderBy(desc("node_ts"), desc("node_version"))))
-      .filter(col("rk") === 1)
-      .filter(col("vis") && !isnan(col("lat")) && !isnan(col("lon")))
-      .groupBy("id", "version", "osm_minor_version", "way_id")
-      .agg(count(lit(1)).as("n_pts"), first("n_refs").as("n_refs"),
-        sort_array(collect_list(struct(col("pos"), col("lon"), col("lat")))).as("p"))
+    val lines = resolveRefs(wayAsOf, VersionKey :+ "way_id", "w_refs",
+        readFor(spark, dir(root, "nodes"), nodeSchema,
+          wayAsOf.select(explode(col("w_refs")).as("id")), "id"), dn)
       // an incompletely-resolved member way drops whole: a shortened line
       // would stitch a WRONG ring; a missing one leaves the ring open
       .filter(col("n_pts") === col("n_refs"))
       .select(col("id"), col("version"), col("osm_minor_version"), col("way_id"),
-        expr("transform(p, q -> q.lon)").as("lons"),
-        expr("transform(p, q -> q.lat)").as("lats"))
+        col("lons"), col("lats"))
     lines.as[(Long, Int, Int, Long, Array[Double], Array[Double])]
       .groupByKey(t => (t._1, t._2, t._3))
       .mapGroups { (key: (Long, Int, Int), it: Iterator[(Long, Int, Int, Long, Array[Double], Array[Double])]) =>
@@ -646,18 +548,20 @@ object OsmUpdater {
   }
 
   /** Sequenced catch-up over a replication directory of `.osc` diffs — the
-    * full ReplicationManager.java loop on the TYPED store: applies every
-    * pending sequence in strict order (gap = stop), writes each diff's
+    * full ReplicationManager.java loop on the TYPED store: applies the
+    * pending run of sequences ([[ReplicationCatchup.pending]]: strict
+    * order, a gap stops it, at most `maxSteps`), writes each diff's
     * emitted contributions to `out/seq=N/`, and bumps the `state.txt`
     * bookmark last. [[applyDiff]] is idempotent per diff (store timestamps
     * advance past applied edits), so a crash between the store upserts and
-    * the state write re-runs the diff into the same state.
-    */
-  /** @param changesetDb optional changeset store frame (id, created_at,
-    *                     closed_at, num_changes, tags) — the `--changeset-db`
-    *                     contract on the update path: every emitted
-    *                     contribution joins its changeset struct
-    *                     (broadcast; Replications.java:79-88).
+    * the state write re-runs the diff into the same state. Returns the
+    * number of diffs applied.
+    *
+    * @param changesetDb optional changeset store frame (id, created_at,
+    *                    closed_at, num_changes, tags) — the `--changeset-db`
+    *                    contract on the update path: every emitted
+    *                    contribution joins its changeset struct
+    *                    (broadcast; Replications.java:79-88).
     */
   def catchUp(spark: SparkSession, replDir: String, root: String,
       maxSteps: Int = Int.MaxValue,
@@ -665,39 +569,33 @@ object OsmUpdater {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     var st = ReplicationCatchup.readState(root)
       .getOrElse(ReplicationCatchup.State(0L, ""))
-    var applied = 0L
-    ReplicationCatchup.listDiffs(replDir)
-      .filter(_._1 > st.sequenceNumber)
-      .take(maxSteps)
-      .foreach { case (seq, path) =>
-        if (seq == st.sequenceNumber + 1) {
-          // output commits BEFORE the store advances (via applyDiff's sink
-          // hook). A replay whose output already fully landed (_SUCCESS)
-          // keeps it — the replay's re-emission can be partial when the
-          // previous attempt crashed mid-upsert, and the original output
-          // reflected the correct pre-diff store.
-          val outPath = s"$root/out/seq=$seq"
-          val committed = java.nio.file.Files.exists(
-            java.nio.file.Paths.get(outPath, "_SUCCESS"))
-          val raw = applyDiff(spark, root,
-            graft.sources.OsmXml.readOsc(spark, path),
-            sink = out => if (!committed) {
-              changesetDb.fold(out)(db => Changesets.enrichWithChangesetDb(out, db))
-                .coalesce(1).write.mode("overwrite").parquet(outPath)
-            })
-          val ts = raw.agg(max("valid_from")).collect().head
-          st = ReplicationCatchup.State(seq,
-            if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
-          ReplicationCatchup.writeState(spark, root, st)
-          // applyDiff pins intermediates via localCheckpoint; across a
-          // long catch-up session those blocks would accumulate (the
-          // round-4 storage-leak lesson) — release once the step's sinks
-          // and state are committed
-          graft.GraftSession.releaseStorage(spark)
-          applied += 1
-        }
-      }
-    applied
+    val steps = ReplicationCatchup.pending(replDir, ".osc", st.sequenceNumber, maxSteps)
+    steps.foreach { case (seq, path) =>
+      // output commits BEFORE the store advances (via applyDiff's sink
+      // hook). A replay whose output already fully landed (_SUCCESS)
+      // keeps it — the replay's re-emission can be partial when the
+      // previous attempt crashed mid-upsert, and the original output
+      // reflected the correct pre-diff store.
+      val outPath = s"$root/out/seq=$seq"
+      val committed = java.nio.file.Files.exists(
+        java.nio.file.Paths.get(outPath, "_SUCCESS"))
+      val raw = applyDiff(spark, root,
+        graft.sources.OsmXml.readOsc(spark, path),
+        sink = out => if (!committed) {
+          changesetDb.fold(out)(db => Changesets.enrichWithChangesetDb(out, db))
+            .coalesce(1).write.mode("overwrite").parquet(outPath)
+        })
+      val ts = raw.agg(max("valid_from")).collect().head
+      st = ReplicationCatchup.State(seq,
+        if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
+      ReplicationCatchup.writeState(spark, root, st)
+      // applyDiff pins intermediates via localCheckpoint; across a
+      // long catch-up session those blocks would accumulate (the
+      // round-4 storage-leak lesson) — release once the step's sinks
+      // and state are committed
+      graft.GraftSession.releaseStorage(spark)
+    }
+    steps.size.toLong
   }
 
   /** Store maintenance after emission — latest entity versions, minor/edit
@@ -710,21 +608,15 @@ object OsmUpdater {
       beforeW: DataFrame, beforeR: DataFrame,
       wayMinors: DataFrame, relMinors: DataFrame, out: DataFrame): Unit = {
 
-    def latestOf(df: DataFrame): DataFrame = df
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("id").orderBy(desc("version"), desc("ts_ms"))))
-      .filter(col("rk") === 1).drop("rk")
-
     // the store only ever moves FORWARD: a diff carrying versions at or
     // below the stored one (snapshot/replication overlap, crash replay)
     // must not regress entity rows, counters, or the backref tables — the
     // same version guard the emission path applies
-    def freshLatest(d: DataFrame, before: DataFrame): DataFrame =
-      latestOf(d)
-        .join(broadcast(before.select(col("id"), col("version").as("_bv"))),
-          Seq("id"), "left")
-        .filter(col("_bv").isNull || col("version") > col("_bv"))
-        .drop("_bv")
+    def freshLatest(d: DataFrame, before: DataFrame): DataFrame = newestPerId(d)
+      .join(broadcast(before.select(col("id"), col("version").as("_bv"))),
+        Seq("id"), "left")
+      .filter(col("_bv").isNull || col("version") > col("_bv"))
+      .drop("_bv")
 
     val emitted = out.groupBy(col("osm_type"), col("osm_id").as("id"))
       .agg(count(lit(1)).as("new_edits"),
@@ -734,63 +626,14 @@ object OsmUpdater {
     upsert(spark, dir(root, "nodes"), freshLatest(dn, beforeN)
       .select(nodeSchema.fieldNames.map(col).toSeq: _*), "id")
 
-    // ways: diff majors reset the minor counter to the last emitted minor
-    // (0 for a plain major); minor-only ways bump counter + edits in place
-    val wayEm = emitted.filter(col("osm_type") === "way").drop("osm_type")
     val dwFresh = freshLatest(dw, beforeW).localCheckpoint(true)
     val drFresh = freshLatest(dr, beforeR).localCheckpoint(true)
-    val wayMinorTs = wayMinors.groupBy("id").agg(max("edit_ts").as("minor_last_ts"))
-    val waysMajorUp = dwFresh
-      .join(beforeW.select(col("id"), col("edits").as("prev_edits")), Seq("id"), "left")
-      .join(wayEm, Seq("id"), "left")
-      .join(wayMinorTs, Seq("id"), "left")
-      .select(col("id"), col("version"),
-        coalesce(col("max_minor"), lit(0)).cast(IntegerType).as("minor_version"),
-        (coalesce(col("prev_edits"), lit(0L)) + coalesce(col("new_edits"), lit(0L))).as("edits"),
-        // advance past any same-diff minors attached to this major so a
-        // replay finds no edit newer than the store
-        greatest(col("ts_ms"), coalesce(col("minor_last_ts"), col("ts_ms"))).as("ts_ms"),
-        col("visible"), col("tags"), col("refs"))
-    // stored ts_ms advances past the applied edits: re-applying the same
-    // diff after a crash then finds no edit newer than the store and
-    // re-emits nothing — per-diff idempotence without a cross-table
-    // transaction
-    val waysMinorUp = wayMinors
-      .groupBy("id").agg(max("osm_minor_version").as("max_minor"),
-        count(lit(1)).as("new_edits"), max("edit_ts").as("last_ts"))
-      // minors attached to a fresh diff major are folded into its
-      // waysMajorUp row — a second row for the same key would corrupt the
-      // latest-wins upsert
-      .join(broadcast(dwFresh.select("id")), Seq("id"), "left_anti")
-      .join(beforeW, Seq("id"))
-      .select(col("id"), col("version"),
-        col("max_minor").cast(IntegerType).as("minor_version"),
-        (col("edits") + col("new_edits")).as("edits"),
-        col("last_ts").as("ts_ms"), col("visible"), col("tags"), col("refs"))
-    upsert(spark, dir(root, "ways"), waysMajorUp.unionByName(waysMinorUp), "id")
-
-    // relations: same shape
-    val relEm = emitted.filter(col("osm_type") === "relation").drop("osm_type")
-    val relMinorTs = relMinors.groupBy("id").agg(max("edit_ts").as("minor_last_ts"))
-    val relsMajorUp = drFresh
-      .join(beforeR.select(col("id"), col("edits").as("prev_edits")), Seq("id"), "left")
-      .join(relEm, Seq("id"), "left")
-      .join(relMinorTs, Seq("id"), "left")
-      .select(col("id"), col("version"),
-        coalesce(col("max_minor"), lit(0)).cast(IntegerType).as("minor_version"),
-        (coalesce(col("prev_edits"), lit(0L)) + coalesce(col("new_edits"), lit(0L))).as("edits"),
-        greatest(col("ts_ms"), coalesce(col("minor_last_ts"), col("ts_ms"))).as("ts_ms"),
-        col("visible"), col("tags"), col("refs"), col("ref_types"))
-    val relsMinorUp = relMinors
-      .groupBy("id").agg(max("osm_minor_version").as("max_minor"),
-        count(lit(1)).as("new_edits"), max("edit_ts").as("last_ts"))
-      .join(broadcast(drFresh.select("id")), Seq("id"), "left_anti")
-      .join(beforeR, Seq("id"))
-      .select(col("id"), col("version"),
-        col("max_minor").cast(IntegerType).as("minor_version"),
-        (col("edits") + col("new_edits")).as("edits"),
-        col("last_ts").as("ts_ms"), col("visible"), col("tags"), col("refs"), col("ref_types"))
-    upsert(spark, dir(root, "relations"), relsMajorUp.unionByName(relsMinorUp), "id")
+    upsert(spark, dir(root, "ways"),
+      parentRows(waySchema, dwFresh, beforeW, wayMinors,
+        emitted.filter(col("osm_type") === "way").drop("osm_type")), "id")
+    upsert(spark, dir(root, "relations"),
+      parentRows(relSchema, drFresh, beforeR, relMinors,
+        emitted.filter(col("osm_type") === "relation").drop("osm_type")), "id")
 
     // NODE→WAY backrefs: reconcile adds and removals for diff ways
     if (!dwFresh.isEmpty) {
@@ -805,22 +648,50 @@ object OsmUpdater {
 
     // NODE→RELATION / WAY→RELATION backrefs for diff relations
     if (!drFresh.isEmpty) {
-      val drLatest = drFresh
-      val drParents = drLatest.select(col("id").as("parent_id"))
-      val oldR = beforeR
-        .join(broadcast(drFresh.select("id")), Seq("id"), "left_semi")
-        .withColumnRenamed("id", "rid")
-      def pairsOf(df: DataFrame, idCol: String, mtype: String): DataFrame =
-        df.filter(col("visible"))
-          .select(col(idCol).as("parent_id"),
-            explode(arrays_zip(col("refs"), col("ref_types"))).as("m"))
-          .filter(col("m.ref_types") === mtype)
-          .select(col("m.refs").as("ref_id"), col("parent_id"))
+      val drParents = drFresh.select(col("id").as("parent_id"))
+      val oldR = beforeR.join(broadcast(drFresh.select("id")), Seq("id"), "left_semi")
       reconcileBackrefs(spark, dir(root, "node_relations"), drParents,
-        pairsOf(oldR, "rid", "node"), pairsOf(drLatest, "id", "node"))
+        memberPairs(oldR, "node"), memberPairs(drFresh, "node"))
       reconcileBackrefs(spark, dir(root, "way_relations"), drParents,
-        pairsOf(oldR, "rid", "way"), pairsOf(drLatest, "id", "way"))
+        memberPairs(oldR, "way"), memberPairs(drFresh, "way"))
     }
+  }
+
+  /** Store rows of one parent type (ways: `waySchema`, relations:
+    * `relSchema`) after a diff. A fresh diff major resets the minor
+    * counter to its last emitted minor (0 for a plain major) and advances
+    * its timestamp past any same-diff minors attached to it; a minor-only
+    * entity bumps its counter and edits in place. The stored timestamp
+    * advances past the applied edits: re-applying the same diff after a
+    * crash then finds no edit newer than the store and re-emits nothing —
+    * per-diff idempotence without a cross-table transaction.
+    *
+    * @param emittedCounts per id: `new_edits` (rows emitted) and
+    *                      `max_minor` (last emitted minor)
+    */
+  private def parentRows(schema: StructType, fresh: DataFrame, before: DataFrame,
+      minors: DataFrame, emittedCounts: DataFrame): DataFrame = {
+    val storeCols = schema.fieldNames.map(col).toSeq
+    val minorAgg = minors.groupBy("id").agg(max("osm_minor_version").as("max_minor"),
+      count(lit(1)).as("new_edits"), max("valid_from").as("last_ts"))
+    val majorUp = fresh
+      .join(before.select(col("id"), col("edits").as("prev_edits")), Seq("id"), "left")
+      .join(emittedCounts, Seq("id"), "left")
+      .join(minorAgg.select("id", "last_ts"), Seq("id"), "left")
+      .withColumn("minor_version", coalesce(col("max_minor"), lit(0)).cast(IntegerType))
+      .withColumn("edits", coalesce(col("prev_edits"), lit(0L)) + coalesce(col("new_edits"), lit(0L)))
+      .withColumn("ts_ms", greatest(col("ts_ms"), coalesce(col("last_ts"), col("ts_ms"))))
+      .select(storeCols: _*)
+    // minors attached to a fresh diff major are folded into its row above
+    // — a second row for the same key would corrupt the latest-wins upsert
+    val minorUp = minorAgg
+      .join(broadcast(fresh.select("id")), Seq("id"), "left_anti")
+      .join(before, Seq("id"))
+      .withColumn("minor_version", col("max_minor").cast(IntegerType))
+      .withColumn("edits", col("edits") + col("new_edits"))
+      .withColumn("ts_ms", col("last_ts"))
+      .select(storeCols: _*)
+    majorUp.unionByName(minorUp)
   }
 
   /** Read-modify-write of the touched backref rows: every ref id that the

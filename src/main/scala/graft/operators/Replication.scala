@@ -62,12 +62,8 @@ object Replication {
       .withColumn("prev_visible", lag("visible", 1).over(byEntity))
       .withColumn("prev_props", lag("props", 1).over(byEntity))
       .withColumn("prev_value", lag("value", 1).over(byEntity))
-      .withColumn("contrib_type",
-        when(!col("visible"), "DELETION")
-          .when(col("prev_visible").isNull || !col("prev_visible"), "CREATION")
-          .otherwise(concat_ws("_",
-            when(col("props") =!= col("prev_props"), "TAG"),
-            when(col("value") =!= col("prev_value"), "GEOMETRY"))))
+      .withColumn("contrib_type", Contributions.contribType(col("visible"), col("prev_visible"),
+        col("props") =!= col("prev_props"), col("value") =!= col("prev_value")))
       .withColumn("status",
         when(!col("visible"), "deleted")
           .when(col("valid_to").isNotNull, "history")

@@ -100,6 +100,18 @@ object ReplicationCatchup {
     } finally stream.close()
   }
 
+  /** The diffs a catch-up applies next: the run of sequences `from + 1,
+    * from + 2, …` present in `dir` (`ext` as in [[listDiffs]]), at most
+    * `maxSteps` of them. The run stops at the first gap — sequence numbers
+    * must advance by exactly 1, like the reference's
+    * `Flux.range(local + 1, steps)` fetch: a gap means diffs are missing
+    * upstream, and applying past it would silently skip history.
+    */
+  def pending(dir: String, ext: String, from: Long, maxSteps: Int): Seq[(Long, String)] =
+    listDiffs(dir, ext).filter(_._1 > from).zipWithIndex
+      .takeWhile { case ((seq, _), i) => seq == from + i + 1 }
+      .map(_._1).take(maxSteps)
+
   // ---- store reads -----------------------------------------------------
 
   /** Event history with `batch <= upTo` — the committed prefix, read from
@@ -209,10 +221,9 @@ object ReplicationCatchup {
 
   // ---- catch-up loop ---------------------------------------------------
 
-  /** Applies every pending diff in strict sequence order (stops at a gap:
-    * sequence numbers must advance by exactly 1, like the reference's
-    * `Flux.range(local + 1, steps)` fetch), at most `maxSteps` of them
-    * (the reference's `setMaxSize` bound). Returns the number applied.
+  /** Applies the [[pending]] diffs in sequence order, at most `maxSteps`
+    * of them (the reference's `setMaxSize` bound). Returns the number
+    * applied.
     *
     * Per step, in commit order: per-diff output → event batch → state.txt.
     * A crash anywhere before the state write leaves the bookmark on the
@@ -223,27 +234,21 @@ object ReplicationCatchup {
       maxSteps: Int = Int.MaxValue): Long = {
     Files.createDirectories(Paths.get(storeDir))
     var st = readState(storeDir).getOrElse(State(0L, ""))
-    var applied = 0L
-    val pending = listDiffs(replDir)
-      .filter(_._1 > st.sequenceNumber)
-      .take(maxSteps)
-    pending.foreach { case (seq, path) =>
-      if (seq == st.sequenceNumber + 1) {
-        val diff = Replication.oscAsEvents(OsmXml.readOsc(spark, path))
-          .select(eventCols.map(col): _*)
-        val base = readEvents(spark, storeDir, st.sequenceNumber)
-        val updated = Replication.updateContributions(base, diff)
-        updated.filter(col("rebuilt")).drop("rebuilt")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$storeDir/out/seq=$seq")
-        diff.coalesce(1).write.mode("overwrite")
-          .parquet(s"$storeDir/events/batch=$seq")
-        val ts = diff.agg(max("ts_us")).collect().head
-        st = State(seq, if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
-        writeState(spark, storeDir, st)
-        applied += 1
-      }
+    val steps = pending(replDir, ".osc", st.sequenceNumber, maxSteps)
+    steps.foreach { case (seq, path) =>
+      val diff = Replication.oscAsEvents(OsmXml.readOsc(spark, path))
+        .select(eventCols.map(col): _*)
+      val base = readEvents(spark, storeDir, st.sequenceNumber)
+      val updated = Replication.updateContributions(base, diff)
+      updated.filter(col("rebuilt")).drop("rebuilt")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$storeDir/out/seq=$seq")
+      diff.coalesce(1).write.mode("overwrite")
+        .parquet(s"$storeDir/events/batch=$seq")
+      val ts = diff.agg(max("ts_us")).collect().head
+      st = State(seq, if (ts.isNullAt(0)) st.timestamp else ts.getLong(0).toString)
+      writeState(spark, storeDir, st)
     }
-    applied
+    steps.size.toLong
   }
 }

@@ -4,41 +4,56 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
-/** Source scan: every commit-point rename in the program goes through
-  * `sources/ChangesetStore` (its `writeAtomic` small-file writer and its
-  * bucket install). A hand-rolled tmp + move elsewhere is a second commit
-  * protocol, and this spec names the line that adds one.
+/** Source scan for rules that must keep one definition. Each row names a
+  * pattern, the files that own it, and single lines allowed elsewhere; a
+  * match anywhere else in `src/main` is a second copy of the rule, and
+  * this spec names the line that adds it.
   */
 class CommitPathSpec extends AnyFunSuite {
 
   private val mainDir = Paths.get("src", "main", "scala")
 
-  private val renameCall = """ATOMIC_MOVE|Files\.move\b|\.rename\(""".r
+  private case class Rule(name: String, pattern: Regex, owners: Set[String],
+      allowedLines: Set[(String, String)], fix: String)
 
-  /** (file, line text) pairs allowed outside ChangesetStore: GeoParquet's
-    * footer stamp swaps a rewritten data file in place; it is not a
-    * commit point.
-    */
-  private val allowed = Set(
-    "graft/sources/GeoParquet.scala" -> "if (!fs.delete(path, false) || !fs.rename(tmp, path))")
+  private val rules = Seq(
+    // every commit-point rename goes through ChangesetStore (its
+    // `writeAtomic` small-file writer and its bucket install); GeoParquet's
+    // footer stamp swaps a rewritten data file in place and is not a
+    // commit point
+    Rule("renames and atomic moves appear only in ChangesetStore",
+      """ATOMIC_MOVE|Files\.move\b|\.rename\(""".r,
+      Set("graft/sources/ChangesetStore.scala"),
+      Set("graft/sources/GeoParquet.scala" -> "if (!fs.delete(path, false) || !fs.rename(tmp, path))"),
+      "commit through ChangesetStore.writeAtomic / stageAndInstall instead"),
+    // the CREATION branch of the contribution-type decision: the Column
+    // rule (Contributions.contribType) and the row-level Scala form of the
+    // streaming chain. The DuckDB oracle texts ('CREATION' in SQL) are the
+    // independent reference and are not matched.
+    Rule("the contribution-type CREATION branch appears only in Contributions.contribType",
+      """(\bwhen\(|\bif\b).*"CREATION"""".r,
+      Set("graft/operators/Contributions.scala", "graft/streaming/ContributionStream.scala"),
+      Set.empty,
+      "classify through Contributions.contribType instead"))
 
-  test("renames and atomic moves appear only in ChangesetStore") {
+  private lazy val files: List[Path] = {
+    val s = Files.walk(mainDir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  private def rel(p: Path) = mainDir.relativize(p).toString.replace('\\', '/')
+
+  for (rule <- rules) test(rule.name) {
     assert(Files.isDirectory(mainDir), s"run from the repository root: $mainDir missing")
-    val files = {
-      val s = Files.walk(mainDir)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    assert(files.exists(_.endsWith(Paths.get("graft", "sources", "ChangesetStore.scala"))))
-    def rel(p: Path) = mainDir.relativize(p).toString.replace('\\', '/')
+    rule.owners.foreach(o => assert(files.exists(f => rel(f) == o), s"owner $o missing"))
     val offenders = for {
-      f <- files if rel(f) != "graft/sources/ChangesetStore.scala"
+      f <- files if !rule.owners(rel(f))
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if renameCall.findFirstIn(line).nonEmpty && !allowed((rel(f), line.trim))
+      if rule.pattern.findFirstIn(line).nonEmpty && !rule.allowedLines((rel(f), line.trim))
     } yield s"${rel(f)}:${i + 1}: ${line.trim}"
-    assert(offenders.isEmpty,
-      "commit through ChangesetStore.writeAtomic / stageAndInstall instead:\n" +
-        offenders.mkString("\n"))
+    assert(offenders.isEmpty, s"${rule.fix}:\n" + offenders.mkString("\n"))
   }
 }

@@ -617,4 +617,86 @@ class OsmUpdaterSpec extends SparkSpec {
     // the budget adds ~15 % headroom
     assert(jobs <= 198, s"one catch-up step ran $jobs Spark jobs")
   }
+
+  test("a sequence gap stops the catch-up before the gap") {
+    val root = freshRoot()
+    OsmUpdater.initStore(spark, root, seedEntities)
+    val replDir = java.nio.file.Files.createTempDirectory("graft-upd-gap")
+    def move(seq: Int, lat: Double): Unit =
+      java.nio.file.Files.writeString(replDir.resolve(s"$seq.osc"),
+        s"""<osmChange version="0.6">
+          | <modify>
+          |  <node id="1" version="${seq + 1}" timestamp="2024-01-01T0$seq:00:00Z" changeset="100" uid="9" user="alice" lat="$lat" lon="1.0"/>
+          | </modify>
+          |</osmChange>""".stripMargin)
+    move(1, 1.5)
+    move(3, 1.7)
+    // sequence 2 is missing: only 1 applies, and 3 is not applied past it
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 1L)
+    assert(graft.operators.ReplicationCatchup.readState(root)
+      .map(_.sequenceNumber) === Some(1L))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "out", "seq=3")))
+    // the gap filled upstream: the run resumes and continues through 3
+    move(2, 1.6)
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 2L)
+    assert(graft.operators.ReplicationCatchup.readState(root)
+      .map(_.sequenceNumber) === Some(3L))
+    val nodes = ChangesetStore.readAuto(spark, s"$root/nodes").filter(col("id") === 1).collect()
+    assert(nodes.map(r => (r.getAs[Int]("version"), r.getAs[Double]("lat"))).toSeq === Seq((4, 1.7)))
+  }
+
+  test("update-path geometry equals the batch assembly for the same history") {
+    import graft.operators.Contributions
+    val root = freshRoot()
+    def node(id: Long, lat: Double, lon: Double, tsMs: Long) =
+      Row("node", id, 1, tsMs, true, lat, lon, Map.empty[String, String], null, null)
+    def way(id: Long, tags: Map[String, String], refs: Seq[Long]) =
+      Row("way", id, 1, 9000L, true, Double.NaN, Double.NaN, tags, refs, null)
+    // the batch geometry fixtures: closed polygon-feature and non-feature
+    // ways 10-14, the out-of-range node 20, and the one-ref way 30
+    val seedNodes = Seq(node(1L, 0.0, 0.0, 1000L), node(2L, 0.0, 1.0, 1000L),
+      node(3L, 1.0, 1.0, 1000L), node(21L, 45.0, 10.0, 1000L))
+    val diffRows = Seq(
+      node(20L, 91.5, 10.0, 1000L),
+      way(10L, Map("building" -> "yes"), Seq(1L, 2L, 3L, 1L)),
+      way(11L, Map("highway" -> "primary"), Seq(1L, 2L, 3L, 1L)),
+      way(12L, Map("building" -> "yes", "area" -> "no"), Seq(1L, 2L, 3L, 1L)),
+      way(13L, Map("building" -> "yes"), Seq(1L, 2L, 3L)),
+      way(14L, Map("natural" -> "water"), Seq(1L, 2L, 3L, 1L)),
+      way(30L, Map.empty, Seq(21L)))
+    OsmUpdater.initStore(spark, root,
+      spark.createDataFrame(spark.sparkContext.parallelize(seedNodes), entitySchema))
+
+    // the same rows as an osc diff (entitySchema positions)
+    def attrs(r: Row) = s"""id="${r.getLong(1)}" version="1" timestamp="${
+      java.time.Instant.ofEpochMilli(r.getLong(3))}" changeset="5" uid="9" user="u""""
+    val elements = diffRows.map { r =>
+      if (r.getString(0) == "node")
+        s"""<node ${attrs(r)} lat="${r.getDouble(5)}" lon="${r.getDouble(6)}"/>"""
+      else
+        s"<way ${attrs(r)}>" + r.getSeq[Long](8).map(n => s"""<nd ref="$n"/>""").mkString +
+          r.getMap[String, String](7).map { case (k, v) => s"""<tag k="$k" v="$v"/>""" }.mkString +
+          "</way>"
+    }
+    val out = OsmUpdater.applyDiff(spark, root, oscDf(
+      elements.mkString("<osmChange version=\"0.6\"><create>", "\n", "</create></osmChange>")))
+    def wkbs(df: org.apache.spark.sql.DataFrame) = df
+      .filter(col("osm_type") === "way" || col("osm_id") === 20)
+      .select("osm_type", "osm_id", "osm_version", "wkb").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2)) -> Option(r.getString(3))).toMap
+
+    val history = spark.createDataFrame(
+        spark.sparkContext.parallelize(seedNodes ++ diffRows), entitySchema)
+      .withColumn("changeset", lit(5L)).withColumn("uid", lit(9))
+      .withColumn("user", lit("u"))
+    val batch = wkbs(Contributions.withGeometries(history))
+    val update = wkbs(out)
+    assert(update.keySet === batch.keySet)
+    assert(update === batch, "update-path WKB must equal the batch assembly's")
+    // the cases the shared shape rule covers, as the batch spec pins them
+    assert(update(("way", 10L, 1)).exists(_.startsWith("0103")))
+    assert(update(("way", 13L, 1)).exists(_.startsWith("0102")))
+    assert(update(("way", 30L, 1)).exists(_.startsWith("0101")))
+    assert(update(("node", 20L, 1)).isEmpty)
+  }
 }
