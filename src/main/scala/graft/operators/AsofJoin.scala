@@ -15,28 +15,39 @@ import org.apache.spark.sql.functions._
   * key, one window sort, carry the right side's values forward, keep left
   * rows. Cost is sort-of-union — linear, skew-safe under AQE, and never
   * materializes a pair explosion.
+  * Callers: [[Contributions.refPositions]] (every way geometry, batch,
+  * minor-version and update path), `Contributions.withMemberGeometries`,
+  * `OsmUpdater.relationGeoms` and the Temporal keys.
   */
 object AsofJoin {
 
-  /** @param left      probe side
+  /** @param left      probe side; every left row is kept
     * @param right     reference side (values carried forward in time)
-    * @param key       equality key column (present on both sides)
+    * @param key       equality key column (present on both sides; a
+    *                  composite key is one struct column)
     * @param leftTs    left timestamp column
     * @param rightTs   right timestamp column
     * @param valueCols right columns to attach to each left row
+    * @param tieBreak  right columns ordering right rows of one timestamp,
+    *                  ascending: a version column picks the highest
     */
   def asof(left: DataFrame, right: DataFrame, key: String,
-      leftTs: String, rightTs: String, valueCols: Seq[String]): DataFrame = {
+      leftTs: String, rightTs: String, valueCols: Seq[String],
+      tieBreak: Seq[String] = Seq.empty): DataFrame = {
     val l = left.withColumn("__ts", col(leftTs)).withColumn("__side", lit(1))
     // All matched right columns travel as ONE struct so the carry is
     // row-atomic: a right row whose value column is legitimately NULL must
     // yield NULL (not a back-fill from an older right row), and all value
     // columns must come from the SAME right row. The struct itself is
-    // non-null for every right row, so last(ignoreNulls) picks whole rows.
-    val rvals = struct(valueCols.map(col): _*).as("__rvals")
+    // non-null for every right row, so last(ignoreNulls) picks whole rows
+    // (tie-break columns ride in it too).
+    val ties = tieBreak.indices.map(i => s"__tie$i")
+    val rvals = struct((valueCols.map(col) ++
+      tieBreak.zip(ties).map { case (c, t) => col(c).as(t) }): _*).as("__rvals")
     val r = right.select(col(key), col(rightTs).as("__ts"), lit(0).as("__side"), rvals)
     // right rows sort before left rows at equal ts → "<=" semantics
-    val w = Window.partitionBy(key).orderBy(col("__ts"), col("__side"))
+    val w = Window.partitionBy(key)
+      .orderBy((col("__ts") +: col("__side") +: ties.map(t => col("__rvals").getField(t))): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val leftCols = left.columns
     val unioned = l.select(

@@ -378,58 +378,80 @@ object Contributions {
         col("xz_code"))
   }
 
+  /** Node rows (id, ts_ms, version, visible, lon, lat) as [[refPositions]]
+    * candidates; a deleted version carries no coordinates.
+    */
+  private[graft] def refCandidates(nodes: DataFrame): DataFrame =
+    nodes.select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
+      col("version").as("node_version"),
+      when(col("visible"), col("lon")).as("lon"), when(col("visible"), col("lat")).as("lat"))
+
+  /** Ref positions as of each row's instant — the one ref resolver under
+    * every way geometry (batch, minor-version and update path). Each ref in
+    * `refsCol` resolves through [[AsofJoin.asof]] to the newest version in
+    * `nodes` at or before the row's `tsCol`, a timestamp tie to the higher
+    * version; a winner without coordinates leaves its ref unresolved. Only
+    * the keys, ref position, node id and instant go through the shuffle.
+    *
+    * @param nodes (node_id, node_ts, node_version, lon, lat); a deleted
+    *              version has null lon/lat ([[refCandidates]])
+    * @return per `keys` with at least one resolved ref: `n_pts` (resolved
+    *         refs), `n_refs` and the resolved `lons`/`lats` in ref order
+    */
+  private[graft] def refPositions(rows: DataFrame, keys: Seq[String], tsCol: String,
+      refsCol: String, nodes: DataFrame): DataFrame = {
+    val refs = rows.select((keys.map(col) :+ col(tsCol).as("__row_ts") :+
+      posexplode(col(refsCol)).as(Seq("__pos", "node_id"))): _*)
+    val resolved = col("lon").isNotNull && col("lat").isNotNull &&
+      !isnan(col("lon")) && !isnan(col("lat"))
+    AsofJoin.asof(refs, nodes, "node_id", "__row_ts", "node_ts", Seq("lon", "lat"),
+        tieBreak = Seq("node_version"))
+      .groupBy(keys.map(col): _*)
+      .agg(count(when(resolved, 1)).as("n_pts"), count(lit(1)).as("n_refs"),
+        sort_array(collect_list(
+          when(resolved, struct(col("__pos"), col("lon"), col("lat"))))).as("pts"))
+      .filter(col("n_pts") > 0)
+      .select((keys.map(col) ++ Seq(col("n_pts"), col("n_refs"),
+        expr("transform(pts, p -> p.lon)").as("lons"),
+        expr("transform(pts, p -> p.lat)").as("lats"))): _*)
+  }
+
   /** Geometry assembly for REAL contributions (the reference's
     * ContributionGeometry step): node rows get point WKB; way rows get the
-    * linestring WKB of their refs' AS-OF coordinates — each ref resolved
-    * to the newest node version at or before the way version's timestamp
-    * (rank-1 over node_ts ≤ valid_from, the same as-of shape as
-    * MinorVersions.computeWithGeometry).
+    * geometry of their refs' AS-OF positions ([[refPositions]]: each ref
+    * resolved to the newest node version at or before the way version's
+    * timestamp, a deleted node leaving the ref unresolved), shaped by
+    * [[wayShape]].
     *
-    * Scale: refs explode ⋈ node history shuffles on node id, the same
-    * keyed exchange the minor-version engine reuses; the WKB join-back is
-    * keyed (way id, version). Nodes never materialize per way beyond their
-    * matched as-of rows.
+    * Scale: the as-of lookup shuffles only (way key, ref position, node id,
+    * ts) rows and node versions on node id; the positions join back onto
+    * the way rows once, keyed (osm_type, way id, version).
     */
   def withGeometries(entities: DataFrame): DataFrame = {
     val s = entities.sparkSession
     GeoFunctions.register(s)
     val base = fromEntities(entities)
-    val nodes = entities.filter(col("osm_type") === "node")
-      .select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-        col("version").as("node_version"),
-        col("lat").as("n_lat"), col("lon").as("n_lon"))
-    val asOf = base.filter(col("osm_type") === "way")
-      .select(col("osm_id").as("way_id"), col("osm_version").as("way_version"),
-        col("valid_from"), posexplode(col("refs")).as(Seq("pos", "node_id")))
-      .join(nodes, Seq("node_id"))
-      .filter(col("node_ts") <= col("valid_from"))
-      // desc(version) tie-break: two node versions can share a timestamp
-      // (bulk imports do this); rank-1 must be deterministic, not
-      // partition-order-dependent
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("way_id", "way_version", "pos")
-          .orderBy(desc("node_ts"), desc("node_version"))))
-      .filter(col("rk") === 1)
-    val wayPts = asOf
-      .groupBy("way_id", "way_version")
-      .agg(sort_array(collect_list(struct(col("pos"), col("n_lon"), col("n_lat")))).as("pts"))
-      .select(col("way_id"), col("way_version"),
-        expr("transform(pts, p -> p.n_lon)").as("way_xs"),
-        expr("transform(pts, p -> p.n_lat)").as("way_ys"),
-        size(col("pts")).as("resolved_pts"))
+    val wayPts = refPositions(base.filter(col("osm_type") === "way")
+        .select(col("osm_id").as("way_id"), col("osm_version").as("way_version"),
+          col("valid_from"), col("refs")),
+      Seq("way_id", "way_version"), "valid_from", "refs",
+      refCandidates(entities.filter(col("osm_type") === "node")))
     base
+      // osm_type gate: relation ids overlap way ids freely, and only way
+      // rows may take way positions
       .join(wayPts,
-        base("osm_id") === wayPts("way_id") &&
+        base("osm_type") === lit("way") &&
+          base("osm_id") === wayPts("way_id") &&
           base("osm_version") === wayPts("way_version"), "left")
       .withColumn("geom_incomplete",
-        col("osm_type") === "way" && wayIncomplete(col("refs"), col("resolved_pts")))
+        col("osm_type") === "way" && wayIncomplete(col("refs"), col("n_pts")))
       .withColumn("node_ok", col("osm_type") === "node" && nodeInRange(col("lat"), col("lon")))
-      .withColumn("way_shape", wayShape(col("tags"), col("refs"), col("resolved_pts"),
-        col("way_xs"), col("way_ys")))
+      .withColumn("way_shape", wayShape(col("tags"), col("refs"), col("n_pts"),
+        col("lons"), col("lats")))
       .withColumn("wkb",
         when(col("node_ok"), call_function("wkb_point", col("lon"), col("lat")))
           .when(col("osm_type") === "node", lit(null))
-          .otherwise(wayWkb(col("way_shape"), col("way_xs"), col("way_ys"))))
+          .otherwise(wayWkb(col("way_shape"), col("lons"), col("lats"))))
       .withColumn("geometry_type",
         when(col("node_ok"), "Point")
           .when(col("osm_type") === "node", lit(null))
@@ -451,8 +473,8 @@ object Contributions {
             .orderBy("osm_version")))
           .otherwise(col("wkb")))
       .withColumn("geom_valid", !col("geom_incomplete"))
-      .drop("way_id", "way_version", "way_xs", "way_ys", "way_shape",
-        "node_ok", "resolved_pts", "geom_incomplete")
+      .drop("way_id", "way_version", "lons", "lats", "n_pts", "n_refs", "way_shape",
+        "node_ok", "geom_incomplete")
   }
 
   /** Per-member geometry structs for RELATION rows — the docs'
@@ -462,40 +484,32 @@ object Contributions {
     * `members_geo: array<struct<m_id, role, wkb>>` where each member
     * resolves AS OF the relation row's valid_from to that member's own
     * contribution geometry (node point / way linestring from
-    * [[withGeometries]]); members with no resolvable version carry a null
-    * wkb rather than disappearing.
+    * [[withGeometries]]; a timestamp tie to the higher member version);
+    * members with no resolvable version carry a null wkb rather than
+    * disappearing.
     *
-    * Scale: members explode ⋈ member contribution rows is keyed on
-    * (type, id) — the same exchange class as way assembly — and the
-    * collect-back is keyed on (relation, version). No broadcast of the
-    * fact side, no driver work.
+    * Scale: one [[AsofJoin.asof]] of the exploded members against the
+    * member contribution rows, keyed on (type, id) as one struct column,
+    * and a collect keyed on (relation, version). No broadcast of the fact
+    * side, no driver work.
     */
   def withMemberGeometries(entities: DataFrame): DataFrame = {
     val base = withGeometries(entities)
     val memberRows = base.filter(col("osm_type").isin("node", "way"))
-      .select(col("osm_type").as("m_type"), col("osm_id").as("m_ref"),
+      .select(struct(col("osm_type").as("m_type"), col("osm_id").as("m_ref")).as("m_key"),
         col("valid_from").as("m_ts"), col("osm_version").as("m_ver"),
         col("wkb").as("m_wkb"))
     val relMembers = base.filter(col("osm_type") === "relation" && col("members").isNotNull)
       .select(col("osm_id").as("rel_id"), col("osm_version").as("rel_version"),
         col("valid_from").as("rel_ts"), posexplode(col("members")).as(Seq("mpos", "m")))
       .select(col("rel_id"), col("rel_version"), col("rel_ts"), col("mpos"),
-        col("m.mtype").as("m_type"), col("m.ref").as("m_ref"), col("m.role").as("m_role"))
-    val resolved = relMembers
-      .join(memberRows, Seq("m_type", "m_ref"))
-      .filter(col("m_ts") <= col("rel_ts"))
-      // desc(m_ver) tie-break: bulk imports produce same-timestamp member
-      // versions — rank-1 must be deterministic (the withGeometries rule)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("rel_id", "rel_version", "mpos")
-          .orderBy(desc("m_ts"), desc("m_ver"))))
-      .filter(col("rk") === 1)
-      .select(col("rel_id"), col("rel_version"), col("mpos"), col("m_wkb"))
-    val membersGeo = relMembers
-      .join(resolved, Seq("rel_id", "rel_version", "mpos"), "left")
+        struct(col("m.mtype").as("m_type"), col("m.ref").as("m_ref")).as("m_key"),
+        col("m.role").as("m_role"))
+    val membersGeo = AsofJoin.asof(relMembers, memberRows, "m_key", "rel_ts", "m_ts",
+        Seq("m_wkb"), tieBreak = Seq("m_ver"))
       .groupBy("rel_id", "rel_version")
       .agg(sort_array(collect_list(struct(col("mpos"),
-        concat(col("m_type"), lit("/"), col("m_ref")).as("m_id"),
+        concat(col("m_key.m_type"), lit("/"), col("m_key.m_ref")).as("m_id"),
         col("m_role").as("role"), col("m_wkb").as("wkb")))).as("ms"))
       .select(col("rel_id"), col("rel_version"),
         expr("transform(ms, m -> struct(m.m_id, m.role, m.wkb))").as("members_geo"))

@@ -15,6 +15,9 @@ import org.apache.spark.sql.functions._
   * major rows, then `minor = row_number within (way, version) - 1`. The
   * join is the same node-id partitioning the way-assembly join uses; no
   * range explosion (each node edit lands in exactly one version interval).
+  * The geometry of each row ([[computeWithGeometry]]) comes from the one
+  * as-of ref resolver, [[Contributions.refPositions]], as every way
+  * geometry does.
   */
 object MinorVersions {
 
@@ -24,16 +27,18 @@ object MinorVersions {
     * AS OF that row's timestamp, yielding `length_mm` (geodesic kernel)
     * and `length_delta_mm` vs the previous row of the same way.
     *
-    * Plan shape: the timeline (major ∪ member-edit rows) explodes its refs
-    * with position, as-of joins node coordinate history on node id (rank 1
-    * of node_ts ≤ row ts — no range explosion, candidates bounded by node
-    * history length), then regroups per row to rebuild the ordered
-    * coordinate arrays. Two keyed shuffles total: node-id for the as-of
-    * join, way-id for the regroup — both the partitionings the assembly
-    * pipeline already uses.
+    * Plan shape: the timeline (major ∪ member-edit rows) resolves its refs
+    * through [[Contributions.refPositions]] (the batch assembly's as-of
+    * rule: newest node version at or before the row's ts, a tie to the
+    * higher version, a winner without coordinates unresolved), then
+    * measures the ordered coordinate arrays. A row with no resolved ref
+    * drops. Two keyed shuffles total: node id for the as-of lookup, way id
+    * for the regroup.
     *
     * @param wayVersions  (way_id, osm_version, valid_from, refs)
-    * @param nodeVersions (node_id, ts, lon, lat) — node coordinate history
+    * @param nodeVersions (node_id, ts, node_version, lon, lat) — node
+    *                     coordinate history; a deleted version has null
+    *                     lon/lat
     */
   def computeWithGeometry(wayVersions: DataFrame, nodeVersions: DataFrame): DataFrame = {
     val spark = wayVersions.sparkSession
@@ -41,23 +46,12 @@ object MinorVersions {
     val timeline = compute(wayVersions, nodeVersions.select(col("node_id"), col("ts")))
       .join(wayVersions.select(col("way_id"), col("osm_version"), col("refs")),
         Seq("way_id", "osm_version"))
-    val asOf = timeline
-      .select(col("way_id"), col("osm_version"), col("osm_minor_version"),
-        col("ts"), posexplode(col("refs")).as(Seq("pos", "node_id")))
-      .join(nodeVersions.withColumnRenamed("ts", "node_ts"), Seq("node_id"))
-      .filter(col("node_ts") <= col("ts"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("way_id", "osm_version", "osm_minor_version", "pos")
-          .orderBy(desc("node_ts"))))
-      .filter(col("rk") === 1)
     val byRow = Window.partitionBy("way_id").orderBy("osm_version", "osm_minor_version")
-    asOf
-      .groupBy("way_id", "osm_version", "osm_minor_version", "ts")
-      .agg(sort_array(collect_list(struct(col("pos"), col("lon"), col("lat")))).as("pts"))
-      .withColumn("length_mm", call_function("geodesic_length_mm",
-        expr("transform(pts, p -> p.lon)"), expr("transform(pts, p -> p.lat)")))
-      .withColumn("area_m2", call_function("geodesic_area_m2",
-        expr("transform(pts, p -> p.lon)"), expr("transform(pts, p -> p.lat)")))
+    Contributions.refPositions(timeline, Seq("way_id", "osm_version", "osm_minor_version", "ts"),
+        "ts", "refs", nodeVersions.select(col("node_id"), col("ts").as("node_ts"),
+          col("node_version"), col("lon"), col("lat")))
+      .withColumn("length_mm", call_function("geodesic_length_mm", col("lons"), col("lats")))
+      .withColumn("area_m2", call_function("geodesic_area_m2", col("lons"), col("lats")))
       .withColumn("length_delta_mm",
         col("length_mm") - coalesce(lag("length_mm", 1).over(byRow), lit(0L)))
       .withColumn("area_delta_m2",

@@ -34,10 +34,10 @@ import org.apache.spark.sql.types._
   * from the [[Contributions.nodeInRange]] guard; relation geometry from
   * the [[RelationGeometry]] ring assembly. Within this object, the majors
   * of every entity type come from one step ([[majorsOf]]), way and
-  * relation minors from one step ([[minorsOf]]), ref positions from one
-  * as-of resolver ([[resolveRefs]]), emitted rows from one projection
-  * ([[emit]]) and way and relation store rows from one builder
-  * ([[parentRows]]).
+  * relation minors from one step ([[minorsOf]]), ref positions from the
+  * batch path's as-of resolver ([[Contributions.refPositions]] over
+  * [[refNodes]]), emitted rows from one projection ([[emit]]) and way and
+  * relation store rows from one builder ([[parentRows]]).
   *
   * One known divergence from the batch path remains: an update-path
   * DELETION row carries a null geometry, where
@@ -58,8 +58,8 @@ import org.apache.spark.sql.types._
   * Scale shape: the diff is tiny (minutely) — every diff-derived frame is
   * broadcast into its join against store reads; the only row-matched
   * store data ever materialized is the touched-bucket subset, and the
-  * as-of geometry rebuild shuffles only (way_id, edit) rows of affected
-  * ways exactly like [[MinorVersions.computeWithGeometry]].
+  * as-of geometry rebuild shuffles only the refs of emitted way rows and
+  * their candidate node versions ([[AsofJoin.asof]]).
   *
   * Materialized once: each store read and each store upsert batch is
   * eagerly checkpointed once, so its readers (the bucket collect, the
@@ -239,14 +239,13 @@ object OsmUpdater {
 
     // geometry of every emitted visible way row (major + minor): member
     // coordinates as of the row's instant, from stored node latest ∪ diff
-    // node versions — the computeWithGeometry as-of shape
+    // node versions
     val wayVersions = wayMajors.unionByName(wayMinors, allowMissingColumns = true)
     val wayRowsForGeom = wayVersions.filter(col("visible"))
       .select(col("id"), col("version"), col("osm_minor_version"),
         col("valid_from").as("row_ts"), col("refs"))
-    val wayPts = resolveRefs(wayRowsForGeom, VersionKey, "refs",
-      readFor(spark, dir(root, "nodes"), nodeSchema,
-        wayRowsForGeom.select(explode(col("refs")).as("id")), "id"), dn)
+    val wayPts = Contributions.refPositions(wayRowsForGeom, VersionKey, "row_ts", "refs",
+      refNodes(spark, root, wayRowsForGeom.select(explode(col("refs")).as("id")), dn))
 
     // ---------------- relations ----------------
     val dr = diff.filter(col("osm_type") === "relation")
@@ -403,44 +402,15 @@ object OsmUpdater {
       lon.cast(DoubleType).as("lon"), lat.cast(DoubleType).as("lat"),
       wkb.as("wkb"), lengthMm.cast(LongType).as("length_mm"))
 
-  /** Ref positions as of each row's instant — the update path's one as-of
-    * resolver, with the batch assembly's rank (Contributions.withGeometries):
-    * each ref in `refsCol` resolves to the newest node version at or
-    * before `row_ts` among the stored node rows `storedNodes` and the
-    * diff's node rows `dn`, ties broken by the higher version (same-
-    * timestamp node versions occur in minutely diffs). The candidates keep
-    * DELETE rows: a node deleted in this very diff must win the rank for
-    * instants at/after the deletion, so the ref counts as unresolved
-    * instead of resolving to its stale pre-delete coordinates from the
-    * not-yet-updated store. A winner that is a deletion or has no
-    * coordinates leaves its ref unresolved.
-    *
-    * Returns, per `keys` with at least one resolved ref: `n_pts` (resolved
-    * refs), `n_refs` and the resolved `lons`/`lats` in ref order. A caller
-    * nulls (ways) or drops (relation member lines) a row with
-    * n_pts < n_refs: a shortened line would be a wrong geometry.
+  /** As-of candidates for the node ids in `refIds`: stored rows ∪ the
+    * diff's rows `dn`, DELETE rows included — a node deleted in this diff
+    * must win the as-of rank at and after its deletion, leaving the ref
+    * unresolved instead of resolving to stale stored coordinates.
     */
-  private def resolveRefs(rows: DataFrame, keys: Seq[String], refsCol: String,
-      storedNodes: DataFrame, dn: DataFrame): DataFrame = {
-    def cand(df: DataFrame) = df.select(col("id").as("node_id"), col("ts_ms").as("node_ts"),
-      col("version").as("node_version"), col("lon"), col("lat"), col("visible").as("vis"))
-    rows
-      .select((keys.map(col) :+ col("row_ts") :+ size(col(refsCol)).as("n_refs") :+
-        posexplode(col(refsCol)).as(Seq("pos", "node_id"))): _*)
-      .join(cand(storedNodes).unionByName(cand(dn)), Seq("node_id"))
-      .filter(col("node_ts") <= col("row_ts"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy((keys :+ "pos").map(col): _*)
-          .orderBy(desc("node_ts"), desc("node_version"))))
-      .filter(col("rk") === 1)
-      .filter(col("vis") && !isnan(col("lat")) && !isnan(col("lon")))
-      .groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_pts"), first("n_refs").as("n_refs"),
-        sort_array(collect_list(struct(col("pos"), col("lon"), col("lat")))).as("pts"))
-      .select((keys.map(col) ++ Seq(col("n_pts"), col("n_refs"),
-        expr("transform(pts, p -> p.lon)").as("lons"),
-        expr("transform(pts, p -> p.lat)").as("lats"))): _*)
-  }
+  private def refNodes(spark: SparkSession, root: String, refIds: DataFrame,
+      dn: DataFrame): DataFrame =
+    Contributions.refCandidates(readFor(spark, dir(root, "nodes"), nodeSchema, refIds, "id"))
+      .unionByName(Contributions.refCandidates(dn))
 
   /** The effective state per entity that minor candidacy attaches to:
     * the stored row, overridden by the entity's newest diff major —
@@ -476,9 +446,10 @@ object OsmUpdater {
   /** Multipolygon WKB per emitted relation row — the
     * ContributionUpdater.updateRelation analog
     * (ContributionUpdater.java:101-121): member ways as-of the row's
-    * instant (stored latest overridden by same-diff way versions at or
-    * before it), their node refs as-of the same instant
-    * ([[resolveRefs]]), then the EXACT batch assembly —
+    * instant ([[AsofJoin.asof]] over the stored latest and the same-diff
+    * way versions, a tie to the higher version), their node refs as-of the
+    * same instant ([[Contributions.refPositions]]), then the EXACT batch
+    * assembly —
     * [[RelationGeometry.dedupeWays]] → [[RelationGeometry.stitch]] →
     * [[RelationGeometry.removeSpikes]] → [[RelationGeometry.classify]] →
     * the shared WKB writers — so update-path relation geometry is
@@ -493,30 +464,23 @@ object OsmUpdater {
   private def relationGeoms(spark: SparkSession, root: String,
       relRows: DataFrame, dw: DataFrame, dn: DataFrame): DataFrame = {
     import spark.implicits._
+    // one line per distinct member way of a row
     val members = relRows
       .select(col("id"), col("version"), col("osm_minor_version"), col("row_ts"),
-        explode(arrays_zip(col("refs"), col("ref_types"))).as("m"))
-      .filter(col("m.ref_types") === "way")
-      .select(col("id"), col("version"), col("osm_minor_version"), col("row_ts"),
-        col("m.refs").as("way_id"))
+        explode(array_distinct(transform(
+          filter(arrays_zip(col("refs"), col("ref_types")), m => m("ref_types") === "way"),
+          m => m("refs")))).as("way_id"))
     val wayIds = members.select(col("way_id").as("id"))
     val storedW = readFor(spark, dir(root, "ways"), waySchema, wayIds, "id")
-    val wayCand = storedW
-      .select(col("id").as("way_id"), col("version").as("w_version"),
-        col("ts_ms").as("w_ts"), col("visible").as("w_vis"), col("refs").as("w_refs"))
-      .unionByName(dw
-        .select(col("id").as("way_id"), col("version").as("w_version"),
-          col("ts_ms").as("w_ts"), col("visible").as("w_vis"), col("refs").as("w_refs")))
-    val wayAsOf = members.join(wayCand, Seq("way_id"))
-      .filter(col("w_ts") <= col("row_ts"))
-      .withColumn("wrk", row_number().over(
-        Window.partitionBy("id", "version", "osm_minor_version", "way_id")
-          .orderBy(desc("w_ts"), desc("w_version"))))
-      .filter(col("wrk") === 1 && col("w_vis"))
+    def wayCand(df: DataFrame) = df.select(col("id").as("way_id"), col("version").as("w_version"),
+      col("ts_ms").as("w_ts"), col("visible").as("w_vis"), col("refs").as("w_refs"))
+    val wayAsOf = AsofJoin.asof(members, wayCand(storedW).unionByName(wayCand(dw)),
+        "way_id", "row_ts", "w_ts",
+        Seq("w_vis", "w_refs"), tieBreak = Seq("w_version"))
+      .filter(col("w_vis"))
       .localCheckpoint(true)
-    val lines = resolveRefs(wayAsOf, VersionKey :+ "way_id", "w_refs",
-        readFor(spark, dir(root, "nodes"), nodeSchema,
-          wayAsOf.select(explode(col("w_refs")).as("id")), "id"), dn)
+    val lines = Contributions.refPositions(wayAsOf, VersionKey :+ "way_id", "row_ts", "w_refs",
+        refNodes(spark, root, wayAsOf.select(explode(col("w_refs")).as("id")), dn))
       // an incompletely-resolved member way drops whole: a shortened line
       // would stitch a WRONG ring; a missing one leaves the ring open
       .filter(col("n_pts") === col("n_refs"))

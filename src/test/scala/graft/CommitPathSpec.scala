@@ -36,7 +36,14 @@ class CommitPathSpec extends AnyFunSuite {
       """(\bwhen\(|\bif\b).*"CREATION"""".r,
       Set("graft/operators/Contributions.scala", "graft/streaming/ContributionStream.scala"),
       Set.empty,
-      "classify through Contributions.contribType instead"))
+      "classify through Contributions.contribType instead"),
+    // the "latest version at or before ts" theta filter: the as-of lookup
+    // has one implementation, the linear union-and-carry in AsofJoin
+    Rule("as-of lookups resolve only through AsofJoin",
+      """ts"\) <= col\(""".r,
+      Set("graft/operators/AsofJoin.scala"),
+      Set.empty,
+      "resolve through AsofJoin.asof / Contributions.refPositions"))
 
   private lazy val files: List[Path] = {
     val s = Files.walk(mainDir)

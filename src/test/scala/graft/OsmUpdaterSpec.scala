@@ -653,24 +653,28 @@ class OsmUpdaterSpec extends SparkSpec {
     def way(id: Long, tags: Map[String, String], refs: Seq[Long]) =
       Row("way", id, 1, 9000L, true, Double.NaN, Double.NaN, tags, refs, null)
     // the batch geometry fixtures: closed polygon-feature and non-feature
-    // ways 10-14, the out-of-range node 20, and the one-ref way 30
+    // ways 10-14, the out-of-range node 20, and the one-ref way 30; way 31
+    // references node 22, deleted before the way's timestamp
     val seedNodes = Seq(node(1L, 0.0, 0.0, 1000L), node(2L, 0.0, 1.0, 1000L),
-      node(3L, 1.0, 1.0, 1000L), node(21L, 45.0, 10.0, 1000L))
+      node(3L, 1.0, 1.0, 1000L), node(21L, 45.0, 10.0, 1000L), node(22L, 46.0, 11.0, 1000L))
+    val deleted = Row("node", 22L, 2, 5000L, false, Double.NaN, Double.NaN,
+      Map.empty[String, String], null, null)
     val diffRows = Seq(
-      node(20L, 91.5, 10.0, 1000L),
+      node(20L, 91.5, 10.0, 1000L), deleted,
       way(10L, Map("building" -> "yes"), Seq(1L, 2L, 3L, 1L)),
       way(11L, Map("highway" -> "primary"), Seq(1L, 2L, 3L, 1L)),
       way(12L, Map("building" -> "yes", "area" -> "no"), Seq(1L, 2L, 3L, 1L)),
       way(13L, Map("building" -> "yes"), Seq(1L, 2L, 3L)),
       way(14L, Map("natural" -> "water"), Seq(1L, 2L, 3L, 1L)),
-      way(30L, Map.empty, Seq(21L)))
+      way(30L, Map.empty, Seq(21L)),
+      way(31L, Map.empty, Seq(21L, 22L)))
     OsmUpdater.initStore(spark, root,
       spark.createDataFrame(spark.sparkContext.parallelize(seedNodes), entitySchema))
 
     // the same rows as an osc diff (entitySchema positions)
-    def attrs(r: Row) = s"""id="${r.getLong(1)}" version="1" timestamp="${
+    def attrs(r: Row) = s"""id="${r.getLong(1)}" version="${r.getInt(2)}" timestamp="${
       java.time.Instant.ofEpochMilli(r.getLong(3))}" changeset="5" uid="9" user="u""""
-    val elements = diffRows.map { r =>
+    val elements = diffRows.filter(_.getBoolean(4)).map { r =>
       if (r.getString(0) == "node")
         s"""<node ${attrs(r)} lat="${r.getDouble(5)}" lon="${r.getDouble(6)}"/>"""
       else
@@ -679,7 +683,8 @@ class OsmUpdaterSpec extends SparkSpec {
           "</way>"
     }
     val out = OsmUpdater.applyDiff(spark, root, oscDf(
-      elements.mkString("<osmChange version=\"0.6\"><create>", "\n", "</create></osmChange>")))
+      elements.mkString("<osmChange version=\"0.6\"><create>", "\n", "</create>") +
+        s"<delete><node ${attrs(deleted)}/></delete></osmChange>"))
     def wkbs(df: org.apache.spark.sql.DataFrame) = df
       .filter(col("osm_type") === "way" || col("osm_id") === 20)
       .select("osm_type", "osm_id", "osm_version", "wkb").collect()
@@ -698,5 +703,6 @@ class OsmUpdaterSpec extends SparkSpec {
     assert(update(("way", 13L, 1)).exists(_.startsWith("0102")))
     assert(update(("way", 30L, 1)).exists(_.startsWith("0101")))
     assert(update(("node", 20L, 1)).isEmpty)
+    assert(update(("way", 31L, 1)).isEmpty, "a ref to a deleted node is unresolved")
   }
 }

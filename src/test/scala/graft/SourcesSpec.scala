@@ -526,6 +526,114 @@ class SourcesSpec extends SparkSpec {
     assert(out.filter(_._1 == "node").forall(_._4))
   }
 
+  test("withGeometries: a relation sharing a way's id and version gets no way geometry") {
+    import spark.implicits._
+    val noMembers = Seq.empty[TestMember]
+    // way 10 v1 and relation 10 v1: the way-position join-back must gate
+    // on osm_type, as the members_geo join does
+    val entities = Seq(
+      ("node", 1L, 1, 1000L, 5L, 9, "u", true, 10.0, 20.0,
+        Map.empty[String, String], null.asInstanceOf[Seq[Long]], noMembers),
+      ("node", 2L, 1, 1000L, 5L, 9, "u", true, 11.0, 21.0,
+        Map.empty[String, String], null.asInstanceOf[Seq[Long]], noMembers),
+      ("way", 10L, 1, 2000L, 6L, 9, "u", true, Double.NaN, Double.NaN,
+        Map.empty[String, String], Seq(1L, 2L), noMembers),
+      ("relation", 10L, 1, 2000L, 7L, 9, "u", true, Double.NaN, Double.NaN,
+        Map("type" -> "route"), null.asInstanceOf[Seq[Long]],
+        Seq(TestMember("way", 10L, "")))
+    ).toDF("osm_type", "id", "version", "ts_ms", "changeset", "uid", "user",
+      "visible", "lat", "lon", "tags", "refs", "members")
+    val out = operators.Contributions.withGeometries(entities)
+      .filter(col("osm_id") === 10L).collect()
+      .map(r => r.getAs[String]("osm_type") ->
+        (Option(r.getAs[String]("wkb")), Option(r.getAs[String]("geometry_type")))).toMap
+    assert(out("way")._1.exists(_.startsWith("0102")) && out("way")._2.contains("LineString"))
+    assert(out("relation") === ((None, None)),
+      "the relation row must not take way 10's geometry")
+  }
+
+  test("withGeometries matches a replay of the as-of rule over a deep node history") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20240601L)
+    val noMembers = Seq.empty[TestMember]
+    // node 1: 50 versions whose timestamps repeat (a step of 0 shares the
+    // previous version's instant) and about one in five of which is a
+    // deletion (no coordinates, as the PBF reader gives them); node 2: 8
+    // versions, node 3: one version
+    def history(id: Long, n: Int, t0: Long): Seq[(Long, Int, Long, Boolean, Double, Double)] = {
+      var ts = t0
+      (1 to n).map { v =>
+        if (v > 1) ts += 100L * rnd.nextInt(3)
+        val visible = v == 1 || rnd.nextInt(5) != 0
+        if (visible) (id, v, ts, true, rnd.nextInt(2000) / 100.0, rnd.nextInt(2000) / 100.0)
+        else (id, v, ts, false, Double.NaN, Double.NaN)
+      }
+    }
+    val nodes = history(1L, 50, 1000L) ++ history(2L, 8, 900L) ++ history(3L, 1, 800L)
+    val nodeTs = nodes.map(_._3).distinct.sorted
+    // ways 100 and 101: 20 versions each, half of them at a node instant
+    // exactly (the <= edge), starting before node 1 exists
+    def wayHistory(id: Long, refs: Seq[Long]) = {
+      val ts = (Seq(700L) ++ (2 to 20).map(i =>
+        if (i % 2 == 0) nodeTs(rnd.nextInt(nodeTs.size)) else 700L + rnd.nextInt(5000).toLong)).sorted
+      ts.zipWithIndex.map { case (t, i) => (id, i + 1, t, refs) }
+    }
+    val ways = wayHistory(100L, Seq(2L, 1L)) ++ wayHistory(101L, Seq(1L, 3L, 2L))
+    val entities = (nodes.map { case (id, v, ts, vis, lat, lon) =>
+      ("node", id, v, ts, 5L, 9, "u", vis, lat, lon,
+        Map.empty[String, String], null.asInstanceOf[Seq[Long]], noMembers)
+    } ++ ways.map { case (id, v, ts, refs) =>
+      ("way", id, v, ts, 6L, 9, "u", true, Double.NaN, Double.NaN,
+        Map.empty[String, String], refs, noMembers)
+    }).toDF("osm_type", "id", "version", "ts_ms", "changeset", "uid", "user",
+      "visible", "lat", "lon", "tags", "refs", "members")
+
+    // the rule, replayed on the driver: the newest node version at or
+    // before the way version's timestamp, a tie to the higher version; a
+    // winner without coordinates leaves the ref unresolved, and a way with
+    // an unresolved ref has no geometry
+    def expected(ts: Long, refs: Seq[Long]): (Option[String], Boolean) = {
+      val pts = refs.map { r =>
+        val cands = nodes.filter(n => n._1 == r && n._3 <= ts)
+        if (cands.isEmpty) None
+        else {
+          val w = cands.maxBy(n => (n._3, n._2))
+          if (w._4) Some((w._6, w._5)) else None
+        }
+      }
+      if (pts.exists(_.isEmpty)) (None, false)
+      else (Some(graft.functions.Geo.wkbLineHex(pts.map(_.get._1).toArray,
+        pts.map(_.get._2).toArray)), true)
+    }
+    val wayRows = operators.Contributions.withGeometries(entities)
+      .filter(col("osm_type") === "way")
+    val got = wayRows.collect()
+      .map(r => (r.getAs[Long]("osm_id"), r.getAs[Int]("osm_version")) ->
+        ((Option(r.getAs[String]("wkb")), r.getAs[Boolean]("geom_valid")))).toMap
+    val want = ways.map { case (id, v, ts, refs) => (id, v) -> expected(ts, refs) }.toMap
+    assert(got === want)
+    // the fixture exercises every branch of the rule
+    assert(want.values.exists(_._2) && want.values.exists(!_._2))
+    assert(nodes.exists(!_._4) && nodes.groupBy(n => (n._1, n._3)).values.exists(_.size > 1))
+
+    // no join compares timestamps: the as-of lookup is a keyed sort, not
+    // a theta join
+    import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, EqualNullSafe, EqualTo}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    val joins = Plans.collectWithSubqueries(wayRows.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j
+    }
+    assert(joins.nonEmpty, "the way positions join back onto the way rows")
+    val theta = joins.filter(_.condition.exists(_.exists {
+      case _: EqualTo | _: EqualNullSafe => false
+      case _: BinaryComparison => true
+      case _ => false
+    }))
+    assert(theta.isEmpty, theta.map(_.condition).mkString("theta joins: ", "; ", ""))
+  }
+
   test("changeset dump reader: delimiter-split parse, plain and bz2") {
     // planet-dump-shaped file: many changesets, one document
     val xml = new StringBuilder(

@@ -113,10 +113,10 @@ class TemporalSpec extends SparkSpec {
     // node 10 created at ts 50 at (0,0), moves east at ts 200;
     // node 13 sits still at (1,0)
     val nodes = Seq(
-      (10L, 50L, 0.0, 0.0),
-      (10L, 200L, 2.0, 0.0),
-      (13L, 50L, 1.0, 0.0))
-      .toDF("node_id", "ts", "lon", "lat")
+      (10L, 50L, 1, 0.0, 0.0),
+      (10L, 200L, 2, 2.0, 0.0),
+      (13L, 50L, 1, 1.0, 0.0))
+      .toDF("node_id", "ts", "node_version", "lon", "lat")
     val out = MinorVersions.computeWithGeometry(ways, nodes).collect()
     val rows = out.map(r => (r.getAs[Int]("osm_version"),
       r.getAs[Int]("osm_minor_version"), r.getAs[Long]("length_mm"),
@@ -136,9 +136,9 @@ class TemporalSpec extends SparkSpec {
     val triWays = Seq((7L, 1, 100L, Seq(20L, 21L, 22L)))
       .toDF("way_id", "osm_version", "valid_from", "refs")
     val triNodes = Seq(
-      (20L, 50L, 0.0, 0.0), (21L, 50L, 1.0, 0.0), (22L, 50L, 0.0, 1.0),
-      (22L, 200L, 0.0, 2.0)) // triangle doubles in height
-      .toDF("node_id", "ts", "lon", "lat")
+      (20L, 50L, 1, 0.0, 0.0), (21L, 50L, 1, 1.0, 0.0), (22L, 50L, 1, 0.0, 1.0),
+      (22L, 200L, 2, 0.0, 2.0)) // triangle doubles in height
+      .toDF("node_id", "ts", "node_version", "lon", "lat")
     val tri = MinorVersions.computeWithGeometry(triWays, triNodes)
       .orderBy("osm_minor_version").collect()
     val a0 = graft.functions.Geo.geodesicAreaM2(Array(0.0, 1.0, 0.0), Array(0.0, 0.0, 1.0))
@@ -149,13 +149,30 @@ class TemporalSpec extends SparkSpec {
     assert(a1 > a0 && a0 > 5.0e9, s"triangle areas $a0 -> $a1")
   }
 
+  test("minor-version geometry: a same-timestamp node tie resolves to the higher version") {
+    import spark.implicits._
+    val ways = Seq((42L, 1, 100L, Seq(10L, 13L)))
+      .toDF("way_id", "osm_version", "valid_from", "refs")
+    // node 10 has two versions at ts 50 (bulk-import shape), the higher one
+    // listed first; node 13 sits at (1,0)
+    val nodes = Seq(
+      (10L, 50L, 2, 3.0, 0.0),
+      (10L, 50L, 1, 0.0, 0.0),
+      (13L, 50L, 1, 1.0, 0.0))
+      .toDF("node_id", "ts", "node_version", "lon", "lat")
+    val out = MinorVersions.computeWithGeometry(ways, nodes).collect()
+    val v2 = graft.functions.Geo.geodesicLengthMm(Array(3.0, 1.0), Array(0.0, 0.0))
+    assert(out.map(r => (r.getAs[Int]("osm_minor_version"), r.getAs[Long]("length_mm"))).toSeq ===
+      Seq((0, v2)), "node 10 must resolve to version 2's lon 3.0")
+  }
+
   test("relation minors cascade: node move → way minor → relation minor") {
     import spark.implicits._
     val ways = Seq((42L, 1, 100L, Seq(10L, 13L)))
       .toDF("way_id", "osm_version", "valid_from", "refs")
-    val nodes = Seq((10L, 50L, 0.0, 0.0), (13L, 50L, 1.0, 0.0),
-      (10L, 200L, 2.0, 0.0))
-      .toDF("node_id", "ts", "lon", "lat")
+    val nodes = Seq((10L, 50L, 1, 0.0, 0.0), (13L, 50L, 1, 1.0, 0.0),
+      (10L, 200L, 2, 2.0, 0.0))
+      .toDF("node_id", "ts", "node_version", "lon", "lat")
     // the way's timeline: its major row at 100 + node-induced minor at 200
     val wayTimeline = MinorVersions.computeWithGeometry(ways, nodes)
       .select(col("way_id"), col("ts"))
