@@ -14,10 +14,12 @@ import org.apache.spark.sql.functions._
   *                                             # contributions, same layout
   * graft.Cli changesets    <sfDir> <outDir>    # sessionized changesets
   * graft.Cli replication   <sfDir> <outDir>    # diff-merged latest state
-  * graft.Cli replication-catchup <replDir> <storeDir> [maxSteps]
+  * graft.Cli osm-update-init <pbf> <storeRoot> # seed the typed update
+  *                                             # store from a history PBF
+  * graft.Cli osm-update <replDir> <storeRoot> [maxSteps]
   *                                             # apply pending .osc diffs in
   *                                             # sequence order; resumable
-  *                                             # via storeDir/state.txt
+  *                                             # via storeRoot/state.txt
   * graft.Cli changeset-catchup <diffDir> <storeDir> [maxSteps]
   *                                             # apply pending changeset .osm
   *                                             # diffs into the changeset
@@ -34,22 +36,21 @@ import org.apache.spark.sql.functions._
   *                                             # per-doc verdicts (partitioned
   *                                             # by drop reason) + kept corpus
   * graft.Cli pbf-info   <file> <outDir>        # debug: blob/entity summary
-  * graft.Cli store-peek <storeDir> <osmId>     # debug: element's versions
+  * graft.Cli store-peek <storeRoot> <osmId>    # debug: element's stored
+  *                                             # and emitted rows
   * }}}
   *
-  * `replication-catchup` is the reference `replication` command's
-  * catch-up loop (ReplicationManager.java): one invocation applies every
-  * pending sequence number; re-invoking resumes from the persisted state
-  * (continuous mode = the OsmXml.streamOsc watched-directory stream).
+  * `osm-update` is the reference `replication` command's catch-up loop
+  * (ReplicationManager.java): one invocation applies every pending
+  * sequence number; re-invoking resumes from the persisted state
+  * (continuous mode = [[graft.streaming.OsmUpdateStream]]).
   */
 object Cli {
   def main(args: Array[String]): Unit = {
     require(args.length == 3 ||
       (args.length == 4 &&
-        Set("replication-catchup", "osm-update", "changeset-catchup",
-          "changeset-refresh")(args(0))),
+        Set("osm-update", "changeset-catchup", "changeset-refresh")(args(0))),
       "usage: graft.Cli <contributions|contributions-pbf|changesets|replication> <in> <outDir>" +
-        " | graft.Cli replication-catchup <replDir> <storeDir> [maxSteps]" +
         " | graft.Cli changeset-catchup <diffDir> <storeDir> [maxSteps]" +
         " | graft.Cli changeset-refresh <closureFile> <storeDir> [cutoffIso]" +
         " | graft.Cli osm-update-init <pbf> <storeRoot>" +
@@ -197,12 +198,6 @@ object Cli {
         val (nd, sl) = operators.Bm25Index.stats(s"$outDir/index")
         println(s"[graft] search: indexed_docs=$nd sum_dl=$sl " +
           s"queries=${res.select("query_id").distinct().count()} hits=${res.count()}")
-      case "replication-catchup" =>
-        // optional 4th arg = max states per run (the reference's `--size`)
-        val maxSteps = if (args.length == 4) args(3).toInt else Int.MaxValue
-        val n = operators.ReplicationCatchup.catchUp(spark, sfDir, outDir, maxSteps)
-        val st = operators.ReplicationCatchup.readState(outDir)
-        println(s"[graft] applied $n diff(s); state=${st.map(_.sequenceNumber).getOrElse(0L)}")
       case "changeset-catchup" =>
         // sequenced changeset-diff catch-up (ChangesetStateManager.java
         // analog): minutely changeset .osm diffs upserted into the store
@@ -239,18 +234,14 @@ object Cli {
         // ContributionUpdater catch-up: ordered .osc diffs against the
         // typed store, per-sequence contribution output, resumable state.
         // SPARK_GRAFT_CHANGESET_DB points at a changeset store to join
-        // changeset structs onto every emitted row (--changeset-db)
+        // changeset structs onto every emitted row (--changeset-db);
+        // optional 4th arg = max states per run (the reference's `--size`)
         val maxSteps = if (args.length == 4) args(3).toInt else Int.MaxValue
         val csDb = sys.env.get("SPARK_GRAFT_CHANGESET_DB")
           .map(d => graft.sources.ChangesetStore.readAuto(spark, d))
         val n = operators.OsmUpdater.catchUp(spark, sfDir, outDir, maxSteps, csDb)
         val st = operators.ReplicationCatchup.readState(outDir)
         println(s"[graft] osm-update: applied $n diff(s); state=${st.map(_.sequenceNumber).getOrElse(0L)}")
-      case "replication-compact" =>
-        // fold committed event batches into one base artifact (RocksDB
-        // compaction analog for the append-only catch-up store)
-        val k = operators.ReplicationCatchup.compact(spark, sfDir)
-        println(s"[graft] replication-compact: events folded up to sequence $k")
       case "pbf-info" =>
         // Debug.java `fileinfo` analog: header/blob structure + entity
         // counts by type, printed and written as a one-row parquet
@@ -268,13 +259,25 @@ object Cli {
           s"nodes=${counts.getOrElse("node", 0L)} ways=${counts.getOrElse("way", 0L)} " +
           s"relations=${counts.getOrElse("relation", 0L)}")
       case "store-peek" =>
-        // Debug.java `replication-store` analog: show one element's rows
-        // from the catch-up store (outDir arg carries the osm id)
-        val rows = operators.ReplicationCatchup.currentContributions(spark, sfDir)
-          .filter(col("osm_id") === outDir.toLong)
-          .orderBy("osm_version").collect()
-        rows.foreach(r => println(s"[graft] $r"))
-        println(s"[graft] store-peek: ${rows.length} version(s) of $outDir")
+        // Debug.java `replication-store` analog: one element's rows in the
+        // typed update store and its emitted contributions under
+        // out/seq=N (outDir arg carries the osm id)
+        val id = outDir.toLong
+        val stored = Seq("nodes", "ways", "relations").flatMap { t =>
+          val d = s"$sfDir/$t"
+          if (graft.sources.ChangesetStore.currentVersion(spark, d).isEmpty) Nil
+          else graft.sources.ChangesetStore.readAuto(spark, d)
+            .filter(col("id") === id).collect().map(r => s"$t $r").toSeq
+        }
+        val emitted =
+          if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sfDir, "out")))
+            Array.empty[org.apache.spark.sql.Row]
+          else spark.read.parquet(s"$sfDir/out").filter(col("osm_id") === id)
+            .orderBy("seq", "osm_type", "osm_version", "osm_minor_version").collect()
+        stored.foreach(r => println(s"[graft] $r"))
+        emitted.foreach(r => println(s"[graft] out $r"))
+        println(s"[graft] store-peek: ${stored.length} stored, " +
+          s"${emitted.length} emitted row(s) of $outDir")
       case other => throw new IllegalArgumentException(s"unknown command $other")
     } finally progress.foreach(spark.sparkContext.removeSparkListener)
     println(s"[graft] $cmd -> $outDir")

@@ -512,11 +512,10 @@ object OsmUpdater {
   }
 
   /** Sequenced catch-up over a replication directory of `.osc` diffs — the
-    * full ReplicationManager.java loop on the TYPED store: applies the
-    * pending run of sequences ([[ReplicationCatchup.pending]]: strict
-    * order, a gap stops it, at most `maxSteps`), writes each diff's
-    * emitted contributions to `out/seq=N/`, and bumps the `state.txt`
-    * bookmark last. [[applyDiff]] is idempotent per diff (store timestamps
+    * full ReplicationManager.java loop: applies the pending run of
+    * sequences ([[ReplicationCatchup.pending]]: strict order, a gap stops
+    * it, at most `maxSteps`), writes each diff's emitted contributions to
+    * `out/seq=N/`, and bumps the `state.txt` bookmark last. [[applyDiff]] is idempotent per diff (store timestamps
     * advance past applied edits), so a crash between the store upserts and
     * the state write re-runs the diff into the same state. Returns the
     * number of diffs applied.

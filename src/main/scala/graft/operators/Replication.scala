@@ -95,20 +95,6 @@ object Replication {
     kept.unionByName(rebuilt)
   }
 
-  /** Adapt parsed `.osc` rows (OsmXml.readOsc) to the events shape so they
-    * flow through [[updateContributions]]: delete actions become the
-    * visible=false marker, tags serialize to the props JSON, node latitude
-    * plays the geometry proxy.
-    */
-  def oscAsEvents(osc: DataFrame): DataFrame =
-    osc.select(
-      col("id").as("user_id"),
-      unix_micros(to_timestamp(col("ts"))).as("ts_us"),
-      (col("id") * 1000 + col("version")).as("event_id"),
-      when(col("action") === "delete", "error").otherwise(col("action")).as("event_type"),
-      to_json(col("tags")).as("props"),
-      coalesce(col("lat"), lit(0.0)).as("value"))
-
   /** Oracle-checked composition on the parquet tables: events ≤ cut are the
     * stored base, events > cut play the incoming diff batch.
     */

@@ -140,24 +140,32 @@ class CliSpec extends SparkSpec {
     assert(byId(2L).getAs[String]("geom") == null)
   }
 
-  test("cli replication-catchup applies pending diffs and resumes from state") {
+  test("cli osm-update applies pending diffs onto an empty root and resumes from state") {
+    import org.apache.spark.sql.functions.col
     val repl = java.nio.file.Files.createTempDirectory("graft-cli-repl")
+    // no osm-update-init: the first diff creates the typed store
     val store = java.nio.file.Files.createTempDirectory("graft-cli-store").toString
     def osc(body: String) =
       s"""<?xml version="1.0"?><osmChange version="0.6">$body</osmChange>"""
     java.nio.file.Files.writeString(repl.resolve("1.osc"), osc(
       """<create><node id="1" version="1" timestamp="2024-01-21T00:00:00Z" changeset="7" uid="9" user="bob" lat="52.5" lon="13.4"/></create>"""))
-    Cli.main(Array("replication-catchup", repl.toString, store))
+    Cli.main(Array("osm-update", repl.toString, store))
     assert(graft.operators.ReplicationCatchup.readState(store)
       .map(_.sequenceNumber) === Some(1L))
     // a later diff arrives; re-invoking resumes from the bookmark
     java.nio.file.Files.writeString(repl.resolve("2.osc"), osc(
       """<modify><node id="1" version="2" timestamp="2024-01-21T00:01:00Z" changeset="8" uid="9" user="bob" lat="52.6" lon="13.4"/></modify>"""))
-    Cli.main(Array("replication-catchup", repl.toString, store))
+    Cli.main(Array("osm-update", repl.toString, store))
     assert(graft.operators.ReplicationCatchup.readState(store)
       .map(_.sequenceNumber) === Some(2L))
-    assert(graft.operators.ReplicationCatchup
-      .currentContributions(spark, store).count() === 2L)
+    val stored = graft.sources.ChangesetStore.readAuto(spark, s"$store/nodes")
+      .filter(col("id") === 1L).collect()
+    assert(stored.map(_.getAs[Int]("version")).toSeq === Seq(2))
+    val emitted = spark.read.parquet(s"$store/out")
+      .filter(col("osm_type") === "node" && col("osm_id") === 1L)
+      .orderBy("seq").collect()
+      .map(r => (r.getAs[Int]("seq"), r.getAs[Int]("osm_version"), r.getAs[String]("contrib_type")))
+    assert(emitted.toSeq === Seq((1, 1, "CREATION"), (2, 2, "GEOMETRY")))
   }
 
   test("cli changeset-refresh closes open candidates from a re-fetched file") {

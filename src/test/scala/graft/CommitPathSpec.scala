@@ -43,7 +43,15 @@ class CommitPathSpec extends AnyFunSuite {
       """ts"\) <= col\(""".r,
       Set("graft/operators/AsofJoin.scala"),
       Set.empty,
-      "resolve through AsofJoin.asof / Contributions.refPositions"))
+      "resolve through AsofJoin.asof / Contributions.refPositions"),
+    // a replication diff is applied by OsmUpdater.applyDiff alone: the
+    // sequenced catch-up and the watched-directory stream are the only
+    // readers of `.osc` files
+    Rule("replication diffs are read only by OsmUpdater and OsmUpdateStream",
+      """OsmXml\.(readOsc|streamOsc)\(""".r,
+      Set("graft/operators/OsmUpdater.scala", "graft/streaming/OsmUpdateStream.scala"),
+      Set.empty,
+      "apply diffs through OsmUpdater.catchUp / OsmUpdateStream instead"))
 
   private lazy val files: List[Path] = {
     val s = Files.walk(mainDir)

@@ -96,7 +96,6 @@ class EndToEndSpec extends SparkSpec {
 
   test("osc diff → store upsert → re-emitted enriched contributions") {
     import graft.operators.Replication
-    import graft.sources.OsmXml
     import spark.implicits._
     // base store: entity 1 (two versions) and entity 2 (one version)
     val base = Seq(
@@ -104,21 +103,12 @@ class EndToEndSpec extends SparkSpec {
       (1L, 2000L, 11L, "modify", """{"k":"2"}""", 1.0),
       (2L, 1500L, 20L, "create", """{"k":"9"}""", 2.0))
       .toDF("user_id", "ts_us", "event_id", "event_type", "props", "value")
-    // minutely diff: entity 1 gets deleted, entity 3 is created
-    val osc =
-      """<?xml version="1.0"?>
-        |<osmChange version="0.6">
-        | <delete>
-        |  <node id="1" version="3" timestamp="2024-01-21T00:00:00Z" changeset="7" uid="9" user="bob"/>
-        | </delete>
-        | <create>
-        |  <node id="3" version="1" timestamp="2024-01-21T00:01:00Z" changeset="7" uid="9" user="bob"
-        |        lat="52.5" lon="13.4"><tag k="amenity" v="cafe"/></node>
-        | </create>
-        |</osmChange>""".stripMargin
-    val tmp = java.nio.file.Files.createTempDirectory("graft-repl")
-    java.nio.file.Files.writeString(tmp.resolve("d.osc"), osc)
-    val diff = Replication.oscAsEvents(OsmXml.readOsc(spark, tmp.toString + "/*.osc"))
+    // minutely diff: entity 1 gets deleted (2024-01-21T00:00:00Z), entity 3
+    // is created a minute later; a delete is the visible=false marker
+    val diff = Seq(
+      (1L, 1705795200000000L, 1003L, "error", "{}", 0.0),
+      (3L, 1705795260000000L, 3001L, "create", """{"amenity":"cafe"}""", 52.5))
+      .toDF("user_id", "ts_us", "event_id", "event_type", "props", "value")
 
     val out = Replication.updateContributions(base, diff)
       .orderBy("osm_id", "osm_version").collect()
@@ -259,7 +249,7 @@ class EndToEndSpec extends SparkSpec {
     assert(info.getAs[Long]("n_nodes") === 5L) // all versions incl. the delete
     java.nio.file.Files.delete(tmp)
 
-    // store-peek over a catch-up store with two versions of entity 1
+    // store-peek over a typed update store with two versions of node 1
     val repl = java.nio.file.Files.createTempDirectory("graft-dbg-repl")
     val store = java.nio.file.Files.createTempDirectory("graft-dbg-store").toString
     def osc(b: String) = s"""<?xml version="1.0"?><osmChange version="0.6">$b</osmChange>"""
@@ -267,9 +257,13 @@ class EndToEndSpec extends SparkSpec {
       """<create><node id="1" version="1" timestamp="2024-01-21T00:00:00Z" changeset="7" uid="9" user="b" lat="1.0" lon="2.0"/></create>"""))
     java.nio.file.Files.writeString(repl.resolve("2.osc"), osc(
       """<modify><node id="1" version="2" timestamp="2024-01-21T00:01:00Z" changeset="8" uid="9" user="b" lat="1.5" lon="2.0"/></modify>"""))
-    Cli.main(Array("replication-catchup", repl.toString, store))
-    Cli.main(Array("store-peek", store, "1")) // prints; assert via the API
-    assert(graft.operators.ReplicationCatchup.currentContributions(spark, store)
-      .filter(col("osm_id") === 1L).count() === 2L)
+    Cli.main(Array("osm-update", repl.toString, store))
+    val printed = new ByteArrayOutputStream()
+    Console.withOut(printed)(Cli.main(Array("store-peek", store, "1")))
+    val lines = printed.toString("UTF-8").linesIterator.toSeq
+    // the latest stored row, then one emitted row per applied version
+    assert(lines.contains("[graft] store-peek: 1 stored, 2 emitted row(s) of 1"))
+    assert(lines.exists(_.startsWith("[graft] nodes [1,2,")))
+    assert(lines.count(_.startsWith("[graft] out [node,1,")) === 2)
   }
 }

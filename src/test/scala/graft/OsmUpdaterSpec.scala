@@ -6,6 +6,8 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 /** Entity-typed replication update: node→way→relation backref propagation,
   * minor-version numbering, store maintenance across diffs.
   */
@@ -622,27 +624,86 @@ class OsmUpdaterSpec extends SparkSpec {
     val root = freshRoot()
     OsmUpdater.initStore(spark, root, seedEntities)
     val replDir = java.nio.file.Files.createTempDirectory("graft-upd-gap")
-    def move(seq: Int, lat: Double): Unit =
-      java.nio.file.Files.writeString(replDir.resolve(s"$seq.osc"),
-        s"""<osmChange version="0.6">
-          | <modify>
-          |  <node id="1" version="${seq + 1}" timestamp="2024-01-01T0$seq:00:00Z" changeset="100" uid="9" user="alice" lat="$lat" lon="1.0"/>
-          | </modify>
-          |</osmChange>""".stripMargin)
-    move(1, 1.5)
-    move(3, 1.7)
+    moveNode1(replDir, 1, 1.5)
+    moveNode1(replDir, 3, 1.7)
     // sequence 2 is missing: only 1 applies, and 3 is not applied past it
     assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 1L)
     assert(graft.operators.ReplicationCatchup.readState(root)
       .map(_.sequenceNumber) === Some(1L))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "out", "seq=3")))
     // the gap filled upstream: the run resumes and continues through 3
-    move(2, 1.6)
+    moveNode1(replDir, 2, 1.6)
     assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 2L)
     assert(graft.operators.ReplicationCatchup.readState(root)
       .map(_.sequenceNumber) === Some(3L))
     val nodes = ChangesetStore.readAuto(spark, s"$root/nodes").filter(col("id") === 1).collect()
     assert(nodes.map(r => (r.getAs[Int]("version"), r.getAs[Double]("lat"))).toSeq === Seq((4, 1.7)))
+  }
+
+  /** Diff `seq` in `replDir`: node 1 moves to `lat` as version seq + 1. */
+  private def moveNode1(replDir: java.nio.file.Path, seq: Int, lat: Double): Unit =
+    java.nio.file.Files.writeString(replDir.resolve(s"$seq.osc"),
+      s"""<osmChange version="0.6">
+        | <modify>
+        |  <node id="1" version="${seq + 1}" timestamp="2024-01-01T0$seq:00:00Z" changeset="100" uid="9" user="alice" lat="$lat" lon="1.0"/>
+        | </modify>
+        |</osmChange>""".stripMargin)
+
+  /** Two pending node-1 moves in `replDir`, sequences 1 and 2. */
+  private def twoMoves(replDir: java.nio.file.Path): Unit = {
+    moveNode1(replDir, 1, 1.5)
+    moveNode1(replDir, 2, 1.6)
+  }
+
+  test("a bookmark behind the store re-runs its diff and keeps the committed output") {
+    val root = freshRoot()
+    OsmUpdater.initStore(spark, root, seedEntities)
+    val replDir = java.nio.file.Files.createTempDirectory("graft-upd-crash")
+    twoMoves(replDir)
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 2L)
+
+    val tables = Seq("nodes", "ways", "relations", "node_ways", "node_relations", "way_relations")
+    def storeRows = tables.map(t =>
+      t -> ChangesetStore.readAuto(spark, s"$root/$t").collect().map(_.toString).sorted.toSeq)
+    def outFiles = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(root, "out", "seq=2"))
+      try s.iterator().asScala.toSeq.sortBy(_.getFileName.toString)
+        .map(p => p.getFileName.toString -> java.nio.file.Files.readAllBytes(p).toSeq)
+      finally s.close()
+    }
+    val rowsBefore = storeRows
+    val filesBefore = outFiles
+    assert(filesBefore.exists(_._1.endsWith(".parquet")))
+
+    // a crash after diff 2's store upserts, before its bookmark: state.txt
+    // still names sequence 1
+    val st = graft.operators.ReplicationCatchup.readState(root).get
+    graft.operators.ReplicationCatchup.writeState(spark, root, st.copy(sequenceNumber = 1L))
+
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root) === 1L)
+    assert(graft.operators.ReplicationCatchup.readState(root)
+      .map(_.sequenceNumber) === Some(2L))
+    // the replay re-emits nothing (the store already holds diff 2), so an
+    // overwrite would lose the way-10 minor; the committed output stays
+    assert(outFiles === filesBefore, "out/seq=2 must keep its committed files")
+    assert(storeRows === rowsBefore, "the replay must leave every store table as it was")
+  }
+
+  test("maxSteps bounds a catch-up run") {
+    val root = freshRoot()
+    OsmUpdater.initStore(spark, root, seedEntities)
+    val replDir = java.nio.file.Files.createTempDirectory("graft-upd-steps")
+    twoMoves(replDir)
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root, maxSteps = 1) === 1L)
+    assert(graft.operators.ReplicationCatchup.readState(root)
+      .map(_.sequenceNumber) === Some(1L))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "out", "seq=2")))
+    assert(ChangesetStore.readAuto(spark, s"$root/nodes").filter(col("id") === 1)
+      .select("version").collect().map(_.getInt(0)).toSeq === Seq(2))
+    // the next run picks up where the bound stopped
+    assert(OsmUpdater.catchUp(spark, replDir.toString, root, maxSteps = 1) === 1L)
+    assert(graft.operators.ReplicationCatchup.readState(root)
+      .map(_.sequenceNumber) === Some(2L))
   }
 
   test("update-path geometry equals the batch assembly for the same history") {

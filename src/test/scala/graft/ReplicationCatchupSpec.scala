@@ -1,12 +1,10 @@
 package graft
 
-import graft.operators.{Replication, ReplicationCatchup}
-import graft.sources.OsmXml
-import org.apache.spark.sql.functions._
+import graft.operators.ReplicationCatchup
 
-/** Catch-up sequencing: ordered multi-diff application with persisted
-  * sequence state and idempotent crash-resume
-  * (ReplicationManager.java / ContributionStateManager.java semantics).
+/** Replication sequencing shared by the catch-ups: diff discovery over the
+  * reference's replication directory layouts
+  * (ReplicationState.sequenceNumberAsPath).
   */
 class ReplicationCatchupSpec extends SparkSpec {
 
@@ -16,158 +14,14 @@ class ReplicationCatchupSpec extends SparkSpec {
        |$body
        |</osmChange>""".stripMargin
 
-  // three minutely diffs; entity 1 is touched in diff 1 AND diff 3
   private val diff1 = osc(
     """ <create>
       |  <node id="1" version="1" timestamp="2024-01-21T00:00:00Z" changeset="7" uid="9" user="bob" lat="52.5" lon="13.4"><tag k="k" v="1"/></node>
-      |  <node id="2" version="1" timestamp="2024-01-21T00:00:30Z" changeset="7" uid="9" user="bob" lat="48.1" lon="11.6"/>
       | </create>""".stripMargin)
   private val diff2 = osc(
     """ <create>
       |  <node id="3" version="1" timestamp="2024-01-21T00:01:00Z" changeset="8" uid="9" user="bob" lat="50.9" lon="6.9"/>
       | </create>""".stripMargin)
-  private val diff3 = osc(
-    """ <modify>
-      |  <node id="1" version="2" timestamp="2024-01-21T00:02:00Z" changeset="9" uid="9" user="bob" lat="52.6" lon="13.4"><tag k="k" v="2"/></node>
-      | </modify>
-      | <delete>
-      |  <node id="2" version="2" timestamp="2024-01-21T00:02:30Z" changeset="9" uid="9" user="bob"/>
-      | </delete>""".stripMargin)
-
-  private def writeDiffs(dir: java.nio.file.Path, diffs: (Int, String)*): Unit =
-    diffs.foreach { case (seq, xml) =>
-      java.nio.file.Files.writeString(dir.resolve(s"$seq.osc"), xml)
-    }
-
-  /** One-shot rebuild over the same three diffs — the equality target. */
-  private def oneShot(replDir: String) =
-    Replication.versionChains(
-      Replication.oscAsEvents(OsmXml.readOsc(spark, replDir + "/*.osc")))
-
-  private def collectContribs(df: org.apache.spark.sql.DataFrame) =
-    df.orderBy("osm_id", "osm_version").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        Option(r.get(3)), r.getString(4), r.getString(5))).toSeq
-
-  test("3 sequential diffs apply in order; result equals a one-shot rebuild") {
-    val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl")
-    val store = java.nio.file.Files.createTempDirectory("graft-cu-store")
-    writeDiffs(repl, 1 -> diff1, 2 -> diff2, 3 -> diff3)
-
-    val n = ReplicationCatchup.catchUp(spark, repl.toString, store.toString)
-    assert(n === 3L)
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(3L))
-    assert(collectContribs(ReplicationCatchup.currentContributions(spark, store.toString))
-      === collectContribs(oneShot(repl.toString)))
-    // per-diff emitted outputs exist, and diff 3's covers both touched entities
-    val out3 = spark.read.parquet(s"$store/out/seq=3")
-    assert(out3.select("osm_id").distinct().collect().map(_.getLong(0)).sorted.toSeq
-      === Seq(1L, 2L))
-    // idempotent no-op when already caught up
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString) === 0L)
-  }
-
-  test("crash between data write and state write resumes idempotently") {
-    val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl2")
-    val store = java.nio.file.Files.createTempDirectory("graft-cu-store2")
-    writeDiffs(repl, 1 -> diff1, 2 -> diff2, 3 -> diff3)
-
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString, maxSteps = 1) === 1L)
-
-    // simulate a crash mid-step 2: the event batch landed but state.txt was
-    // never bumped — the bookmark still says sequence 1
-    Replication.oscAsEvents(OsmXml.readOsc(spark, repl.resolve("2.osc").toString))
-      .select("user_id", "ts_us", "event_id", "event_type", "props", "value")
-      .write.mode("overwrite").parquet(s"$store/events/batch=2")
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(1L))
-
-    // resume: re-applies 2 (overwriting the orphan batch, not doubling it), then 3
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString) === 2L)
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(3L))
-    assert(collectContribs(ReplicationCatchup.currentContributions(spark, store.toString))
-      === collectContribs(oneShot(repl.toString)))
-  }
-
-  test("truncated uncommitted batch files never enter the read path") {
-    val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl6")
-    val store = java.nio.file.Files.createTempDirectory("graft-cu-store6")
-    writeDiffs(repl, 1 -> diff1, 2 -> diff2)
-
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString, maxSteps = 1) === 1L)
-
-    // crash mid-write of batch 2: a TRUNCATED part file (no parquet footer)
-    // is left behind. A whole-directory scan would abort on its footer read
-    // before any batch filter applies; the explicit committed-path read
-    // must never see it.
-    val orphanDir = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(s"$store/events/batch=2"))
-    java.nio.file.Files.write(orphanDir.resolve("part-00000.snappy.parquet"),
-      Array[Byte]('P', 'A', 'R', '1', 42, 42, 42)) // magic + garbage, no footer
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(1L))
-    assert(ReplicationCatchup.currentContributions(spark, store.toString).count() > 0,
-      "reads below the bookmark must succeed despite the corrupt orphan")
-
-    // resume overwrites the partial batch and completes
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString) === 1L)
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(2L))
-    assert(collectContribs(ReplicationCatchup.currentContributions(spark, store.toString))
-      === collectContribs(oneShot(repl.toString)))
-  }
-
-  test("sequence gaps stop the catch-up; maxSteps bounds a run") {
-    val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl3")
-    val store = java.nio.file.Files.createTempDirectory("graft-cu-store3")
-    writeDiffs(repl, 1 -> diff1, 3 -> diff3) // 2 missing
-
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString) === 1L)
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(1L))
-
-    // the gap fills in → the rest applies, capped at one step per call
-    writeDiffs(repl, 2 -> diff2)
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString, maxSteps = 1) === 1L)
-    assert(ReplicationCatchup.readState(store.toString).map(_.sequenceNumber) === Some(2L))
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store.toString) === 1L)
-    assert(collectContribs(ReplicationCatchup.currentContributions(spark, store.toString))
-      === collectContribs(oneShot(repl.toString)))
-  }
-
-  test("catch-up result equals the streaming updater on the same diff sequence") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl5")
-    val store = java.nio.file.Files.createTempDirectory("graft-cu-store5")
-    writeDiffs(repl, 1 -> diff1, 2 -> diff2, 3 -> diff3)
-    ReplicationCatchup.catchUp(spark, repl.toString, store.toString)
-    val batchRows =
-      collectContribs(ReplicationCatchup.currentContributions(spark, store.toString))
-
-    // the same diffs, one streaming micro-batch each, through the stateful
-    // version-chain updater
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[graft.streaming.ContribEdit]
-    val q = graft.streaming.ContributionStream(input.toDS()).writeStream
-      .format("memory").queryName("cu_parity").outputMode("append").start()
-    Seq("1.osc", "2.osc", "3.osc").foreach { f =>
-      val edits = Replication.oscAsEvents(
-        OsmXml.readOsc(spark, repl.resolve(f).toString))
-        .selectExpr("event_id", "ts_us", "user_id", "event_type", "props", "value")
-        .as[graft.streaming.ContribEdit].collect()
-      input.addData(edits.toIndexedSeq)
-      q.processAllAvailable()
-    }
-    val emissions = spark.table("cu_parity").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        Option(r.get(3)), r.getString(4), r.getString(5)))
-    q.stop()
-    // final state per (osm_id, version): the closing re-emission supersedes
-    // the open one — exactly what an upserting sink keyed on
-    // (osm_id, osm_version) would retain
-    val streamRows = emissions.groupBy(e => (e._1, e._2)).values
-      .map(vs => vs.find(_._4.isDefined).getOrElse(vs.head))
-      .toSeq.sortBy(e => (e._1, e._2))
-    assert(streamRows === batchRows,
-      "streaming updater and batch catch-up must converge to the same table")
-  }
 
   test("grouped sequence paths (000/000/042.osc) are discovered and ordered") {
     val repl = java.nio.file.Files.createTempDirectory("graft-cu-repl4")
@@ -176,45 +30,5 @@ class ReplicationCatchupSpec extends SparkSpec {
     java.nio.file.Files.writeString(d.resolve("002.osc"), diff2)
     java.nio.file.Files.writeString(d.resolve("001.osc"), diff1)
     assert(ReplicationCatchup.listDiffs(repl.toString).map(_._1) === Seq(1L, 2L))
-  }
-
-  test("compact folds committed batches; contributions unchanged; resume continues") {
-    import graft.operators.ReplicationCatchup
-    val repl = java.nio.file.Files.createTempDirectory("graft-cmp-repl")
-    val store = java.nio.file.Files.createTempDirectory("graft-cmp-store").toString
-    def osc(id: Long, v: Int, seq: Int): Unit =
-      java.nio.file.Files.writeString(repl.resolve(s"$seq.osc"),
-        s"""<osmChange version="0.6"><modify>
-           | <node id="$id" version="$v" timestamp="2024-01-2${seq}T00:00:00Z" changeset="$seq" uid="9" user="u" lat="5$v.0" lon="13.0"/>
-           |</modify></osmChange>""".stripMargin)
-    osc(1, 1, 1); osc(1, 2, 2); osc(2, 1, 3)
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store) === 3L)
-    val before = ReplicationCatchup.currentContributions(spark, store)
-      .collect().map(_.toString).sorted.toSeq
-
-    assert(ReplicationCatchup.compact(spark, store) === 3L)
-    assert(ReplicationCatchup.compactedUpTo(store) === 3L)
-    // folded batch dirs are gone, the base artifact exists
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(store, "events", "batch=1")))
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(store, "events", "base=3")))
-    val after = ReplicationCatchup.currentContributions(spark, store)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after === before, "compaction must not change the event history")
-
-    // catch-up continues over the compacted store
-    osc(2, 2, 4)
-    assert(ReplicationCatchup.catchUp(spark, repl.toString, store) === 1L)
-    assert(ReplicationCatchup.currentContributions(spark, store)
-      .filter(col("osm_id") === 2).count() === 2L)
-
-    // a second compact folds the new tail and retires the old base
-    assert(ReplicationCatchup.compact(spark, store) === 4L)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(store, "events", "base=3")))
-    assert(ReplicationCatchup.currentContributions(spark, store).count() === 4L)
-    // idempotent no-op when nothing new
-    assert(ReplicationCatchup.compact(spark, store) === 4L)
   }
 }
