@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Changesets, Contributions, Replication}
-import graft.sources.ContribSink
 import org.apache.spark.sql.functions._
 
 /** Command-line surface mirroring the reference CLI

@@ -82,10 +82,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      // dev A/B switch for the small-scan hooks (default on; the driver
-      // never sets it)
-      .config("spark.graft.parallelizeSmallScans",
-        sys.env.getOrElse("SPARK_GRAFT_PAR_SCANS", "true"))
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // a bucketed store read names up to numBuckets × (1 + pending
       // deltas) directories (ChangesetStore); listing a few hundred on the

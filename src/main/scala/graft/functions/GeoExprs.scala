@@ -140,23 +140,10 @@ object Geo {
   }
 
   /** Single-ring polygon hex WKB — the Java-callable form codegen uses
-    * (`wkb_poly`); GeometryCollection members reuse it too.
+    * (`wkb_poly`).
     */
   def wkbPolygonRingHex(lons: Array[Double], lats: Array[Double]): String =
     wkbPolygonHex(Seq((lons, lats)))
-
-  /** Hex WKB (little-endian) geometry collection: each member is a full
-    * WKB hex (with its own byte-order + type header) appended verbatim —
-    * the reference's `relGeometryCollection` fallback encoding
-    * (ContributionGeometry.java:104-111).
-    */
-  def wkbGeometryCollectionHex(members: Seq[String]): String = {
-    val sb = new java.lang.StringBuilder(18 + members.map(_.length).sum)
-    sb.append("0107000000") // LE + geometrycollection
-    appendLeHexInt(sb, members.length)
-    members.foreach(sb.append)
-    sb.toString
-  }
 
   /** Hex WKB (little-endian) multipolygon: each element polygon carries its
     * own byte-order + type header per the WKB spec.

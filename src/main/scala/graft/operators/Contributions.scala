@@ -522,56 +522,6 @@ object Contributions {
       .drop("rel_id", "rel_version")
   }
 
-  /** [[withCountries]] on an R-TREE index instead of the covering grid —
-    * the SpatialIndexJoiner.java alternative (HPRtree over feature
-    * envelopes + prepared-geometry refine). Same contract, same result:
-    * per-row `countries` array, sorted distinct. Prefer this joiner when
-    * the boundary set has a few huge polygons (a continent-sized feature
-    * explodes the grid's cell count but is one bbox here); prefer the grid
-    * when features tile compactly (full-cell short-circuit skips the ring
-    * test entirely). The packed tree is flat primitive arrays — one small
-    * broadcast, zero per-row allocation on the probe side, fact side never
-    * shuffles.
-    */
-  def withCountriesIndexed(df: DataFrame, countryFile: String,
-      lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    import org.apache.spark.sql.types.{ArrayType, StringType}
-    val s = df.sparkSession
-    val feats = graft.sources.WktBoundaries.readCountryCsv(countryFile)
-    val n = feats.length
-    val (bx0, by0, bx1, by1) =
-      (new Array[Double](n), new Array[Double](n), new Array[Double](n), new Array[Double](n))
-    feats.zipWithIndex.foreach { case ((_, mr), i) =>
-      val (x0, y0, x1, y1) = mr.bbox
-      bx0(i) = x0; by0(i) = y0; bx1(i) = x1; by1(i) = y1
-    }
-    val tree = graft.sources.StrTree.pack(bx0, by0, bx1, by1)
-    val rings = feats.map { case (c, mr) => (c, mr.xs, mr.ys, mr.offs) }.toArray
-    val bc = s.sparkContext.broadcast((tree, rings))
-    val li = df.schema.fieldIndex(lonCol)
-    val la = df.schema.fieldIndex(latCol)
-    val outSchema = df.schema.add("countries", ArrayType(StringType))
-    df.mapPartitions { it =>
-      val (t, fs) = bc.value
-      it.map { r =>
-        val cs: Seq[String] =
-          if (r.isNullAt(li) || r.isNullAt(la)) Seq.empty
-          else {
-            val lon = r.getDouble(li)
-            val lat = r.getDouble(la)
-            if (lon.isNaN || lat.isNaN) Seq.empty
-            else graft.sources.StrTree.query(t, lon, lat).iterator.collect {
-              case fi if {
-                val (_, xs, ys, offs) = fs(fi)
-                graft.functions.Geo.pointInRings(lon, lat, xs, ys, offs)
-              } => fs(fi)._1
-            }.toSeq.distinct.sorted
-          }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cs)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
   /** `--country-file` enrichment for REAL contributions (docs/CLI.md
     * "Join Country Codes" + SpatialGridJoiner semantics): every row gets a
     * `countries` array — all boundary features containing its point (rows

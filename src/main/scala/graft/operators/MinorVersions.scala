@@ -15,56 +15,17 @@ import org.apache.spark.sql.functions._
   * major rows, then `minor = row_number within (way, version) - 1`. The
   * join is the same node-id partitioning the way-assembly join uses; no
   * range explosion (each node edit lands in exactly one version interval).
-  * The geometry of each row ([[computeWithGeometry]]) comes from the one
-  * as-of ref resolver, [[Contributions.refPositions]], as every way
-  * geometry does.
+  * Rows here carry no geometry: the update path rebuilds a minor row's
+  * geometry through the one as-of ref resolver,
+  * [[Contributions.refPositions]], as every way geometry does.
   */
 object MinorVersions {
-
-  /** Minor-version rows WITH rebuilt geometry — the full
-    * ContributionsAvroConverter.java:91-97 semantics: at every minor
-    * version the way geometry is re-derived from member-node coordinates
-    * AS OF that row's timestamp, yielding `length_mm` (geodesic kernel)
-    * and `length_delta_mm` vs the previous row of the same way.
-    *
-    * Plan shape: the timeline (major ∪ member-edit rows) resolves its refs
-    * through [[Contributions.refPositions]] (the batch assembly's as-of
-    * rule: newest node version at or before the row's ts, a tie to the
-    * higher version, a winner without coordinates unresolved), then
-    * measures the ordered coordinate arrays. A row with no resolved ref
-    * drops. Two keyed shuffles total: node id for the as-of lookup, way id
-    * for the regroup.
-    *
-    * @param wayVersions  (way_id, osm_version, valid_from, refs)
-    * @param nodeVersions (node_id, ts, node_version, lon, lat) — node
-    *                     coordinate history; a deleted version has null
-    *                     lon/lat
-    */
-  def computeWithGeometry(wayVersions: DataFrame, nodeVersions: DataFrame): DataFrame = {
-    val spark = wayVersions.sparkSession
-    graft.functions.GeoFunctions.register(spark)
-    val timeline = compute(wayVersions, nodeVersions.select(col("node_id"), col("ts")))
-      .join(wayVersions.select(col("way_id"), col("osm_version"), col("refs")),
-        Seq("way_id", "osm_version"))
-    val byRow = Window.partitionBy("way_id").orderBy("osm_version", "osm_minor_version")
-    Contributions.refPositions(timeline, Seq("way_id", "osm_version", "osm_minor_version", "ts"),
-        "ts", "refs", nodeVersions.select(col("node_id"), col("ts").as("node_ts"),
-          col("node_version"), col("lon"), col("lat")))
-      .withColumn("length_mm", call_function("geodesic_length_mm", col("lons"), col("lats")))
-      .withColumn("area_m2", call_function("geodesic_area_m2", col("lons"), col("lats")))
-      .withColumn("length_delta_mm",
-        col("length_mm") - coalesce(lag("length_mm", 1).over(byRow), lit(0L)))
-      .withColumn("area_delta_m2",
-        col("area_m2") - coalesce(lag("area_m2", 1).over(byRow), lit(0L)))
-      .select("way_id", "osm_version", "osm_minor_version", "ts",
-        "length_mm", "length_delta_mm", "area_m2", "area_delta_m2")
-  }
 
   /** Relation minor versions — the second cascade level: a relation gets a
     * minor version whenever a member WAY changes (its own major version OR
     * a node-induced way minor version), while the relation's major version
     * is unchanged. Feed `wayTimeline` with the way's full contribution
-    * timeline (compute/computeWithGeometry output) to propagate
+    * timeline ([[compute]] output) to propagate
     * node → way → relation.
     *
     * @param relVersions (rel_id, osm_version, valid_from, way_ids)

@@ -32,12 +32,13 @@ import org.apache.spark.sql.types._
   * unresolved, Polygon for a valid closed area, Point for one resolved
   * point, else LineString) over the refs' as-of positions; node geometry
   * from the [[Contributions.nodeInRange]] guard; relation geometry from
-  * the [[RelationGeometry]] ring assembly. Within this object, the majors
-  * of every entity type come from one step ([[majorsOf]]), way and
-  * relation minors from one step ([[minorsOf]]), ref positions from the
-  * batch path's as-of resolver ([[Contributions.refPositions]] over
-  * [[refNodes]]), emitted rows from one projection ([[emit]]) and way and
-  * relation store rows from one builder ([[parentRows]]).
+  * the batch assembly's ring builder, [[RelationGeometry.build]]. Within
+  * this object, the majors of every entity type come from one step
+  * ([[majorsOf]]), way and relation minors from one step ([[minorsOf]]),
+  * ref positions from the batch path's as-of resolver
+  * ([[Contributions.refPositions]] over [[refNodes]]), emitted rows from
+  * one projection ([[emit]]) and way and relation store rows from one
+  * builder ([[parentRows]]).
   *
   * One known divergence from the batch path remains: an update-path
   * DELETION row carries a null geometry, where
@@ -448,12 +449,12 @@ object OsmUpdater {
     * (ContributionUpdater.java:101-121): member ways as-of the row's
     * instant ([[AsofJoin.asof]] over the stored latest and the same-diff
     * way versions, a tie to the higher version), their node refs as-of the
-    * same instant ([[Contributions.refPositions]]), then the EXACT batch
-    * assembly —
-    * [[RelationGeometry.dedupeWays]] → [[RelationGeometry.stitch]] →
-    * [[RelationGeometry.removeSpikes]] → [[RelationGeometry.classify]] →
-    * the shared WKB writers — so update-path relation geometry is
-    * byte-equal to the batch path's on the same member state.
+    * same instant ([[Contributions.refPositions]]), then the batch path's
+    * own ring builder, [[RelationGeometry.build]] (its member limit
+    * included; the batch-only area and validity checks of
+    * [[RelationGeometry.measure]] are not run), keeping only its `wkb` —
+    * so update-path relation geometry is byte-equal to
+    * [[RelationGeometry.assemble]] on the same member state.
     *
     * A member way with an unresolvable ref (node deleted/unknown as of the
     * row) contributes NO line — its ring stays open, `wkb` still encodes
@@ -490,23 +491,7 @@ object OsmUpdater {
       .groupByKey(t => (t._1, t._2, t._3))
       .mapGroups { (key: (Long, Int, Int), it: Iterator[(Long, Int, Int, Long, Array[Double], Array[Double])]) =>
         val (id, ver, minor) = key
-        // way_id sort = the batch assembly's member order (assemble:277)
-        val ways = it.toSeq.sortBy(_._4).map(t => (t._5, t._6))
-        val (uniq, _) = RelationGeometry.dedupeWays(ways)
-        val rings = RelationGeometry.stitch(uniq).flatMap {
-          case (xs, ys, true) =>
-            val (rx, ry, _) = RelationGeometry.removeSpikes(xs.toSeq, ys.toSeq)
-            if (rx.isEmpty) None else Some((rx, ry))
-          case _ => None
-        }
-        val shells = RelationGeometry.classify(rings)
-        val polys = shells.map(s =>
-          ((s.shell._1.toArray, s.shell._2.toArray)) +:
-            s.holes.toSeq.map(h => (h._1.toArray, h._2.toArray)))
-        val wkb =
-          if (polys.length > 1) graft.functions.Geo.wkbMultiPolygonHex(polys)
-          else graft.functions.Geo.wkbPolygonHex(polys.headOption.getOrElse(Seq.empty))
-        (id, ver, minor, wkb)
+        (id, ver, minor, RelationGeometry.build(it.map(t => (t._4, t._5, t._6)).toSeq).wkb)
       }
       .toDF("id", "version", "osm_minor_version", "rel_wkb")
   }

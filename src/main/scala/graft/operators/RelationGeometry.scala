@@ -317,10 +317,6 @@ object RelationGeometry {
     shells.toSeq
   }
 
-  /** @param members (rel_id, way_id) relation → member-way edges
-    * @param wayGeoms way geometries as produced by PBF decode + assembly:
-    *                 (way_id, lons, lats)
-    */
   /** Keeps only relations whose tag map contains at least one of `keys` —
     * the `--filter-relation-tag-keys` contract (Contributions.java:95-100:
     * comma-separated osm tag keys select which relations are processed).
@@ -360,7 +356,7 @@ object RelationGeometry {
     * @param relTags (rel_id, tags: Map[String, String])
     */
   def assembleTyped(members: DataFrame, wayGeoms: DataFrame,
-      relTags: DataFrame, memberLimit: Int = 500): DataFrame = {
+      relTags: DataFrame, memberLimit: Int = DefaultMemberLimit): DataFrame = {
     val typed = relTags.select(col("rel_id"),
       relIsMultipolygon(col("tags")).as("is_mp"))
     val tagged = members.join(typed, Seq("rel_id"), "left")
@@ -396,18 +392,106 @@ object RelationGeometry {
     mp.unionByName(coll)
   }
 
-  /** @param memberLimit the `--multipolygon-member-limit` contract
-    *                    (Contributions.java:102-107): relations with more
-    *                    member ways than the limit skip ring assembly
-    *                    (marker row: 0 rings, invalid, empty WKB) — the
-    *                    cost guard against pathological mega-relations.
-    *                    Default 500 — the reference's own CLI default
-    *                    (`multipolygonMembersLimit = 500`,
-    *                    Contributions.java:102-107 / docs/faq.md); -1
-    *                    assembles everything, 0 assembles nothing.
+  /** The `--multipolygon-member-limit` default — the reference's own CLI
+    * default (`multipolygonMembersLimit = 500`, Contributions.java:102-107
+    * / docs/faq.md).
+    */
+  val DefaultMemberLimit = 500
+
+  /** One relation's rings as [[build]] leaves them: every ring with its
+    * closed flag (open chains included), the classified shells, the
+    * repair count (ways dropped + vertices removed) and the polygon or
+    * multipolygon WKB. An over-limit relation has no rings, no shells and
+    * an empty polygon WKB.
+    */
+  case class Rings(nWays: Int,
+      rings: Seq[(ArrayBuffer[Double], ArrayBuffer[Double], Boolean)],
+      shells: Seq[ShellWithHoles], nRepaired: Int, wkb: String)
+
+  /** The per-relation ring builder — the one body both the batch assembly
+    * ([[assemble]]) and the update path (`OsmUpdater.relationGeoms`) run:
+    * member lines in way-id order → duplicate-way collapse
+    * ([[dedupeWays]], splitWays) → [[stitch]] → spike removal per closed
+    * ring ([[removeSpikes]], mergeSegments; rings that collapse entirely
+    * disappear) → [[classify]] → polygon or multipolygon WKB. Area and
+    * validity are left to [[measure]], which only the batch assembly needs.
+    *
+    * @param ways        (way_id, lons, lats) member-way lines; sorted by
+    *                    way id here, the deterministic member order
+    * @param memberLimit relations with more member ways than the limit
+    *                    skip ring assembly (marker: 0 rings, empty polygon
+    *                    WKB) — the cost guard against pathological
+    *                    mega-relations; -1 assembles everything, 0
+    *                    assembles nothing
+    */
+  def build(ways: Seq[(Long, Array[Double], Array[Double])],
+      memberLimit: Int = DefaultMemberLimit): Rings = {
+    val lines = ways.sortBy(_._1).map(w => (w._2, w._3))
+    if (memberLimit >= 0 && lines.length > memberLimit)
+      return Rings(lines.length, Seq.empty, Seq.empty, 0,
+        graft.functions.Geo.wkbPolygonHex(Seq.empty))
+    // repair pass 1: duplicate member ways collapse (splitWays)
+    val (uniqueWays, droppedWays) = dedupeWays(lines)
+    val stitched = stitch(uniqueWays)
+    // repair pass 2: spike/backtrack removal per closed ring
+    // (mergeSegments); rings that collapse entirely disappear
+    var repairedVerts = 0
+    val rings = stitched.flatMap {
+      case (xs, ys, true) =>
+        val (rx, ry, rem) = removeSpikes(xs.toSeq, ys.toSeq)
+        repairedVerts += rem
+        if (rx.isEmpty) None else Some((rx, ry, true))
+      case open => Some(open)
+    }
+    val shells = classify(rings.filter(_._3).map(r => (r._1, r._2)))
+    val polys = shells.map(s =>
+      ((s.shell._1.toArray, s.shell._2.toArray)) +:
+        s.holes.toSeq.map(h => (h._1.toArray, h._2.toArray)))
+    // polygon WKB is built from CLOSED rings only, in every branch —
+    // unclosed chains mean an invalid/partial relation (reference
+    // skips them in polygon assembly too); `closed=false` flags it,
+    // n_rings/n_points still count the open chains
+    val wkb =
+      if (polys.length > 1) graft.functions.Geo.wkbMultiPolygonHex(polys)
+      else graft.functions.Geo.wkbPolygonHex(polys.headOption.getOrElse(Seq.empty))
+    Rings(lines.length, rings, shells, droppedWays + repairedVerts, wkb)
+  }
+
+  /** The batch assembly's row for one relation: [[build]]'s rings plus
+    * area and validity.
+    */
+  def measure(relId: Long, r: Rings): RelationRings = {
+    // reference area semantics (GeometryTools.areaOf(Polygon/Multi)):
+    // per shell abs(outer) − Σ abs(holes), clamped at 0, summed
+    val area = r.shells.map { s =>
+      math.max(0.0, ringArea(s.shell._1.toSeq, s.shell._2.toSeq) -
+        s.holes.map(h => ringArea(h._1.toSeq, h._2.toSeq)).sum)
+    }.sum
+    val closed = r.rings.nonEmpty && r.rings.forall(_._3)
+    val closedOnly = r.rings.filter(_._3)
+    // ring-pair contact: single-point touch is OGC-legal (and the
+    // reference's 706_mod fixture verdict); crossing or line overlap
+    // is not (756_mod)
+    val valid = closed &&
+      !closedOnly.exists(c => ringSelfIntersects(c._1.toSeq, c._2.toSeq)) &&
+      !closedOnly.combinations(2).exists { case Seq(a, b) =>
+        ringsContact(a._1.toSeq, a._2.toSeq, b._1.toSeq, b._2.toSeq) == 2
+      }
+    RelationRings(relId, r.nWays, r.rings.length,
+      r.shells.length, r.shells.map(_.holes.length).sum,
+      closed, r.rings.map(_._1.length).sum, area, r.wkb,
+      valid, n_repaired = r.nRepaired)
+  }
+
+  /** Batch assembly: member ⋈ way geometry, then [[build]] and
+    * [[measure]] per relation.
+    *
+    * @param members     (rel_id, way_id) relation → member-way edges
+    * @param wayGeoms    way geometries (way_id, lons, lats)
+    * @param memberLimit see [[build]]
     */
   def assemble(members: DataFrame, wayGeoms: DataFrame,
-      memberLimit: Int = 500): Dataset[RelationRings] = {
+      memberLimit: Int = DefaultMemberLimit): Dataset[RelationRings] = {
     val spark = members.sparkSession
     import spark.implicits._
     members.select(col("rel_id"), col("way_id"))
@@ -416,56 +500,7 @@ object RelationGeometry {
       .as[MemberLine]
       .groupByKey(_.rel_id)
       .mapGroups { (relId, it) =>
-        val ways = it.toSeq.sortBy(_.way_id)
-        if (memberLimit >= 0 && ways.length > memberLimit) {
-          RelationRings(relId, ways.length, 0, 0, 0, closed = false, 0, 0.0,
-            graft.functions.Geo.wkbPolygonHex(Seq.empty), valid = false,
-            n_repaired = 0)
-        } else {
-        // repair pass 1: duplicate member ways collapse (splitWays)
-        val (uniqueWays, droppedWays) = dedupeWays(ways.map(w => (w.lons, w.lats)))
-        val stitched = stitch(uniqueWays)
-        // repair pass 2: spike/backtrack removal per closed ring
-        // (mergeSegments); rings that collapse entirely disappear
-        var repairedVerts = 0
-        val rings = stitched.flatMap {
-          case (xs, ys, true) =>
-            val (rx, ry, rem) = removeSpikes(xs.toSeq, ys.toSeq)
-            repairedVerts += rem
-            if (rx.isEmpty) None else Some((rx, ry, true))
-          case open => Some(open)
-        }
-        val shells = classify(rings.filter(_._3).map(r => (r._1, r._2)))
-        // reference area semantics (GeometryTools.areaOf(Polygon/Multi)):
-        // per shell abs(outer) − Σ abs(holes), clamped at 0, summed
-        val area = shells.map { s =>
-          math.max(0.0, ringArea(s.shell._1.toSeq, s.shell._2.toSeq) -
-            s.holes.map(h => ringArea(h._1.toSeq, h._2.toSeq)).sum)
-        }.sum
-        val polys = shells.map(s =>
-          ((s.shell._1.toArray, s.shell._2.toArray)) +:
-            s.holes.toSeq.map(h => (h._1.toArray, h._2.toArray)))
-        // polygon WKB is built from CLOSED rings only, in every branch —
-        // unclosed chains mean an invalid/partial relation (reference
-        // skips them in polygon assembly too); `closed=false` flags it,
-        // n_rings/n_points still count the open chains
-        val wkb =
-          if (polys.length > 1) graft.functions.Geo.wkbMultiPolygonHex(polys)
-          else graft.functions.Geo.wkbPolygonHex(polys.headOption.getOrElse(Seq.empty))
-        val closedOnly = rings.filter(_._3)
-        // ring-pair contact: single-point touch is OGC-legal (and the
-        // reference's 706_mod fixture verdict); crossing or line overlap
-        // is not (756_mod)
-        val valid = rings.nonEmpty && rings.forall(_._3) &&
-          !closedOnly.exists(r => ringSelfIntersects(r._1.toSeq, r._2.toSeq)) &&
-          !closedOnly.combinations(2).exists { case Seq(a, b) =>
-            ringsContact(a._1.toSeq, a._2.toSeq, b._1.toSeq, b._2.toSeq) == 2
-          }
-        RelationRings(relId, ways.length, rings.length,
-          shells.length, shells.map(_.holes.length).sum,
-          rings.nonEmpty && rings.forall(_._3), rings.map(_._1.length).sum, area, wkb,
-          valid, n_repaired = droppedWays + repairedVerts)
-        }
+        measure(relId, build(it.map(w => (w.way_id, w.lons, w.lats)).toSeq, memberLimit))
       }
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 import java.io.DataInputStream
@@ -93,8 +93,9 @@ case class OsmEntity(osm_type: String, id: Long, version: Int, ts_ms: Long,
   * skipping payloads, then blob decode fans out over executors — one task
   * per blob range, seek + read + inflate + decode, no driver bottleneck.
   * (The reference's single-node reader streams blobs through a thread
-  * pool, osm-pbf OSMPbf.java; the shuffle-free equivalent here is a
-  * parallelize over the blob index.)
+  * pool, osm-pbf OSMPbf.java; the shuffle-free equivalent here is one
+  * input partition per blob range of the `osmpbf` DataSource V2,
+  * [[OsmPbfSource]].)
   */
 object OsmPbf {
 
@@ -569,30 +570,5 @@ object OsmPbf {
     out += OsmEntity("relation", id, version, ts, cs, uid,
       if (sid >= 0) strings(sid) else "", visible,
       Double.NaN, Double.NaN, tags, Nil, members)
-  }
-
-  /** Read a PBF file into a DataFrame: blob index on the driver (metadata
-    * only), decode distributed over executors.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val refs = indexBlobsDistributed(spark, path).filter(_.blobType == "OSMData")
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val rdd = spark.sparkContext
-      .parallelize(refs, math.max(1, math.min(refs.size, spark.sparkContext.defaultParallelism)))
-      .mapPartitions { it =>
-        it.flatMap { ref =>
-          val hPath = new org.apache.hadoop.fs.Path(ref.path)
-          val fs = hPath.getFileSystem(hadoopConf.value)
-          val in = fs.open(hPath)
-          val bytes = new Array[Byte](ref.size)
-          try { in.seek(ref.offset); in.readFully(bytes) } finally in.close()
-          decodeBlock(inflateBlob(bytes))
-        }
-      }
-      .map(e => Row(e.osm_type, e.id, e.version, e.ts_ms, e.changeset, e.uid,
-        e.user, e.visible, e.lat, e.lon, e.tags, e.refs,
-        e.members.map(m => Row(m._1, m._2, m._3))))
-    spark.createDataFrame(rdd, schema)
   }
 }

@@ -257,14 +257,3 @@ object OsmXml {
     spark.createDataFrame(rdd, oscSchema)
   }
 }
-
-/** Partitioned GeoParquet-style sink: `status={latest,history}` ×
-  * `osm_type={node,way,relation}` directory layout (the reference's
-  * ohsome-parquet output contract).
-  */
-object ContribSink {
-  def writePartitioned(df: DataFrame, outDir: String): Unit =
-    df.write.mode("overwrite")
-      .partitionBy("status", "osm_type")
-      .parquet(outDir)
-}

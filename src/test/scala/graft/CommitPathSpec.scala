@@ -51,7 +51,15 @@ class CommitPathSpec extends AnyFunSuite {
       """OsmXml\.(readOsc|streamOsc)\(""".r,
       Set("graft/operators/OsmUpdater.scala", "graft/streaming/OsmUpdateStream.scala"),
       Set.empty,
-      "apply diffs through OsmUpdater.catchUp / OsmUpdateStream instead"))
+      "apply diffs through OsmUpdater.catchUp / OsmUpdateStream instead"),
+    // relation rings are built by RelationGeometry.build alone: the batch
+    // assembly and the update path both call it, so a caller that strings
+    // the ring steps together itself is a second ring builder
+    Rule("relation ring steps run only inside RelationGeometry.build",
+      """RelationGeometry\.(stitch|classify|dedupeWays|removeSpikes)\(""".r,
+      Set("graft/operators/RelationGeometry.scala"),
+      Set.empty,
+      "build relation rings through RelationGeometry.build instead"))
 
   private lazy val files: List[Path] = {
     val s = Files.walk(mainDir)

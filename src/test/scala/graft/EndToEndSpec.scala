@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.ContribSink
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -122,9 +121,9 @@ class EndToEndSpec extends SparkSpec {
 
     // composed sink round-trip: the re-emitted store partitions cleanly
     val outDir = java.nio.file.Files.createTempDirectory("graft-repl-out").toString
-    ContribSink.writePartitioned(
-      Replication.updateContributions(base, diff)
-        .withColumn("osm_type", lit("node")), outDir)
+    Replication.updateContributions(base, diff)
+      .withColumn("osm_type", lit("node"))
+      .write.mode("overwrite").partitionBy("status", "osm_type").parquet(outDir)
     val back = spark.read.parquet(outDir)
     assert(back.filter(col("status") === "deleted").count() === 1)
     assert(back.count() === 5)

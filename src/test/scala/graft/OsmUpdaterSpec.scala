@@ -447,9 +447,21 @@ class OsmUpdaterSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.RelationGeometry
     val root = freshRoot()
+    // a ring of 501 one-segment member ways, one more than the member limit:
+    // node 1001 + k sits on the unit circle, way 2001 + k joins it to the next
+    val nBig = RelationGeometry.DefaultMemberLimit + 1
+    val circle = (0 until nBig).map { k =>
+      (math.cos(2 * math.Pi * k / nBig), math.sin(2 * math.Pi * k / nBig))
+    }
+    val bigWays = (0 until nBig).map(k => (2001L + k, Seq(1001L + k, 1001L + (k + 1) % nBig)))
+    val bigRows = circle.zipWithIndex.map { case ((lon, lat), k) =>
+      Row("node", 1001L + k, 1, 1000L, true, lat, lon, Map.empty[String, String], null, null)
+    } ++ bigWays.map { case (w, refs) =>
+      Row("way", w, 1, 1000L, true, Double.NaN, Double.NaN, Map.empty[String, String], refs, null)
+    }
     // square ring: way 12 = n1→n2→n3, way 13 = n3→n4→n1
     val seed = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
+      spark.sparkContext.parallelize(bigRows ++ Seq(
         Row("node", 1L, 1, 1000L, true, 0.0, 0.0, Map.empty[String, String], null, null),
         Row("node", 2L, 1, 1000L, true, 1.0, 0.0, Map.empty[String, String], null, null),
         Row("node", 3L, 1, 1000L, true, 1.0, 1.0, Map.empty[String, String], null, null),
@@ -499,6 +511,34 @@ class OsmUpdaterSpec extends SparkSpec {
     val r30v2 = out2.filter(col("osm_type") === "relation" && col("osm_id") === 30).head()
     assert(r30v2.getAs[Int]("osm_version") === 2)
     assert(r30v2.getAs[String]("wkb") === expected.wkb)
+
+    // a relation over the member limit gets the batch assembly's
+    // over-limit marker, though its member ways close one ring
+    val memberXml = bigWays.map(w => s"""   <member type="way" ref="${w._1}" role="outer"/>""")
+      .mkString("\n")
+    val out3 = OsmUpdater.applyDiff(spark, root, oscDf(
+      s"""<osmChange version="0.6">
+        | <create>
+        |  <relation id="31" version="1" timestamp="2024-01-01T02:00:00Z" changeset="102" uid="9" user="alice">
+        |$memberXml
+        |   <tag k="type" v="multipolygon"/>
+        |  </relation>
+        | </create>
+        |</osmChange>""".stripMargin))
+    val bigMembers = bigWays.map(w => (31L, w._1)).toDF("rel_id", "way_id")
+    val bigLines = bigWays.map { case (w, refs) =>
+      val pts = refs.map(r => circle((r - 1001L).toInt))
+      (w, pts.map(_._1).toArray, pts.map(_._2).toArray)
+    }.toDF("way_id", "lons", "lats")
+    val unlimited = RelationGeometry.assemble(bigMembers, bigLines, memberLimit = -1)
+      .collect().head
+    assert(unlimited.closed && unlimited.n_shells === 1)
+    val overLimit = RelationGeometry.assemble(bigMembers, bigLines).collect().head
+    assert(overLimit.n_ways === nBig && overLimit.n_rings === 0 && !overLimit.valid)
+    val r31 = out3.filter(col("osm_type") === "relation" && col("osm_id") === 31).collect()
+    assert(r31.length === 1)
+    assert(r31.head.getAs[String]("wkb") === overLimit.wkb,
+      "update-path relation WKB must carry the batch assembly's member-limit marker")
   }
 
   test("same-diff way deletion suppresses its member-edit minors") {

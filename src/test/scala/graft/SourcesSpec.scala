@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{ContribSink, GeoParquet, OsmPbf, OsmXml}
+import graft.sources.{GeoParquet, OsmPbf, OsmXml}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayOutputStream
@@ -127,7 +127,7 @@ class SourcesSpec extends SparkSpec {
   test("pbf round-trip: framing, zlib, string table, dense deltas, ways, relations") {
     val tmp = java.nio.file.Files.createTempFile("graft", ".osm.pbf")
     java.nio.file.Files.write(tmp, buildPbf())
-    val df = OsmPbf.read(spark, tmp.toString).orderBy("osm_type", "id")
+    val df = spark.read.format("osmpbf").load(tmp.toString).orderBy("osm_type", "id")
     val rows = df.collect()
     assert(rows.length === 4)
 
@@ -189,7 +189,7 @@ class SourcesSpec extends SparkSpec {
       assert(dist === seq, s"range=$range")
     }
     // full read over the multi-blob file sees every copy
-    val df = OsmPbf.read(spark, tmp.toString)
+    val df = spark.read.format("osmpbf").load(tmp.toString)
     assert(df.count() === 4 * 8)
     java.nio.file.Files.delete(tmp)
   }
@@ -198,7 +198,7 @@ class SourcesSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempFile("graft", ".osm.pbf")
     // +1° lat, +0.5° lon in nanodegrees (PrimitiveBlock fields 19/20)
     java.nio.file.Files.write(tmp, buildPbf(1000000000L, 500000000L))
-    val rows = OsmPbf.read(spark, tmp.toString)
+    val rows = spark.read.format("osmpbf").load(tmp.toString)
       .filter(col("osm_type") === "node").orderBy("id").collect()
     assert(math.abs(rows(0).getDouble(8) - 53.52) < 1e-9)
     assert(math.abs(rows(0).getDouble(9) - 13.9) < 1e-9)
@@ -224,15 +224,11 @@ class SourcesSpec extends SparkSpec {
     assert(e2.getMessage.contains("unsupported Blob compression"))
   }
 
-  test("DataSource V2: format(\"osmpbf\") matches the RDD reader") {
+  test("DataSource V2: format(\"osmpbf\") pushes type filters and prunes columns") {
     val tmp = java.nio.file.Files.createTempFile("graft", ".osm.pbf")
     java.nio.file.Files.write(tmp, buildPbf())
     val v2 = spark.read.format("osmpbf").load(tmp.toString)
     assert(v2.schema === OsmPbf.schema)
-    val a = v2.orderBy("osm_type", "id").collect().map(_.toString).toSeq
-    val b = OsmPbf.read(spark, tmp.toString)
-      .orderBy("osm_type", "id").collect().map(_.toString).toSeq
-    assert(a === b)
     // column pruning path executes (projection over the V2 scan)
     assert(v2.select("id").distinct().count() === 4)
 
@@ -259,14 +255,13 @@ class SourcesSpec extends SparkSpec {
   test("way geometry assembly: refs → node coords → ordered WKB linestring") {
     val tmp = java.nio.file.Files.createTempFile("graft", ".osm.pbf")
     java.nio.file.Files.write(tmp, buildPbf())
-    val entities = OsmPbf.read(spark, tmp.toString).cache()
-    val nodes = entities.filter(col("osm_type") === "node").select("id", "lat", "lon")
-    val ways = entities.filter(col("osm_type") === "way").select("id", "refs")
-    val out = graft.operators.WayGeometry.assemble(nodes, ways).collect()
-    assert(out.length === 1)
-    val w = out.head
-    assert(w.getLong(0) === 42L)
-    assert(w.getAs[Int]("n_points") === 2)
+    val entities = spark.read.format("osmpbf").load(tmp.toString)
+    val coords = entities.filter(col("osm_type") === "node").select("id", "lon", "lat")
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    val refs = entities.filter(col("osm_type") === "way").select("refs")
+      .head().getSeq[Long](0)
+    assert(refs === Seq(10L, 13L))
+    val (lons, lats) = refs.map(coords).unzip
 
     // expected WKB: LE linestring with the two node coords in ref order
     val buf = java.nio.ByteBuffer.allocate(9 + 32).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -277,10 +272,13 @@ class SourcesSpec extends SparkSpec {
       buf.putDouble(lon); buf.putDouble(lat)
     }
     val expected = buf.array().map(b => f"${b & 0xff}%02x").mkString
-    assert(w.getAs[String]("wkb") === expected)
-    assert(w.getAs[Double]("xmin") === 13.4)
-    assert(w.getAs[Double]("ymax") === p2._2)
-    assert(w.getAs[Double]("length_m") > 0.0)
+    assert(graft.functions.Geo.wkbLineHex(lons.toArray, lats.toArray) === expected)
+    // the codegen expression every way geometry goes through
+    // (Contributions.wayWkb) writes the same bytes
+    import spark.implicits._
+    val sqlWkb = Seq((lons, lats)).toDF("lons", "lats")
+      .select(call_function("wkb_line", col("lons"), col("lats"))).head().getString(0)
+    assert(sqlWkb === expected)
     java.nio.file.Files.delete(tmp)
   }
 
@@ -679,7 +677,9 @@ class SourcesSpec extends SparkSpec {
       ("history", "node", 1L), ("history", "relation", 3L))
       .toDF("status", "osm_type", "id")
     val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    ContribSink.writePartitioned(df, out)
+    GeoParquet.write(df.withColumn("wkb", lit(graft.functions.Geo.wkbLineHex(
+      Array(13.4, 13.5), Array(52.5, 52.6)))), out, geomTypes = Seq("LineString"),
+      partitionCols = Seq("status", "osm_type"))
     val back = spark.read.parquet(out)
     assert(back.count() === 4)
     assert(new java.io.File(s"$out/status=latest/osm_type=node").exists())

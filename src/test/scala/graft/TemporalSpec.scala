@@ -106,75 +106,14 @@ class TemporalSpec extends SparkSpec {
       (2, 0, "MAJOR"), (2, 1, "MINOR_GEOMETRY")))
   }
 
-  test("minor versions rebuild way geometry as-of each row timestamp") {
-    import spark.implicits._
-    val ways = Seq((42L, 1, 100L, Seq(10L, 13L)))
-      .toDF("way_id", "osm_version", "valid_from", "refs")
-    // node 10 created at ts 50 at (0,0), moves east at ts 200;
-    // node 13 sits still at (1,0)
-    val nodes = Seq(
-      (10L, 50L, 1, 0.0, 0.0),
-      (10L, 200L, 2, 2.0, 0.0),
-      (13L, 50L, 1, 1.0, 0.0))
-      .toDF("node_id", "ts", "node_version", "lon", "lat")
-    val out = MinorVersions.computeWithGeometry(ways, nodes).collect()
-    val rows = out.map(r => (r.getAs[Int]("osm_version"),
-      r.getAs[Int]("osm_minor_version"), r.getAs[Long]("length_mm"),
-      r.getAs[Long]("length_delta_mm")))
-    assert(rows.length === 2)
-    // major row at ts 100: 1° along the equator
-    val oneDeg = graft.functions.Geo.geodesicLengthMm(Array(0.0, 1.0), Array(0.0, 0.0))
-    assert(rows(0) === ((1, 0, oneDeg, oneDeg)))
-    // minor row at ts 200: node 10 moved to lon 2 → way spans 2°−1° = 1°
-    // the other way round, same length; delta must be length-diff not raw
-    val after = graft.functions.Geo.geodesicLengthMm(Array(2.0, 1.0), Array(0.0, 0.0))
-    assert(rows(1) === ((1, 1, after, after - oneDeg)))
-    // 2-point ways enclose nothing
-    assert(out.forall(_.getAs[Long]("area_m2") === 0L))
-
-    // triangle way: area appears, and a node move changes area_delta
-    val triWays = Seq((7L, 1, 100L, Seq(20L, 21L, 22L)))
-      .toDF("way_id", "osm_version", "valid_from", "refs")
-    val triNodes = Seq(
-      (20L, 50L, 1, 0.0, 0.0), (21L, 50L, 1, 1.0, 0.0), (22L, 50L, 1, 0.0, 1.0),
-      (22L, 200L, 2, 0.0, 2.0)) // triangle doubles in height
-      .toDF("node_id", "ts", "node_version", "lon", "lat")
-    val tri = MinorVersions.computeWithGeometry(triWays, triNodes)
-      .orderBy("osm_minor_version").collect()
-    val a0 = graft.functions.Geo.geodesicAreaM2(Array(0.0, 1.0, 0.0), Array(0.0, 0.0, 1.0))
-    val a1 = graft.functions.Geo.geodesicAreaM2(Array(0.0, 1.0, 0.0), Array(0.0, 0.0, 2.0))
-    assert(tri.map(r => (r.getAs[Int]("osm_minor_version"),
-      r.getAs[Long]("area_m2"), r.getAs[Long]("area_delta_m2"))).toSeq ===
-      Seq((0, a0, a0), (1, a1, a1 - a0)))
-    assert(a1 > a0 && a0 > 5.0e9, s"triangle areas $a0 -> $a1")
-  }
-
-  test("minor-version geometry: a same-timestamp node tie resolves to the higher version") {
-    import spark.implicits._
-    val ways = Seq((42L, 1, 100L, Seq(10L, 13L)))
-      .toDF("way_id", "osm_version", "valid_from", "refs")
-    // node 10 has two versions at ts 50 (bulk-import shape), the higher one
-    // listed first; node 13 sits at (1,0)
-    val nodes = Seq(
-      (10L, 50L, 2, 3.0, 0.0),
-      (10L, 50L, 1, 0.0, 0.0),
-      (13L, 50L, 1, 1.0, 0.0))
-      .toDF("node_id", "ts", "node_version", "lon", "lat")
-    val out = MinorVersions.computeWithGeometry(ways, nodes).collect()
-    val v2 = graft.functions.Geo.geodesicLengthMm(Array(3.0, 1.0), Array(0.0, 0.0))
-    assert(out.map(r => (r.getAs[Int]("osm_minor_version"), r.getAs[Long]("length_mm"))).toSeq ===
-      Seq((0, v2)), "node 10 must resolve to version 2's lon 3.0")
-  }
-
   test("relation minors cascade: node move → way minor → relation minor") {
     import spark.implicits._
     val ways = Seq((42L, 1, 100L, Seq(10L, 13L)))
       .toDF("way_id", "osm_version", "valid_from", "refs")
-    val nodes = Seq((10L, 50L, 1, 0.0, 0.0), (13L, 50L, 1, 1.0, 0.0),
-      (10L, 200L, 2, 2.0, 0.0))
-      .toDF("node_id", "ts", "node_version", "lon", "lat")
+    val nodeEdits = Seq((10L, 50L), (13L, 50L), (10L, 200L))
+      .toDF("node_id", "ts")
     // the way's timeline: its major row at 100 + node-induced minor at 200
-    val wayTimeline = MinorVersions.computeWithGeometry(ways, nodes)
+    val wayTimeline = MinorVersions.compute(ways, nodeEdits)
       .select(col("way_id"), col("ts"))
     // relation 7 holds way 42, created at ts 80 (before the way's v1 row)
     val rels = Seq((7L, 1, 80L, Seq(42L)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Geo
-import graft.sources.{StrTree, WktBoundaries}
+import graft.sources.WktBoundaries
 import org.apache.spark.sql.functions._
 
 class WktSpec extends SparkSpec {
@@ -126,33 +126,7 @@ class WktSpec extends SparkSpec {
     assert(out.nonEmpty, "some points must land inside the fixture polygons")
   }
 
-  test("StrTree packing: every feature reachable, node bboxes contain children") {
-    val rnd = new scala.util.Random(42)
-    val n = 200
-    val x0 = Array.fill(n)(rnd.nextDouble() * 340 - 170)
-    val y0 = Array.fill(n)(rnd.nextDouble() * 160 - 80)
-    val x1 = x0.map(_ + rnd.nextDouble() * 5)
-    val y1 = y0.map(_ + rnd.nextDouble() * 5)
-    val t = StrTree.pack(x0, y0, x1, y1)
-    assert(t.featOrder.sorted.toSeq === (0 until n), "permutation covers all features")
-    // querying each feature's own center must return that feature
-    for (i <- 0 until n) {
-      val cs = StrTree.query(t, (x0(i) + x1(i)) / 2, (y0(i) + y1(i)) / 2)
-      assert(cs.contains(i), s"feature $i unreachable from its own center")
-    }
-    // candidates are exactly the bbox-containing features or a superset
-    // pruned by leaf bboxes: never a false negative
-    for (_ <- 1 to 500) {
-      val px = rnd.nextDouble() * 360 - 180
-      val py = rnd.nextDouble() * 180 - 90
-      val expect = (0 until n).filter(i =>
-        px >= x0(i) && px <= x1(i) && py >= y0(i) && py <= y1(i)).toSet
-      val got = StrTree.query(t, px, py).toSet
-      assert(expect.subsetOf(got), s"missed candidates at ($px, $py)")
-    }
-  }
-
-  test("withCountriesIndexed matches withCountries (grid vs R-tree joiner)") {
+  test("withCountries matches a brute-force pointInRings over every feature") {
     import spark.implicits._
     val p = java.nio.file.Files.createTempFile("graft_wkt_idx", ".csv")
     java.nio.file.Files.write(p,
@@ -167,9 +141,15 @@ class WktSpec extends SparkSpec {
     val df = pts.toDF("id", "lon", "lat")
     val grid = operators.Contributions.withCountries(df, p.toString)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[String](3).toList)).toSeq
-    val tree = operators.Contributions.withCountriesIndexed(df, p.toString)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[String](3).toList)).toSeq
-    assert(tree === grid, "the two joiners must agree row for row")
+    // brute force: every (point, feature) pair through the ring test alone
+    val feats = WktBoundaries.readCountryCsv(p.toString)
+    val brute = pts.map {
+      case (id, Some(lon), Some(lat)) =>
+        val in = feats.filter { case (_, mr) => Geo.pointInRings(lon, lat, mr.xs, mr.ys, mr.offs) }
+        (id, in.map(_._1).distinct.sorted.toList)
+      case (id, _, _) => (id, Nil)
+    }
+    assert(grid === brute, "the grid joiner must agree with the brute force row for row")
     assert(grid.exists(_._2.nonEmpty), "fixture must produce hits")
   }
 }
