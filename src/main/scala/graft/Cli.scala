@@ -75,7 +75,7 @@ object Cli {
             element_at(typedLit(Seq("node", "way", "relation")),
               (col("osm_id") % 3 + 1).cast("int")))
         // reference output contract: binary WKB `geometry` + the `geo`
-        // JSON stamped into every part file's footer (ohsome-parquet)
+        // JSON in every part file's footer (ohsome-parquet)
         graft.sources.GeoParquet.write(contribs, outDir, wkbHexCol = "wkb",
           partitionCols = Seq("status", "osm_type"),
           bboxLonLat = Some(("lon_d", "lat_d")))
@@ -93,9 +93,10 @@ object Cli {
         val enriched = sys.env.get("SPARK_GRAFT_COUNTRY_FILE")
           .fold(base)(f => Contributions.withCountries(base, f))
         // same output contract as `contributions`: binary WKB geometry +
-        // footer-embedded geo metadata, status×type partitioned
+        // footer-embedded geo metadata, status×type partitioned; the
+        // declared types are every shape `Contributions.wayShape` emits
         graft.sources.GeoParquet.write(enriched, outDir, wkbHexCol = "wkb",
-          geomTypes = Seq("Point", "LineString"),
+          geomTypes = Seq("Point", "LineString", "Polygon"),
           partitionCols = Seq("status", "osm_type"),
           bboxLonLat = Some(("lon", "lat")))
       case "changesets" =>

@@ -213,42 +213,56 @@ object Ann {
       it.foreach { case (_, k, x, y, v) =>
         if (k == 0) cs += ((x, v)) else sim((x, y)) = v
       }
-      val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
-      val selected = scala.collection.mutable.ArrayBuffer[Long]()
-      // round 1: pure-relevance argmax (rel desc, n_id asc)
-      var bNid = -1L; var bRel = 0.0; var found = false
-      cs.foreach { case (nid, rel) =>
-        if (!found || rel > bRel || (rel == bRel && nid < bNid)) {
-          bNid = nid; bRel = rel; found = true
-        }
+      mmrSelect(cs.toSeq, sim).iterator.map { case (nid, r, score) => (q, nid, r, score) }
+    }.toDF("q_id", "n_id", "mmr_rank", "score")
+    Dedup.releasing(sel.orderBy("q_id", "mmr_rank"), cands)
+  }
+
+  /** The greedy MMR selection of one query: `cs` its (n_id, rel)
+    * candidates, `sim` the (a, b) → cosine sims between them. Round 1 takes
+    * (rel desc, n_id asc); rounds 2–5 take (score desc, n_id asc) over
+    * score = 0.7·rel − 0.3·max-sim-to-selected, skipping a candidate with
+    * no sim row to any selected node. Every comparison orders doubles as
+    * Spark's `ORDER BY` and `max` do (NaN above every number, -0.0 == 0.0),
+    * so the picks do not depend on candidate order. Returns
+    * (n_id, mmr_rank, score) per pick.
+    */
+  private[operators] def mmrSelect(cs: Seq[(Long, Double)],
+      sim: scala.collection.Map[(Long, Long), Double]): Seq[(Long, Int, Double)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    def better(v: Double, nid: Long, bV: Double, bNid: Long): Boolean = {
+      val c = compareDoubles(v, bV)
+      c > 0 || (c == 0 && nid < bNid)
+    }
+    val out = scala.collection.mutable.ArrayBuffer[(Long, Int, Double)]()
+    val selected = scala.collection.mutable.ArrayBuffer[Long]()
+    // round 1: pure-relevance argmax
+    var bNid = -1L; var bRel = 0.0; var found = false
+    cs.foreach { case (nid, rel) =>
+      if (!found || better(rel, nid, bRel, bNid)) {
+        bNid = nid; bRel = rel; found = true
       }
-      if (found) { out += ((q, bNid, 1, 0.7 * bRel)); selected += bNid }
-      var r = 2
-      while (r <= 5 && found) {
-        var pNid = -1L; var pScore = 0.0; found = false
-        cs.foreach { case (nid, rel) =>
-          if (!selected.contains(nid)) {
-            // max-sim-to-selected; a candidate with no sim row to any
-            // selected node is skipped (the old plan's inner join)
-            var msim = Double.NegativeInfinity
-            selected.foreach { sl =>
-              val v = sim.getOrElse((nid, sl), Double.NegativeInfinity)
-              if (v > msim) msim = v
-            }
-            if (msim > Double.NegativeInfinity) {
-              val score = 0.7 * rel - 0.3 * msim
-              if (!found || score > pScore || (score == pScore && nid < pNid)) {
-                pNid = nid; pScore = score; found = true
-              }
+    }
+    if (found) { out += ((bNid, 1, 0.7 * bRel)); selected += bNid }
+    var r = 2
+    while (r <= 5 && found) {
+      var pNid = -1L; var pScore = 0.0; found = false
+      cs.foreach { case (nid, rel) =>
+        if (!selected.contains(nid)) {
+          val sims = selected.flatMap(sl => sim.get((nid, sl)))
+          if (sims.nonEmpty) {
+            val msim = sims.reduce((a, b) => if (compareDoubles(b, a) > 0) b else a)
+            val score = 0.7 * rel - 0.3 * msim
+            if (!found || better(score, nid, pScore, pNid)) {
+              pNid = nid; pScore = score; found = true
             }
           }
         }
-        if (found) { out += ((q, pNid, r, pScore)); selected += pNid }
-        r += 1
       }
-      out.iterator
-    }.toDF("q_id", "n_id", "mmr_rank", "score")
-    Dedup.releasing(sel.orderBy("q_id", "mmr_rank"), cands)
+      if (found) { out += ((pNid, r, pScore)); selected += pNid }
+      r += 1
+    }
+    out.toSeq
   }
 
   /** BINARY-embedding retrieval — the sign-bit binarization face of the

@@ -2,9 +2,16 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.Job
 import org.apache.parquet.format.{KeyValue, Util}
-import org.apache.spark.sql.DataFrame
+import org.apache.parquet.hadoop.ParquetOutputFormat
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
@@ -12,69 +19,72 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   * (ohsome-planet emits contribution GeoParquet; see ohsome-planet/README
   * and the ohsome-parquet writer): a BINARY WKB `geometry` column, optional
   * partitioned layout, and the GeoParquet `geo` metadata JSON
-  * (version / primary_column / encoding / geometry types / CRS84 / dataset
+  * (version / primary_column / encoding / geometry types / CRS84 / file
   * bbox) embedded in every file's FOOTER key-value metadata, where
   * GeoParquet-aware tools sniff for it.
   *
-  * Spark's parquet writer has no hook for custom footer key-value pairs,
-  * so the `geo` entry is stamped in a post-write rewrite pass
-  * ([[stampFooters]]): for each part file, parse the thrift footer
-  * (parquet-format `Util`), append the key-value, and rewrite the file as
-  * data-bytes + new-footer + length + magic. Row groups, column chunks,
-  * and page offsets are untouched — footer offsets reference absolute data
-  * positions that don't move, so the copy is byte-identical up to the
-  * footer. The pass runs as one Spark task per file (the data copy is
-  * sequential I/O, no decode), keeping the stamp distributed at
-  * 100 TB dataset sizes.
+  * The footer is written in the same pass as the data: [[write]] saves
+  * through [[GeoParquetFileFormat]], Spark's parquet format with its write
+  * support swapped for [[GeoWriteSupport]]. Spark opens one write support
+  * per output file; it keeps that file's running lon/lat min/max as rows
+  * pass and hands the `geo` entry to parquet's `finalizeWrite`, which
+  * merges it into the footer when the task closes the file. Each file so
+  * carries its own bbox (GeoParquet 1.0 defines `bbox` per file), and the
+  * committer publishes finished files: no second scan of the frame and no
+  * rewrite of the output.
   */
 object GeoParquet {
 
   private val Magic = "PAR1".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** Write options that carry the footer settings from [[write]] to each
+    * file's [[GeoWriteSupport]] (through the write job's configuration).
+    */
+  private[sources] val TypesOption = "geoparquet.geometry_types"
+  private[sources] val BboxOption = "geoparquet.bbox_columns"
 
   /** @param df         frame holding a hex-encoded WKB column
     * @param outDir     dataset root
     * @param wkbHexCol  hex WKB column to convert to the binary `geometry`
     * @param geomTypes  declared geometry types for the metadata
     * @param partitionCols optional partition layout (e.g. status, osm_type)
-    * @param bboxLonLat optional (lon, lat) column names used to compute
-    *                   the dataset bbox aggregate for the metadata
+    * @param bboxLonLat optional (lon, lat) DOUBLE data columns whose finite
+    *                   values give each file's `bbox`
     */
   def write(df: DataFrame, outDir: String, wkbHexCol: String = "wkb",
       geomTypes: Seq[String] = Seq("Point"),
       partitionCols: Seq[String] = Nil,
       bboxLonLat: Option[(String, String)] = None): Unit = {
-    val out = df
+    bboxLonLat.foreach { case (lon, lat) =>
+      for (c <- Seq(lon, lat))
+        require(df.schema(c).dataType == DoubleType && !partitionCols.contains(c),
+          s"bbox column $c must be a DOUBLE data column")
+    }
+    val writer = df
       .withColumn("geometry", unhex(col(wkbHexCol)))
       .drop(wkbHexCol)
-    val writer = out.write.mode("overwrite")
+      .write.mode("overwrite")
+      .format(classOf[GeoParquetFileFormat].getName)
+      .option(TypesOption, geomTypes.mkString(","))
+      .option(BboxOption, bboxLonLat.fold("") { case (lon, lat) => s"$lon,$lat" })
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(outDir)
+      .save(outDir)
+  }
 
-    val bboxJson = bboxLonLat.map { case (lonCol, latCol) =>
-      // NaN coordinates (way/relation rows carry lat/lon = NaN in the mixed
-      // entity frame) sort ABOVE every real value in Spark's min/max, so
-      // they must be filtered out — an unguarded aggregate stamps literal
-      // NaN into the footer JSON, which no reader parses.
-      val r = df
-        .filter(col(lonCol).isNotNull && col(latCol).isNotNull &&
-          !isnan(col(lonCol)) && !isnan(col(latCol)))
-        .agg(min(col(lonCol)), min(col(latCol)),
-          max(col(lonCol)), max(col(latCol))).head()
-      // no finite coordinates at all (e.g. a way/relation-only dataset) → no bbox
-      if ((0 to 3).exists(i => r.isNullAt(i) || r.getDouble(i).isNaN)) ""
-      else s""","bbox":[${r.getDouble(0)},${r.getDouble(1)},${r.getDouble(2)},${r.getDouble(3)}]"""
-    }.getOrElse("")
-    val geo =
-      s"""{"version":"1.0.0","primary_column":"geometry","columns":{"geometry":{
-         |"encoding":"WKB","geometry_types":[${geomTypes.map("\"" + _ + "\"").mkString(",")}],
-         |"crs":{"id":{"authority":"OGC","code":"CRS84"}}$bboxJson}}}""".stripMargin
+  /** The `geo` JSON for one file; no `bbox` key without finite coordinates. */
+  private[sources] def geoJson(geomTypes: Seq[String],
+      bbox: Option[(Double, Double, Double, Double)]): String = {
+    val bboxJson = bbox.fold("") { case (x0, y0, x1, y1) => s""","bbox":[$x0,$y0,$x1,$y1]""" }
+    s"""{"version":"1.0.0","primary_column":"geometry","columns":{"geometry":{
+       |"encoding":"WKB","geometry_types":[${geomTypes.map("\"" + _ + "\"").mkString(",")}],
+       |"crs":{"id":{"authority":"OGC","code":"CRS84"}}$bboxJson}}}""".stripMargin
       .replace("\n", "")
-    stampFooters(df.sparkSession, outDir, "geo", geo)
   }
 
   /** Embeds `key` → `value` into the footer key-value metadata of every
     * parquet part file under `outDir`, one Spark task per file. Idempotent:
-    * an existing entry for `key` is replaced.
+    * an existing entry for `key` is replaced. Kept for re-stamping; `write`
+    * no longer calls it.
     */
   def stampFooters(spark: org.apache.spark.sql.SparkSession, outDir: String,
       key: String, value: String): Unit = {
@@ -179,5 +189,71 @@ object GeoParquet {
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
     try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(key))
     finally reader.close()
+  }
+}
+
+/** Spark's parquet file format with the `geo` footer written by each
+  * file's [[GeoWriteSupport]]. Reached by class name (`format(classOf[...]
+  * .getName)`): it inherits the short name `parquet`, so it has no service
+  * entry of its own.
+  */
+class GeoParquetFileFormat extends ParquetFileFormat {
+  override def prepareWrite(sparkSession: SparkSession, job: Job,
+      options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
+    val factory = super.prepareWrite(sparkSession, job, options, dataSchema)
+    ParquetOutputFormat.setWriteSupportClass(job, classOf[GeoWriteSupport])
+    val conf = job.getConfiguration
+    for (k <- Seq(GeoParquet.TypesOption, GeoParquet.BboxOption))
+      conf.set(k, options.getOrElse(k, ""))
+    factory
+  }
+}
+
+/** Spark's row write support plus the `geo` footer of one file: a running
+  * min/max over the rows whose lon and lat are both non-null and not NaN,
+  * returned with the declared geometry types from `finalizeWrite`.
+  */
+class GeoWriteSupport extends ParquetWriteSupport {
+  private var geomTypes: Seq[String] = Nil
+  private var lonOrd = -1
+  private var latOrd = -1
+  private var seen = false
+  private var minLon, minLat = Double.PositiveInfinity
+  private var maxLon, maxLat = Double.NegativeInfinity
+
+  override def init(conf: Configuration): WriteSupport.WriteContext = {
+    val ctx = super.init(conf)
+    geomTypes = conf.get(GeoParquet.TypesOption, "").split(',').filter(_.nonEmpty).toSeq
+    conf.get(GeoParquet.BboxOption, "").split(',') match {
+      case Array(lon, lat) =>
+        // the file's data schema: partition columns are not in it
+        val schema = DataType.fromJson(conf.get(ParquetWriteSupport.SPARK_ROW_SCHEMA))
+          .asInstanceOf[StructType]
+        lonOrd = schema.fieldIndex(lon)
+        latOrd = schema.fieldIndex(lat)
+      case _ =>
+    }
+    ctx
+  }
+
+  override def write(row: InternalRow): Unit = {
+    if (lonOrd >= 0 && !row.isNullAt(lonOrd) && !row.isNullAt(latOrd)) {
+      val lon = row.getDouble(lonOrd)
+      val lat = row.getDouble(latOrd)
+      if (!lon.isNaN && !lat.isNaN) {
+        seen = true
+        if (lon < minLon) minLon = lon
+        if (lon > maxLon) maxLon = lon
+        if (lat < minLat) minLat = lat
+        if (lat > maxLat) maxLat = lat
+      }
+    }
+    super.write(row)
+  }
+
+  override def finalizeWrite(): WriteSupport.FinalizedWriteContext = {
+    val bbox = if (seen) Some((minLon, minLat, maxLon, maxLat)) else None
+    new WriteSupport.FinalizedWriteContext(
+      java.util.Collections.singletonMap("geo", GeoParquet.geoJson(geomTypes, bbox)))
   }
 }

@@ -23,6 +23,76 @@ class CliSpec extends SparkSpec {
     assert(meta.exists(_.contains("\"primary_column\":\"geometry\"")))
   }
 
+  test("cli contributions-pbf footers declare every geometry type the output holds") {
+    import PbfEncode._
+    import java.io.ByteArrayOutputStream
+    // nodes 1-4 make a square; way 100 closes it as building=yes (a
+    // Polygon), way 101 is an open highway (a LineString)
+    val strings = Seq("", "building", "yes", "highway", "residential", "alice")
+    val st = new ByteArrayOutputStream()
+    strings.foreach(s => lenField(st, 1, s.getBytes("UTF-8")))
+    val ids = Seq(1L, 2L, 3L, 4L, 5L)
+    val dense = new ByteArrayOutputStream()
+    lenField(dense, 1, packedSVarints(ids))
+    val info = new ByteArrayOutputStream()
+    lenField(info, 1, packedVarints(ids.map(_ => 1L)))                 // versions
+    lenField(info, 2, packedSVarints(ids.map(_ => 1700000L)))          // ts
+    lenField(info, 3, packedSVarints(ids.map(_ => 7L)))                // changesets
+    lenField(info, 4, packedSVarints(ids.map(_ => 5L)))                // uids
+    lenField(info, 5, packedSVarints(ids.map(_ => 5L)))                // user sid
+    lenField(dense, 5, info.toByteArray)
+    // lat/lon raw at granularity 100 (nano-degrees / 100)
+    lenField(dense, 8, packedSVarints(Seq(520000000L, 520000000L, 520010000L, 520010000L, 520020000L)))
+    lenField(dense, 9, packedSVarints(Seq(130000000L, 130010000L, 130010000L, 130000000L, 130020000L)))
+    lenField(dense, 10, packedVarints(ids.map(_ => 0L)))
+    def way(id: Long, k: Long, v: Long, refs: Seq[Long]): Array[Byte] = {
+      val w = new ByteArrayOutputStream()
+      varint(w, key(1, 0)); varint(w, id)
+      lenField(w, 2, packedVarints(Seq(k)))
+      lenField(w, 3, packedVarints(Seq(v)))
+      val wi = new ByteArrayOutputStream()
+      varint(wi, key(1, 0)); varint(wi, 1L)
+      varint(wi, key(2, 0)); varint(wi, 1700100L)
+      varint(wi, key(3, 0)); varint(wi, 8L)
+      lenField(w, 4, wi.toByteArray)
+      lenField(w, 8, packedSVarints(refs))
+      w.toByteArray
+    }
+    val group = new ByteArrayOutputStream()
+    lenField(group, 2, dense.toByteArray)
+    lenField(group, 3, way(100L, 1L, 2L, Seq(1L, 2L, 3L, 4L, 1L)))
+    lenField(group, 3, way(101L, 3L, 4L, Seq(4L, 5L)))
+    val block = new ByteArrayOutputStream()
+    lenField(block, 1, st.toByteArray)
+    lenField(block, 2, group.toByteArray)
+    val pbf = java.nio.file.Files.createTempFile("graft-cli-area", ".osm.pbf")
+    java.nio.file.Files.write(pbf,
+      frame("OSMHeader", Array[Byte]()) ++ frame("OSMData", block.toByteArray))
+    val out = java.nio.file.Files.createTempDirectory("graft-cli-area").toString
+    Cli.main(Array("contributions-pbf", pbf.toString, out))
+
+    import org.apache.spark.sql.functions.col
+    val written = spark.read.parquet(out).filter(col("geometry_type").isNotNull)
+      .select("geometry_type").distinct().collect().map(_.getString(0)).toSet
+    assert(written === Set("Point", "LineString", "Polygon"))
+    val TypesRe = "\"geometry_types\":\\[([^\\]]*)\\]".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(out)).iterator()
+    var n = 0
+    while (files.hasNext) {
+      val f = files.next().toString
+      if (f.endsWith(".parquet")) {
+        n += 1
+        val meta = graft.sources.GeoParquet.readFooterValue(
+          spark.sparkContext.hadoopConfiguration, f, "geo").getOrElse(fail(s"$f: no geo footer"))
+        val declared = TypesRe.findFirstMatchIn(meta).getOrElse(fail(meta)).group(1)
+          .split(',').map(_.stripPrefix("\"").stripSuffix("\"")).toSet
+        assert(written.subsetOf(declared), s"$f declares $declared, output holds $written")
+      }
+    }
+    assert(n > 0)
+    java.nio.file.Files.delete(pbf)
+  }
+
   test("cli curate writes reason-partitioned verdicts and the kept corpus") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files.createTempDirectory("graft-cli").toString

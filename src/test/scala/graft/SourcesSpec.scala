@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayOutputStream
 import java.util.zip.Deflater
+import scala.jdk.CollectionConverters._
 
 /** Test-side minimal PBF *encoder* (varint/zigzag/zlib/framing) used to
   * synthesize files for reader round-trips — independent of the reader's
@@ -39,6 +40,23 @@ object PbfEncode {
     val n = d.deflate(buf)
     d.end()
     java.util.Arrays.copyOf(buf, n)
+  }
+
+  /** Blob (zlib) + BlobHeader + 4-byte BE framing of one file block. */
+  def frame(blobType: String, raw: Array[Byte]): Array[Byte] = {
+    val blob = new ByteArrayOutputStream()
+    varint(blob, key(2, 0)); varint(blob, raw.length.toLong)
+    lenField(blob, 3, deflate(raw))
+    val header = new ByteArrayOutputStream()
+    lenField(header, 1, blobType.getBytes("UTF-8"))
+    varint(header, key(3, 0)); varint(header, blob.size().toLong)
+    val out = new ByteArrayOutputStream()
+    val h = header.toByteArray
+    out.write(Array[Byte]((h.length >>> 24).toByte, (h.length >>> 16).toByte,
+      (h.length >>> 8).toByte, h.length.toByte))
+    out.write(h)
+    out.write(blob.toByteArray)
+    out.toByteArray
   }
 
   def buildTestPbf(latOffsetNano: Long = 0L, lonOffsetNano: Long = 0L): Array[Byte] = {
@@ -91,24 +109,7 @@ object PbfEncode {
     if (latOffsetNano != 0L) { varint(block, key(19, 0)); varint(block, latOffsetNano) }
     if (lonOffsetNano != 0L) { varint(block, key(20, 0)); varint(block, lonOffsetNano) }
 
-    // Blob (zlib) + BlobHeader + 4-byte BE framing, plus an OSMHeader blob
-    def frame(blobType: String, blockBytes: Array[Byte]): Array[Byte] = {
-      val raw = blockBytes
-      val z = deflate(raw)
-      val blob = new ByteArrayOutputStream()
-      varint(blob, key(2, 0)); varint(blob, raw.length.toLong)
-      lenField(blob, 3, z)
-      val header = new ByteArrayOutputStream()
-      lenField(header, 1, blobType.getBytes("UTF-8"))
-      varint(header, key(3, 0)); varint(header, blob.size().toLong)
-      val out = new ByteArrayOutputStream()
-      val h = header.toByteArray
-      out.write(Array[Byte]((h.length >>> 24).toByte, (h.length >>> 16).toByte,
-        (h.length >>> 8).toByte, h.length.toByte))
-      out.write(h)
-      out.write(blob.toByteArray)
-      out.toByteArray
-    }
+    // an OSMHeader blob, then the data block
     val f = new ByteArrayOutputStream()
     f.write(frame("OSMHeader", Array[Byte]()))
     f.write(frame("OSMData", block.toByteArray))
@@ -741,7 +742,9 @@ class SourcesSpec extends SparkSpec {
     ).toDF("id", "lon_d", "lat_d")
       .withColumn("wkb", hex(lit(Array.fill[Byte](21)(1))))
     val out = java.nio.file.Files.createTempDirectory("graft-geopq-nan").toString
-    GeoParquet.write(df, out, wkbHexCol = "wkb", bboxLonLat = Some(("lon_d", "lat_d")))
+    // one file, so its own bbox is the whole frame's
+    GeoParquet.write(df.coalesce(1), out, wkbHexCol = "wkb",
+      bboxLonLat = Some(("lon_d", "lat_d")))
     val conf = spark.sparkContext.hadoopConfiguration
     val part = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
       .filter(p => p.toString.endsWith(".parquet")).iterator().next()
@@ -758,6 +761,76 @@ class SourcesSpec extends SparkSpec {
       .filter(p => p.toString.endsWith(".parquet")).iterator().next()
     val meta2 = GeoParquet.readFooterValue(conf, part2.toString, "geo").get
     assert(!meta2.contains("bbox") && !meta2.contains("NaN"), meta2)
+  }
+
+  /** Every `.parquet` file under `dir`, sorted. */
+  private def parquetFiles(dir: String): Seq[String] = {
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try w.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.sorted
+    finally w.close()
+  }
+
+  test("geoparquet footers carry each file's own bbox, recounted from its rows") {
+    import spark.implicits._
+    // three partitions over four tasks: g0 and g1 mix finite, NaN and null
+    // coordinates, g2 holds NaN and null only
+    val df = (0 until 240).map { i =>
+      val g = i % 3
+      val finite = g != 2 && i % 7 != 0
+      val lon = if (i % 11 == 0) None else Some(if (finite) -50.0 + i * 0.37 else Double.NaN)
+      val lat = if (i % 13 == 0) None else Some(if (finite) 10.0 - i * 0.21 else Double.NaN)
+      (i.toLong, s"g$g", lon, lat)
+    }.toDF("id", "grp", "lon_d", "lat_d")
+      .repartition(4)
+      .withColumn("wkb", hex(lit(Array.fill[Byte](21)(1))))
+    val out = java.nio.file.Files.createTempDirectory("graft-geopq-files").toString
+    GeoParquet.write(df, out, wkbHexCol = "wkb", partitionCols = Seq("grp"),
+      bboxLonLat = Some(("lon_d", "lat_d")))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = parquetFiles(out)
+    assert(files.size > 3, s"expected several files per partition: $files")
+    val BboxRe = "\"bbox\":\\[([^\\]]*)\\]".r
+    var withBbox, withoutBbox = 0
+    for (f <- files) {
+      val meta = GeoParquet.readFooterValue(conf, f, "geo")
+        .getOrElse(fail(s"$f: no geo footer"))
+      assert(!meta.contains("NaN"), meta)
+      // the file alone, recounted outside Spark's min/max
+      val pts = spark.read.parquet(f).select("lon_d", "lat_d").collect()
+        .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+        .map(r => (r.getDouble(0), r.getDouble(1)))
+        .filter { case (x, y) => !x.isNaN && !y.isNaN }
+      if (pts.isEmpty) {
+        withoutBbox += 1
+        assert(!meta.contains("bbox"), s"$f: $meta")
+      } else {
+        withBbox += 1
+        val got = BboxRe.findFirstMatchIn(meta).getOrElse(fail(s"$f: no bbox in $meta"))
+          .group(1).split(',').map(_.toDouble).toSeq
+        assert(got === Seq(pts.map(_._1).min, pts.map(_._2).min,
+          pts.map(_._1).max, pts.map(_._2).max), f)
+      }
+    }
+    assert(withBbox > 0 && withoutBbox > 0, s"$withBbox with bbox, $withoutBbox without")
+  }
+
+  test("geoparquet write runs no job beyond the plain partitioned parquet write") {
+    val df = operators.Geometry.geoWkb(spark, sfDir)
+      .withColumn("status", when(col("event_id") % 2 === 0, "latest").otherwise("history"))
+      .localCheckpoint(true)
+    val plainOut = java.nio.file.Files.createTempDirectory("graft-geopq-plain").toString
+    val geoOut = java.nio.file.Files.createTempDirectory("graft-geopq-jobs").toString
+    val plain = jobsDuring {
+      df.write.mode("overwrite").partitionBy("status").parquet(plainOut)
+    }
+    val geo = jobsDuring {
+      GeoParquet.write(df, geoOut, wkbHexCol = "wkb", partitionCols = Seq("status"),
+        bboxLonLat = Some(("lon_d", "lat_d")))
+    }
+    assert(plain > 0)
+    assert(geo === plain, s"GeoParquet.write ran $geo jobs, the plain write $plain")
+    assert(parquetFiles(geoOut).forall(f =>
+      GeoParquet.readFooterValue(spark.sparkContext.hadoopConfiguration, f, "geo").nonEmpty))
   }
 
   test("withMemberGeometries: relation members resolve as-of with m_id/role/wkb") {

@@ -66,4 +66,29 @@ class MmrParitySpec extends SparkSpec {
     assert(got == expected)
     cands.unpersist(); pairs.unpersist()
   }
+
+  test("mmrSelect orders NaN relevance and NaN sims the same for every candidate order") {
+    // NaN ranks above every number, as in Spark's ORDER BY … DESC and max
+    def sims(ids: Seq[Long], nan: Set[Long]): Map[(Long, Long), Double] =
+      (for (a <- ids; b <- ids if a != b)
+        yield (a, b) -> (if (Set(a, b) == nan) Double.NaN else 0.5)).toMap
+    def picks(rel: Map[Long, Double], sim: Map[(Long, Long), Double]): Seq[Long] = {
+      val ids = rel.keys.toSeq.sorted
+      val orders = Seq(ids, ids.reverse, ids.drop(2) ++ ids.take(2), ids.take(2).reverse ++ ids.drop(2))
+      val all = orders.map(o => Ann.mmrSelect(o.map(n => n -> rel(n)), sim))
+      all.foreach(p => assert(p.map(x => (x._1, x._2)) === all.head.map(x => (x._1, x._2))))
+      assert(all.head.map(_._2) === (1 to all.head.size))
+      all.head.map(_._1)
+    }
+    // a NaN relevance wins round 1
+    val relNan = Map(11L -> 0.9, 12L -> Double.NaN, 13L -> 0.8, 14L -> 0.5,
+      15L -> 0.2, 16L -> 0.1)
+    assert(picks(relNan, sims(relNan.keys.toSeq, Set.empty)) === Seq(12L, 11L, 13L, 14L, 15L))
+    // a NaN sim to the selected 11 makes 14's max-sim, and so its score,
+    // NaN: it wins round 2 over every finite score
+    val rel = Map(11L -> 0.9, 13L -> 0.8, 14L -> 0.5, 16L -> 0.3)
+    assert(picks(rel, sims(rel.keys.toSeq, Set(11L, 14L))) === Seq(11L, 14L, 13L, 16L))
+    // -0.0 and 0.0 tie, so n_id asc picks 15 first
+    assert(picks(Map(15L -> -0.0, 16L -> 0.0), sims(Seq(15L, 16L), Set.empty)) === Seq(15L, 16L))
+  }
 }
