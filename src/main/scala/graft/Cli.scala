@@ -63,8 +63,7 @@ object Cli {
     // console progress bar; silent-between-log-lines runs read as hung)
     val progress =
       if (sys.env.get("SPARK_GRAFT_PROGRESS").contains("0")) None
-      else Some(new Progress())
-    progress.foreach(spark.sparkContext.addSparkListener)
+      else Some(Metrics.attach(spark, Some(s => Console.err.println(s))))
     try cmd match {
       case "contributions" =>
         // partition on contribFull's own status column — it already carries
@@ -279,7 +278,7 @@ object Cli {
         println(s"[graft] store-peek: ${stored.length} stored, " +
           s"${emitted.length} emitted row(s) of $outDir")
       case other => throw new IllegalArgumentException(s"unknown command $other")
-    } finally progress.foreach(spark.sparkContext.removeSparkListener)
+    } finally progress.foreach(_.detach())
     println(s"[graft] $cmd -> $outDir")
     if (!preexisting) spark.stop() // leave embedding callers' session alive
   }

@@ -44,6 +44,12 @@ object IvfIndex {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** The writers' fixed row schemas: no cell or codebook read pays a
+    * schema-inference job.
+    */
+  private val BaseSchema = "cell BIGINT, vec_id BIGINT, embedding ARRAY<FLOAT>, n2 BIGINT"
+  private val DeltaSchema = s"$BaseSchema, _v BIGINT, _del BOOLEAN"
+
   /** Adds the fixed-point squared norm to any (vec_id, embedding) frame. */
   private def withN2(df: DataFrame): DataFrame = {
     graft.functions.GeoFunctions.register(df.sparkSession)
@@ -154,12 +160,12 @@ object IvfIndex {
     val deltaPaths = deltas.toSeq.sortBy(_._1).flatMap { case (c, ds) =>
       ds.sorted.map(d => s"$indexDir/b=$c/d=$d") }
     if (basePaths.isEmpty && deltaPaths.isEmpty) None
-    else if (deltaPaths.isEmpty) Some(spark.read.parquet(basePaths: _*))
+    else if (deltaPaths.isEmpty) Some(spark.read.schema(BaseSchema).parquet(basePaths: _*))
     else {
-      val delta = spark.read.parquet(deltaPaths: _*)
+      val delta = spark.read.schema(DeltaSchema).parquet(deltaPaths: _*)
       val all =
         if (basePaths.isEmpty) delta
-        else spark.read.parquet(basePaths: _*)
+        else spark.read.schema(BaseSchema).parquet(basePaths: _*)
           .withColumn("_v", lit(0L)).withColumn("_del", lit(false))
           .unionByName(delta)
       Some(all
@@ -339,7 +345,7 @@ object IvfIndex {
   def centroids(spark: SparkSession, indexDir: String): Array[(Long, Seq[Float], Long)] = {
     val v = ChangesetStore.currentVersion(spark, indexDir).getOrElse(
       throw new IllegalStateException(s"$indexDir: no committed index version"))
-    spark.read.parquet(s"$indexDir/centroids-v$v")
+    spark.read.schema("cid BIGINT, embedding ARRAY<FLOAT>").parquet(s"$indexDir/centroids-v$v")
       .collect().sortBy(_.getLong(0))
       .map(r => (r.getLong(0), r.getSeq[Float](1), Ann.n2Of(r.getSeq[Float](1))))
   }

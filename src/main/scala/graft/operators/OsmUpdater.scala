@@ -238,15 +238,7 @@ object OsmUpdater {
       .filter(array_contains(col("refs"), col("node_id")))
       .select(col("id"), col("edit_ts")), effectiveW)
 
-    // geometry of every emitted visible way row (major + minor): member
-    // coordinates as of the row's instant, from stored node latest ∪ diff
-    // node versions
     val wayVersions = wayMajors.unionByName(wayMinors, allowMissingColumns = true)
-    val wayRowsForGeom = wayVersions.filter(col("visible"))
-      .select(col("id"), col("version"), col("osm_minor_version"),
-        col("valid_from").as("row_ts"), col("refs"))
-    val wayPts = Contributions.refPositions(wayRowsForGeom, VersionKey, "row_ts", "refs",
-      refNodes(spark, root, wayRowsForGeom.select(explode(col("refs")).as("id")), dn))
 
     // ---------------- relations ----------------
     val dr = diff.filter(col("osm_type") === "relation")
@@ -282,12 +274,37 @@ object OsmUpdater {
         .select(explode(col("parent_ids")).as("id"), col("edit_ts"))),
       effectiveState(relMajors, beforeR))
 
-    // relation geometry: multipolygon assembly for every emitted visible
-    // relation row (see relationGeoms)
     val relVersions = relMajors.unionByName(relMinors, allowMissingColumns = true)
-    val relGeoms = relationGeoms(spark, root, relVersions.filter(col("visible"))
+
+    // ---------------- geometry ----------------
+    // emitted visible way rows (majors and minors) and the member ways of
+    // emitted visible relation rows, as of each row's instant (stored
+    // latest ∪ diff versions, a tie to the higher version), resolve their
+    // node refs against ONE stored-node read ∪ the diff's node rows, DELETE
+    // rows included: a node deleted in this diff wins the as-of rank at
+    // and after its deletion, leaving the ref unresolved instead of
+    // resolving to stale stored coordinates
+    val wayRowsForGeom = wayVersions.filter(col("visible"))
       .select(col("id"), col("version"), col("osm_minor_version"),
-        col("valid_from").as("row_ts"), col("refs"), col("ref_types")), dw, dn)
+        col("valid_from").as("row_ts"), col("refs"))
+    val members = relVersions.filter(col("visible"))
+      .select(col("id"), col("version"), col("osm_minor_version"), col("valid_from").as("row_ts"),
+        explode(array_distinct(transform(
+          filter(arrays_zip(col("refs"), col("ref_types")), m => m("ref_types") === "way"),
+          m => m("refs")))).as("way_id"))
+    def wayCand(df: DataFrame) = df.select(col("id").as("way_id"), col("version").as("w_version"),
+      col("ts_ms").as("w_ts"), col("visible").as("w_vis"), col("refs").as("w_refs"))
+    val memberWays = AsofJoin.asof(members, wayCand(readFor(spark, dir(root, "ways"), waySchema,
+        members.select(col("way_id").as("id")), "id")).unionByName(wayCand(dw)),
+        "way_id", "row_ts", "w_ts", Seq("w_vis", "w_refs"), tieBreak = Seq("w_version"))
+      .filter(col("w_vis"))
+      .localCheckpoint(true)
+    val refIds = wayRowsForGeom.select(explode(col("refs")).as("id"))
+      .unionByName(memberWays.select(explode(col("w_refs")).as("id")))
+    val nodeCands = Contributions.refCandidates(readFor(spark, dir(root, "nodes"), nodeSchema,
+      refIds, "id")).unionByName(Contributions.refCandidates(dn))
+    val wayPts = Contributions.refPositions(wayRowsForGeom, VersionKey, "row_ts", "refs", nodeCands)
+    val relGeoms = relationGeoms(spark, memberWays, nodeCands)
 
     // ---------------- emitted contributions ----------------
     val out =
@@ -403,16 +420,6 @@ object OsmUpdater {
       lon.cast(DoubleType).as("lon"), lat.cast(DoubleType).as("lat"),
       wkb.as("wkb"), lengthMm.cast(LongType).as("length_mm"))
 
-  /** As-of candidates for the node ids in `refIds`: stored rows ∪ the
-    * diff's rows `dn`, DELETE rows included — a node deleted in this diff
-    * must win the as-of rank at and after its deletion, leaving the ref
-    * unresolved instead of resolving to stale stored coordinates.
-    */
-  private def refNodes(spark: SparkSession, root: String, refIds: DataFrame,
-      dn: DataFrame): DataFrame =
-    Contributions.refCandidates(readFor(spark, dir(root, "nodes"), nodeSchema, refIds, "id"))
-      .unionByName(Contributions.refCandidates(dn))
-
   /** The effective state per entity that minor candidacy attaches to:
     * the stored row, overridden by the entity's newest diff major —
     * REGARDLESS of visibility — as a store-row-shaped frame (minor counter
@@ -446,11 +453,11 @@ object OsmUpdater {
 
   /** Multipolygon WKB per emitted relation row — the
     * ContributionUpdater.updateRelation analog
-    * (ContributionUpdater.java:101-121): member ways as-of the row's
-    * instant ([[AsofJoin.asof]] over the stored latest and the same-diff
-    * way versions, a tie to the higher version), their node refs as-of the
-    * same instant ([[Contributions.refPositions]]), then the batch path's
-    * own ring builder, [[RelationGeometry.build]] (its member limit
+    * (ContributionUpdater.java:101-121): the rows' as-of member ways
+    * `memberWays` (row key, `way_id`, `row_ts`, `w_refs`), their node refs
+    * as of the same instant ([[Contributions.refPositions]] over
+    * `nodeCands`), then the batch
+    * path's own ring builder, [[RelationGeometry.build]] (its member limit
     * included; the batch-only area and validity checks of
     * [[RelationGeometry.measure]] are not run), keeping only its `wkb` —
     * so update-path relation geometry is byte-equal to
@@ -459,29 +466,13 @@ object OsmUpdater {
     * A member way with an unresolvable ref (node deleted/unknown as of the
     * row) contributes NO line — its ring stays open, `wkb` still encodes
     * whatever closed rings remain (the batch closed-rings-only rule).
-    * Relations with no way members keep a null wkb. Scale: every frame here
-    * is diff-sized; the store reads are bucket-pruned to member ids.
+    * Relations with no way members keep a null wkb.
     */
-  private def relationGeoms(spark: SparkSession, root: String,
-      relRows: DataFrame, dw: DataFrame, dn: DataFrame): DataFrame = {
+  private def relationGeoms(spark: SparkSession, memberWays: DataFrame,
+      nodeCands: DataFrame): DataFrame = {
     import spark.implicits._
-    // one line per distinct member way of a row
-    val members = relRows
-      .select(col("id"), col("version"), col("osm_minor_version"), col("row_ts"),
-        explode(array_distinct(transform(
-          filter(arrays_zip(col("refs"), col("ref_types")), m => m("ref_types") === "way"),
-          m => m("refs")))).as("way_id"))
-    val wayIds = members.select(col("way_id").as("id"))
-    val storedW = readFor(spark, dir(root, "ways"), waySchema, wayIds, "id")
-    def wayCand(df: DataFrame) = df.select(col("id").as("way_id"), col("version").as("w_version"),
-      col("ts_ms").as("w_ts"), col("visible").as("w_vis"), col("refs").as("w_refs"))
-    val wayAsOf = AsofJoin.asof(members, wayCand(storedW).unionByName(wayCand(dw)),
-        "way_id", "row_ts", "w_ts",
-        Seq("w_vis", "w_refs"), tieBreak = Seq("w_version"))
-      .filter(col("w_vis"))
-      .localCheckpoint(true)
-    val lines = Contributions.refPositions(wayAsOf, VersionKey :+ "way_id", "row_ts", "w_refs",
-        refNodes(spark, root, wayAsOf.select(explode(col("w_refs")).as("id")), dn))
+    val lines = Contributions.refPositions(memberWays, VersionKey :+ "way_id", "row_ts", "w_refs",
+        nodeCands)
       // an incompletely-resolved member way drops whole: a shortened line
       // would stitch a WRONG ring; a missing one leaves the ring open
       .filter(col("n_pts") === col("n_refs"))

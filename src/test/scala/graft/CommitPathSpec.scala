@@ -67,7 +67,14 @@ class CommitPathSpec extends AnyFunSuite {
       """stampFooters\(""".r,
       Set.empty,
       Set("graft/sources/GeoParquet.scala" -> "def stampFooters(spark: org.apache.spark.sql.SparkSession, outDir: String,"),
-      "write the footer through GeoParquet.write instead"))
+      "write the footer through GeoParquet.write instead"),
+    // one metrics path: every job, stage and query counter of a run (the
+    // bench layers, the CLI progress lines) comes from graft.Metrics
+    Rule("Spark listeners are registered only by Metrics",
+      """extends SparkListener\b|addSparkListener\(""".r,
+      Set("graft/Metrics.scala"),
+      Set.empty,
+      "read run metrics through graft.Metrics instead"))
 
   private lazy val files: List[Path] = {
     val s = Files.walk(mainDir)

@@ -171,6 +171,19 @@ class IvfIndexSpec extends SparkSpec {
     assert(rows(IvfIndex.probe(spark, idx, queries)).nonEmpty)
   }
 
+  test("live and codebook reads run no schema-inference job") {
+    val (corpus, _) = corpusAndQueries()
+    val idx = tmp("graft-ivf-schema")
+    IvfIndex.build(spark, corpus.filter(col("vec_id") % 5 =!= 0), fixedCentroids(), idx)
+    IvfIndex.append(spark, corpus.filter(col("vec_id") % 5 === 0), idx)
+    // base + pending deltas, then a compacted base alone
+    assert(jobsDuring(IvfIndex.readLive(spark, idx)) === 0)
+    IvfIndex.compactCells(spark, idx, minDeltas = 1)
+    assert(jobsDuring(IvfIndex.readLive(spark, idx)) === 0)
+    // the codebook read is its one collect
+    assert(jobsDuring(IvfIndex.centroids(spark, idx)) === 1)
+  }
+
   test("trained codebook: kmeansRounds output feeds the build directly") {
     val (corpus, queries) = corpusAndQueries()
     val trained = Ann.kmeansRounds(corpus, fixedCentroids().take(4), rounds = 2)

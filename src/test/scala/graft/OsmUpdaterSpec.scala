@@ -654,10 +654,11 @@ class OsmUpdaterSpec extends SparkSpec {
     val jobs = jobsDuring {
       assert(OsmUpdater.catchUp(spark, replDir.toString, root, maxSteps = 1) === 1L)
     }
-    // a step's cost is mostly per-job driver overhead. Measured: 172 jobs
-    // (306 before store reads and upsert batches were materialized once);
-    // the budget adds ~15 % headroom
-    assert(jobs <= 198, s"one catch-up step ran $jobs Spark jobs")
+    // a step's cost is mostly per-job driver overhead. Measured: 155 jobs
+    // (157 before the way and relation refs shared one stored-node read,
+    // 306 before store reads and upsert batches were materialized once);
+    // the budget adds ~5 % headroom
+    assert(jobs <= 162, s"one catch-up step ran $jobs Spark jobs")
   }
 
   test("a sequence gap stops the catch-up before the gap") {

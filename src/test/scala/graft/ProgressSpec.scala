@@ -1,14 +1,13 @@
 package graft
 
-/** The per-stage progress listener must fire for real jobs and report
-  * non-trivial metrics (Progress.java analog — silent runs read as hung).
+/** The per-stage progress line of [[Metrics]] must fire for real jobs and
+  * report non-trivial metrics (Progress.java analog — silent runs read as hung).
   */
 class ProgressSpec extends SparkSpec {
 
   test("listener reports completed stages with task and record counts") {
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new Progress(lines.add(_))
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = Metrics.attach(spark, Some(lines.add(_)))
     try {
       // a read + aggregate: at least one stage with input records
       spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -17,7 +16,7 @@ class ProgressSpec extends SparkSpec {
       // the listener bus is async — poll briefly for delivery
       val deadline = System.nanoTime() + 10e9.toLong
       while (lines.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally metrics.detach()
     val got = lines.toArray(Array.empty[String])
     assert(got.nonEmpty, "at least one stage line must be reported")
     assert(got.forall(_.startsWith("[progress] stage ")))
